@@ -422,11 +422,14 @@ object Bench {
     // note live in the detail file — every query NAME stays, none
     // dropped); (b) it is printed AFTER spark.stop(), when no executor
     // or listener thread can write stderr anymore; (c) stderr is
-    // flushed first. Result: < 4 KiB, single atomic write, last thing
-    // on stdout.
+    // flushed first. Result: the last thing on stdout. The line is
+    // NOT under PIPE_BUF (4266 B at 226 queries, ~24 B more per query),
+    // so it may be split into several writes; only (b) keeps other
+    // output out of it. Numbers format with Locale.ROOT, so a
+    // comma-decimal default locale cannot break the JSON.
     def ms3(d: Double): String =
       if (d < 0) "-1" else {
-        val s = f"$d%.3f"
+        val s = "%.3f".formatLocal(java.util.Locale.ROOT, d)
         if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse
           .stripSuffix(".") else s
       }

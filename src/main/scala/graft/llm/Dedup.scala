@@ -764,8 +764,8 @@ object Dedup {
         .select(col("l1.doc_id").as("doc_id"),
           col("l2.group_id").as("group_id"))
       val obs = org.apache.spark.sql.Observation()
-      // superseded rounds' checkpoint blocks are GC-released, as in the
-      // resolver BFS — memory doesn't grow with round count
+      // superseded rounds' checkpoint blocks are GC-released, so
+      // memory doesn't grow with round count
       val next = labels.unionByName(viaNeighbors).unionByName(viaPointer)
         .groupBy(col("doc_id"))
         .agg(min(col("group_id")).as("group_id"))

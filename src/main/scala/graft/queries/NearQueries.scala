@@ -484,11 +484,12 @@ object NearQueries {
     * Level-synchronous frontier BFS: each round joins the frontier to
     * the edge relation and anti-joins the already-settled set, so the
     * FIRST arrival is the minimum depth by construction; one
-    * `localCheckpoint` per level bounds the lineage exactly like the
-    * resolver's own loop. Rounds = DAG depth (the TTL window bounds it
-    * in production — a receipt chain cannot outlive its resolver
-    * entry). The DuckDB oracle replays the closure recursively and
-    * takes MIN(depth) per vertex. */
+    * `localCheckpoint` per level bounds the lineage. (The resolver runs
+    * the same kind of frontier fixpoint in one task instead — see
+    * [[graft.state.ReceiptTxResolver.fixpoint]].) Rounds = DAG depth
+    * (the TTL window bounds it in production — a receipt chain cannot
+    * outlive its resolver entry). The DuckDB oracle replays the closure
+    * recursively and takes MIN(depth) per vertex. */
   def nearReceiptDepth(spark: SparkSession, dir: String): DataFrame = {
     // depth over the INDEXED table's rows (outcomes of interest) — the
     // same relation the stored execution_outcomes table and the pinned

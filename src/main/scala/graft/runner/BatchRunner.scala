@@ -205,12 +205,16 @@ object BatchRunner {
       .drop("first_receipt_id", "of_interest")
 
     val ofInt = BronzeExtractors.outcomesOfInterest(outs, accounts)
+    // inserts write with AQE off, where a broadcast of the resolver
+    // output would cost its own collect job ahead of each write
+    val resolvedShuffled = resolved.hint("shuffle_hash")
     val receiptRows = ReceiptTxResolver.attachParentTx(
-      BronzeExtractors.receiptRows(ofInt), resolved, ttlBlocks)
+      BronzeExtractors.receiptRows(ofInt), resolvedShuffled, ttlBlocks)
     ParquetSink.writeBatch(receiptRows, s"$warehouse/receipts", toHeight,
       Seq("receipt_id"))
     val outcomeRows = ReceiptTxResolver.attachParentTx(
-      BronzeExtractors.executionOutcomeRows(ofInt), resolved, ttlBlocks)
+      BronzeExtractors.executionOutcomeRows(ofInt), resolvedShuffled,
+      ttlBlocks)
     ParquetSink.writeBatch(outcomeRows, s"$warehouse/execution_outcomes",
       toHeight, Seq("execution_outcome_id"))
 

@@ -84,16 +84,14 @@ object StreamRunner {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // one materialized read of the micro-batch; the fold's branches
         // (txs, outcomes, max-height) all reuse it. LAZY checkpoint +
-        // min/max collect (r17, guide §1/§2: the per-batch driver
-        // constant IS the cascade's residual cost — ~16 jobs/batch at
-        // ~50 ms each): the height aggregate is the first action on the
-        // checkpoint-marked plan, so ONE job materializes the
-        // checkpoint, answers the emptiness probe (null min ⇔ no rows)
-        // AND computes the span heights — where eager-checkpoint +
-        // isEmpty + agg paid three. Same fusion the resolver BFS probe
-        // already uses. The agg is strictly sequenced before every
-        // concurrent consumer below, so they all read the materialized
-        // blocks.
+        // min/max collect (the per-batch driver constant IS the
+        // cascade's residual cost — ~18 jobs/batch at ~50 ms each): the
+        // height aggregate is the first action on the checkpoint-marked
+        // plan, so ONE job materializes the checkpoint, answers the
+        // emptiness probe (null min ⇔ no rows) AND computes the span
+        // heights — where eager-checkpoint + isEmpty + agg paid three.
+        // The agg is strictly sequenced before every concurrent
+        // consumer below, so they all read the materialized blocks.
         val blocks = batch.localCheckpoint(eager = false)
         val hAgg = blocks.agg(min(col("header.height")),
           max(col("header.height"))).collect()(0)
@@ -118,6 +116,9 @@ object StreamRunner {
                 maxHeightHint = Some(maxH))
             }
           val events = span("parse_events") { events0.localCheckpoint() }
+          // inserts write with AQE off, where a broadcast of the lookup
+          // would cost its own collect job ahead of each write
+          val lookupShuffled = lookup.hint("shuffle_hash")
 
           // full product-table parity with BatchRunner: the CH-MV
           // cascade fires on this micro-batch's rows only
@@ -149,7 +150,8 @@ object StreamRunner {
                 "insert_receipts_to_db") {
                 ParquetSink.writeBatch(
                   ReceiptTxResolver.attachParentTx(
-                    BronzeExtractors.receiptRows(ofInt), lookup, ttlBlocks),
+                    BronzeExtractors.receiptRows(ofInt), lookupShuffled,
+                    ttlBlocks),
                   s"$warehouse/receipts", maxH, Seq("receipt_id"))
               })
               failpoint(maxH, 1)
@@ -157,7 +159,8 @@ object StreamRunner {
                 "insert_execution_outcomes_to_db") {
                 ParquetSink.writeBatch(
                   ReceiptTxResolver.attachParentTx(
-                    BronzeExtractors.executionOutcomeRows(ofInt), lookup,
+                    BronzeExtractors.executionOutcomeRows(ofInt),
+                    lookupShuffled,
                     ttlBlocks),
                   s"$warehouse/execution_outcomes", maxH,
                   Seq("execution_outcome_id"))

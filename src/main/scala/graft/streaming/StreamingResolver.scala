@@ -4,33 +4,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.bronze.BronzeExtractors
 import graft.model.{AccountsConfig, NearModel}
+import graft.state.ReceiptTxResolver
 
-/** Streaming twin of [[graft.state.ReceiptTxResolver]] — the
-  * incremental, block-at-a-time semantics of the reference's Redis
-  * cache (indexer-common/src/cache/redis.rs:5-202), expressed as a
+/** Streaming fold of the receipt → tx resolver — the incremental,
+  * block-at-a-time semantics of the reference's Redis cache
+  * (indexer-common/src/cache/redis.rs:5-202), expressed as a
   * micro-batch fold:
   *
-  *   state ⊕ block = state′ (seed + propagate + TTL-expire), events(block)
+  *   state ⊕ batch = state′ (seed + propagate + TTL-expire), events(batch)
   *
-  * Each micro-batch sees ONLY its own block's rows (the CH-MV
+  * Each micro-batch sees ONLY its own blocks' rows (the CH-MV
   * visibility contract, SURVEY §7.4 hazard 3) plus the carried state
   * table (receipt_id, tx_hash, main, entry_height):
   *
-  *  1. seeds: the block's transactions map their first receipt_id to
+  *  1. seeds: the batch's transactions map their first receipt_id to
   *     their own hash (T2; main tier iff accounts-of-interest),
-  *  2. propagation to fixpoint within the block: outcomes whose receipt
+  *  2. propagation to fixpoint within the batch: outcomes whose receipt
   *     is in state′ map all spawned receipt_ids to the same tx, stamped
-  *     at this block's height (T3 — the Redis refresh-on-hop),
+  *     at the hop's height (T3 — the Redis refresh-on-hop),
   *  3. TTL: entries older than `ttlBlocks` are dropped (the Redis
   *     `SET ... EX` expiry, 900 s ≈ 50 blocks),
-  *  4. the block's events resolve against state′; unresolved → dropped
+  *  4. the batch's events resolve against state′; unresolved → dropped
   *     (T5 warn-and-drop policy).
   *
-  * The state table is the co-located Spark-native replacement for the
-  * reference's per-lookup Redis network hop: at scale it is a DataFrame
-  * partitioned on receipt_id, checkpointed per batch, and bounded by
-  * the TTL (old entries retire every batch), so it stays O(receipts in
-  * the last 50 blocks) regardless of stream length.
+  * Steps 1–2 are the batch resolver's core,
+  * [[graft.state.ReceiptTxResolver.fixpoint]], run over carry ∪ seeds
+  * with no hop bound: one Spark job per micro-batch whatever the chain
+  * depth, in one task holding O(carried TTL window + the batch's
+  * edges). The state table is the co-located Spark-native replacement
+  * for the reference's per-lookup Redis network hop: checkpointed per
+  * batch and bounded by the TTL (old entries retire every batch), so it
+  * stays O(receipts in the last 50 blocks) regardless of stream length.
   */
 object StreamingResolver {
 
@@ -65,8 +69,9 @@ object StreamingResolver {
     * higher) but wrong for lookups inside a multi-block batch: an
     * early block's receipt would miss entries the trim already
     * expired at the batch's max height. Single-block batches can't
-    * tell the difference — per-row TTL at the one height ≡ the trim. */
-  /** @param maxHeightHint the batch's max block height when the caller
+    * tell the difference — per-row TTL at the one height ≡ the trim.
+    *
+    * @param maxHeightHint the batch's max block height when the caller
     *        already computed it (the runner aggregates min/max for its
     *        own spans) — saves one aggregation job per micro-batch;
     *        None falls back to computing it here. */
@@ -80,98 +85,29 @@ object StreamingResolver {
     val txs = BronzeExtractors.transactions(batchBlocks, accounts)
     val outs = BronzeExtractors.outcomes(batchBlocks)
 
-    val seeds = txs
-      .filter(col("first_receipt_id").isNotNull)
-      .select(
-        col("first_receipt_id").as("receipt_id"),
-        col("transaction_hash").as("tx_hash"),
-        col("of_interest").as("main"),
-        col("block_height").as("entry_height"))
-
-    // hop_main models T4 promotion (see ReceiptTxResolver.resolve).
-    // Persisted for the BFS loop below (the batch resolver persists its
-    // edges the same way) — each hop re-reads this relation, and
-    // without the cache every iteration re-runs the shard explode over
-    // the checkpointed blocks; released before returning.
-    val edges = outs.select(
-      col("receipt_id").as("parent_receipt_id"),
-      explode(col("receipt_ids")).as("child_receipt_id"),
-      col("block_height").as("hop_height"),
-      (col("receiver_id").isin(accounts.all: _*) ||
-        col("predecessor_id").isin(accounts.all: _*)).as("hop_main"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // first write wins: existing state beats this block's seeds. The
-    // min_by key includes NOT main so (height, tx) ties deterministically
-    // keep the MAIN-tier entry — same ordering as the batch resolver's
-    // firstWrite (entry_height, tx_hash, main desc).
-    def firstWrite(df: DataFrame): DataFrame = df
-      .groupBy(col("receipt_id"))
-      .agg(min_by(struct(col("tx_hash"), col("main"), col("entry_height")),
-        struct(col("entry_height"), col("tx_hash"), not(col("main")))).as("v"))
-      .select(col("receipt_id"), col("v.tx_hash"), col("v.main"),
-        col("v.entry_height"))
-
-    var st = firstWrite(state.unionByName(seeds))
-
-    // propagate to fixpoint within the block (local receipts can be
-    // seeded and executed in the same block). FRONTIER BFS (r15, from
-    // the span-trace attribution: this loop was 36% of cascade wall,
-    // ~19 Spark jobs per micro-batch): each iteration joins the edges
-    // against only the LAST round's new entries, not the whole
-    // accumulated state — a child's first emission can only come
-    // through a parent resolved in the previous round (a parent
-    // resolved earlier would have emitted it earlier, and the anti-join
-    // against the full done-set keeps re-emissions out), so the
-    // candidate set at first emission is identical and firstWrite picks
-    // the same winner. The first round's frontier is the FULL carried
-    // state ∪ seeds (parents resolved in prior batches count).
-    var frontier = st
-    var grew = true
-    while (grew) {
-      val next = edges
-        .join(frontier, edges("parent_receipt_id") === frontier("receipt_id"))
-        .filter(col("hop_height") >= col("entry_height") &&
-          col("hop_height") - col("entry_height") <= ttlBlocks)
-        .select(
-          col("child_receipt_id").as("receipt_id"),
-          col("tx_hash"), (col("main") || col("hop_main")).as("main"),
-          col("hop_height").as("entry_height"))
-        .join(st.select(col("receipt_id").as("done_id")),
-          col("receipt_id") === col("done_id"), "left_anti")
-      // LAZY checkpoint + count (VERDICT r15 #4): the count's job is
-      // the first action on the checkpoint-marked plan, so it both
-      // materializes the checkpoint AND answers the emptiness probe —
-      // one Spark job per hop where eager-checkpoint-then-isEmpty paid
-      // two. At local-mode job overhead (~49 ms/job, 46% of cascade
-      // wall) that is the probe's entire cost.
-      val nextDeduped = firstWrite(next).localCheckpoint(eager = false)
-      if (nextDeduped.count() == 0L) grew = false
-      else {
-        st = st.unionByName(nextDeduped)
-        frontier = nextDeduped
-      }
-    }
-
-    // lookup state: untrimmed — each row applies its own TTL below
-    val lookup = st.localCheckpoint()
-    edges.unpersist()
+    // lookup state: untrimmed — each row applies its own TTL below.
+    // Carried entries precede this batch's seeds in first-write order
+    // (lower heights), so existing state wins, and the first round's
+    // frontier is the FULL carry ∪ seeds (parents resolved in prior
+    // batches count).
+    val lookup = ReceiptTxResolver.fixpoint(
+      state.select(stateCols.map(col): _*)
+        .unionByName(ReceiptTxResolver.seeds(txs)),
+      ReceiptTxResolver.edges(outs, accounts), ttlBlocks, Int.MaxValue)
+      .select(stateCols.map(col): _*)
 
     // carry state: TTL expiry relative to the newest height in this
     // batch (a conservative superset of what any FUTURE row can see).
-    // NOT checkpointed (r17): it is a one-level narrow filter over the
-    // just-checkpointed `lookup`, so materializing it separately paid
-    // one whole Spark job per micro-batch for zero lineage truncation —
-    // every consumer (the state-table write, the next batch's
-    // firstWrite) recomputes only the filter on top of lookup's
-    // checkpoint blocks.
+    // NOT checkpointed: it is a one-level narrow filter over the
+    // checkpointed fixpoint, so every consumer (the state-table write,
+    // the next batch's fixpoint) recomputes only the filter on top of
+    // its checkpoint blocks.
     //
-    // CROSS-BATCH LIVENESS (ADVICE r17): because carry is lazy over
-    // THIS batch's `lookup`, the caller's state var (StreamRunner's
-    // `state = st2`) keeps referencing these checkpoint blocks into the
-    // NEXT micro-batch, until that batch's own lookup checkpoint lands.
-    // Nothing may unpersist `lookup` while carry is live — do not "fix"
-    // an apparent leak by unpersisting it at the end of processBatch.
+    // CROSS-BATCH LIVENESS: because carry is lazy over THIS batch's
+    // `lookup`, the caller's state var (StreamRunner's `state = st2`)
+    // keeps referencing these checkpoint blocks into the NEXT
+    // micro-batch, until that batch's own fixpoint lands. Nothing may
+    // unpersist `lookup` while carry is live.
     val maxHeight = maxHeightHint.getOrElse(batchBlocks
       .agg(max(col("header.height"))).collect()(0).getLong(0))
     val carry = lookup
@@ -179,7 +115,7 @@ object StreamingResolver {
 
     // per-row TTL + warn-and-drop, the same shared path the batch
     // resolver uses (T5)
-    val events = graft.state.ReceiptTxResolver.attachTxHash(
+    val events = ReceiptTxResolver.attachTxHash(
       BronzeExtractors.eventRows(outs, accounts), lookup,
       ttlBlocks = ttlBlocks)
 

@@ -4,11 +4,12 @@ import org.apache.spark.sql.SparkSession
 import graft.model._
 
 /** Deep receipt-chain stress for the streaming resolver at
-  * production state width (VERDICT r16 #4): every prior fixture's
-  * chains are shallow (≤5 hops) and its state tiny (tens of rows) —
-  * the TTL bound (`StreamingResolver.processBatchFull`) and the
-  * frontier BFS are structurally right but were never measured with
-  * state ~one TTL window wide. Reference semantics under test:
+  * production state width: the other fixtures' chains are shallow
+  * (≤5 hops) and their state tiny (tens of rows). This one drives the
+  * TTL bound (`StreamingResolver.processBatchFull`) and the one-task
+  * resolver core (`ReceiptTxResolver.fixpoint`, which holds the carried
+  * TTL window plus the batch's edges in one task) with state ~one TTL
+  * window wide. Reference semantics under test:
   * Redis `SET ... EX` expiry with refresh-on-hop under sustained load
   * (`/root/reference/indexer-common/src/cache/redis.rs:5-143`).
   *

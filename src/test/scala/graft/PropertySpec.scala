@@ -823,4 +823,245 @@ class PropertySpec extends AnyFunSuite {
         s"dup=${cents.length > kCells})")
     }
   }
+
+  // ------------------------------------------------ resolver core
+
+  private type ResEntry = (String, String, Boolean, Long)  // id, tx, main, h
+  private type ResEdge = (String, String, Long, Boolean)   // parent, child, h, hopMain
+
+  /** Plain-Scala receipt → tx closure, the spec every resolver entry
+    * point must equal: round 0 first-writes the entries; each round
+    * extends the LAST round's new receipts along edges whose hop lies
+    * within `ttl` of the parent's write, skipping resolved receipts.
+    * First write = least (height, tx, main first, not promoted). */
+  private def closureModel(entries: Seq[ResEntry], edges: Seq[ResEdge],
+      ttl: Long, maxHops: Int): Map[String, (String, Boolean, Long, Boolean)] = {
+    def first(cs: Seq[(String, Boolean, Long, Boolean)]) =
+      cs.minBy(c => (c._3, c._1, !c._2, c._4))
+    var done = entries.groupBy(_._1).map { case (id, es) =>
+      id -> first(es.map(e => (e._2, e._3, e._4, false)))
+    }
+    var frontier = done
+    var round = 0
+    while (frontier.nonEmpty && round < maxHops) {
+      frontier = (for {
+        (p, c, h, hopMain) <- edges
+        (tx, main, eh, _) <- frontier.get(p).toSeq
+        if h >= eh && h - eh <= ttl && !done.contains(c)
+      } yield c -> (tx, main || hopMain, h, hopMain && !main))
+        .groupBy(_._1).map { case (c, cs) => c -> first(cs.map(_._2)) }
+      done ++= frontier
+      round += 1
+    }
+    done
+  }
+
+  /** A seeded random receipt forest: chains of depth 1–7 with hop gaps
+    * drawn from {0, 1, 49, 50, 51} around the 50-block TTL, branching,
+    * duplicate seeds (a second tx seeding the same receipt at the same
+    * height, so (height) ties fall to tx order), duplicate outcomes of
+    * one receipt at one height with the other hop tier (so (height, tx)
+    * ties fall to main first), mixed main/potential tiers, orphans.
+    * Every receipt has one parent, so no fold boundary can change which
+    * candidates compete for it. */
+  private final case class Forest(blocks: Seq[graft.model.Block],
+      seeds: Seq[ResEntry], edges: Seq[ResEdge],
+      events: Seq[(String, Long)]) // (receipt_id, height) per event row
+
+  private def genForest(seed: Int): Forest = {
+    import graft.model._
+    val rnd = new scala.util.Random(seed)
+    val gaps = Array(0L, 1L, 49L, 50L, 51L)
+    val eventLog = NearModel.EventJsonPrefix +
+      """{"standard":"nep245","version":"1.0.0","event":"mt_mint",""" +
+      """"data":[{"owner_id":"x.near","token_ids":["nep141:t.near"],""" +
+      """"amounts":["1"]}]}"""
+    val txsAt = scala.collection.mutable.Map
+      .empty[Long, Vector[TxWithOutcome]].withDefaultValue(Vector.empty)
+    val outsAt = scala.collection.mutable.Map
+      .empty[Long, Vector[OutcomeWithReceipt]].withDefaultValue(Vector.empty)
+    val seeds = Seq.newBuilder[ResEntry]
+    val edges = Seq.newBuilder[ResEdge]
+    val events = Seq.newBuilder[(String, Long)]
+    def party(main: Boolean) =
+      if (main) "intents.near" else s"u${rnd.nextInt(3)}.near"
+    def tx(hash: String, rid: String, h: Long, main: Boolean): Unit = {
+      txsAt(h) :+= TxWithOutcome(
+        TransactionView(hash, s"s${rnd.nextInt(3)}.near", party(main), Nil),
+        s"oc-$hash", OutcomeView(party(main), Seq(rid), "SuccessReceiptId",
+          Nil, "0", 1L))
+      seeds += ((rid, hash, main, h))
+    }
+    def outcome(rid: String, children: Seq[String], h: Long,
+        hopMain: Boolean, oid: String): Unit = {
+      val logs = if (rnd.nextInt(3) == 0) Seq(eventLog) else Nil
+      outsAt(h) :+= OutcomeWithReceipt(
+        ReceiptView(rid, party(hopMain), s"p${rnd.nextInt(3)}.near",
+          "Action", Nil, None),
+        oid, OutcomeView("intents.near", children, "SuccessValue", logs,
+          "0", 1L))
+      children.foreach(c => edges += ((rid, c, h, hopMain)))
+      logs.foreach(_ => events += ((rid, h)))
+    }
+    (0 until 6 + rnd.nextInt(5)).foreach { c =>
+      val h0 = 1000L + rnd.nextInt(30)
+      // random hash prefixes, so tx order is not chain order
+      tx(s"t${rnd.nextInt(900) + 100}c$c", s"c${c}r0", h0, rnd.nextBoolean())
+      if (rnd.nextInt(3) == 0)
+        tx(s"t${rnd.nextInt(900) + 100}d$c", s"c${c}r0", h0, rnd.nextBoolean())
+      val depth = 1 + rnd.nextInt(7)
+      var level = Seq(s"c${c}r0" -> h0)
+      var n = 0
+      (1 to depth).foreach { d =>
+        level = level.flatMap { case (rid, h) =>
+          val hop = h + gaps(rnd.nextInt(gaps.length))
+          val kids = (0 to (if (rnd.nextInt(4) == 0) 1 else 0)).map { _ =>
+            n += 1; s"c${c}r$n"
+          }
+          val hopMain = rnd.nextBoolean()
+          outcome(rid, kids, hop, hopMain, s"o-$rid")
+          if (rnd.nextInt(4) == 0) outcome(rid, kids, hop, !hopMain, s"o2-$rid")
+          kids.map(_ -> hop)
+        }
+      }
+    }
+    (0 until rnd.nextInt(3)).foreach { o =>
+      outcome(s"orphan$o", Seq(s"orphan${o}kid"), 1000L + rnd.nextInt(30),
+        rnd.nextBoolean(), s"o-orphan$o")
+    }
+    val heights = (txsAt.keySet ++ outsAt.keySet).toSeq.sorted
+    val blocks = heights.map { h =>
+      Block(BlockHeader(h, h * 1000000000L, s"B$h"),
+        Seq(Shard(if (txsAt(h).isEmpty) None else Some(Chunk(txsAt(h))),
+          outsAt(h))))
+    }
+    Forest(blocks, seeds.result(), edges.result(), events.result())
+  }
+
+  test("resolver core, batch resolve and the streaming fold over 1-, 3- " +
+    "and 10-block micro-batches all equal a plain-Scala closure") {
+    import graft.bronze.BronzeExtractors
+    import graft.state.ReceiptTxResolver
+    import graft.streaming.StreamingResolver
+    import spark.implicits._
+    val acc = graft.fixtures.NearFixtures.accounts
+    val ttl = graft.model.NearModel.TtlBlocks
+    def rows(df: org.apache.spark.sql.DataFrame): Set[ResEntry] =
+      df.select("receipt_id", "tx_hash", "main", "entry_height").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getBoolean(2),
+          r.getLong(3))).toSet
+    def eventRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String)] =
+      df.select("related_receipt_id", "block_height", "tx_hash").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq.sorted
+
+    (1 to 3).foreach { seed =>
+      val f = genForest(seed)
+      val want = closureModel(f.seeds, f.edges, ttl, Int.MaxValue)
+      val wantRows = want.map { case (id, (tx, m, h, _)) => (id, tx, m, h) }.toSet
+      val wantEvents = f.events.flatMap { case (rid, h) =>
+        want.get(rid).collect {
+          case (tx, _, eh, _) if h >= eh && h - eh <= ttl => (rid, h, tx)
+        }
+      }.sorted
+      assert(wantRows.map(_._1).size > f.seeds.map(_._1).distinct.size,
+        s"seed $seed: forest resolves no hop")
+
+      // the core, with (height, tx)-tied seeds of both tiers added, and
+      // with a hop bound
+      val tied = f.seeds.take(2).map { case (id, tx, m, h) => (id, tx, !m, h) }
+      val entriesDf = (f.seeds ++ tied)
+        .toDF("receipt_id", "tx_hash", "main", "entry_height")
+      val edgesDf = f.edges
+        .toDF("parent_receipt_id", "child_receipt_id", "hop_height", "hop_main")
+      Seq(Int.MaxValue, 2).foreach { hops =>
+        val core = ReceiptTxResolver.fixpoint(entriesDf, edgesDf, ttl, hops)
+          .collect().map(r => r.getString(0) ->
+            (r.getString(1), r.getBoolean(2), r.getLong(3), r.getBoolean(4)))
+        assert(core.length === core.map(_._1).distinct.length)
+        assert(core.toMap === closureModel(f.seeds ++ tied, f.edges, ttl, hops),
+          s"seed $seed: core (maxHops $hops)")
+      }
+
+      val df = spark.createDataset(f.blocks).toDF()
+      val outs = BronzeExtractors.outcomes(df)
+      val resolved = ReceiptTxResolver.resolve(
+        BronzeExtractors.transactions(df, acc), outs, ttl, accounts = acc)
+      assert(rows(resolved) === wantRows, s"seed $seed: resolve")
+      assert(eventRows(ReceiptTxResolver.attachTxHash(
+        BronzeExtractors.eventRows(outs, acc), resolved,
+        ttlBlocks = ttl)) === wantEvents, s"seed $seed: resolve events")
+
+      Seq(1, 3, 10).foreach { size =>
+        var state = StreamingResolver.emptyState(spark)
+        var seen = Set.empty[ResEntry]
+        var events = Seq.empty[(String, Long, String)]
+        f.blocks.grouped(size).foreach { bs =>
+          val (carry, lookup, ev) = StreamingResolver.processBatchFull(
+            state, spark.createDataset(bs).toDF(), acc, ttl,
+            maxHeightHint = Some(bs.map(_.header.height).max))
+          seen ++= rows(lookup)
+          events ++= eventRows(ev)
+          state = carry
+        }
+        assert(seen.size === seen.map(_._1).size,
+          s"seed $seed: a receipt resolved twice in $size-block batches")
+        assert(seen === wantRows, s"seed $seed: $size-block fold")
+        assert(events.sorted === wantEvents, s"seed $seed: $size-block events")
+      }
+    }
+  }
+
+  test("the resolver runs the same job count (<= 1) on a depth-1 and a " +
+    "depth-8 chain, in the streaming fold and in batch resolve") {
+    import graft.bronze.BronzeExtractors
+    import graft.model._
+    import graft.state.ReceiptTxResolver
+    import graft.streaming.StreamingResolver
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val acc = graft.fixtures.NearFixtures.accounts
+    def chain(depth: Int): Seq[Block] = {
+      def rid(d: Int) = s"j${depth}r$d"
+      Block(BlockHeader(100L, 0L, "B100"), Seq(Shard(Some(Chunk(Seq(
+        TxWithOutcome(TransactionView(s"j${depth}tx", "a.near",
+          "intents.near", Nil), "oc", OutcomeView("intents.near",
+          Seq(rid(0)), "SuccessReceiptId", Nil, "0", 1L))))), Nil))) +:
+        (1 to depth).map { d =>
+          Block(BlockHeader(100L + d, 0L, s"B${100 + d}"), Seq(Shard(None,
+            Seq(OutcomeWithReceipt(ReceiptView(rid(d - 1), "intents.near",
+              "a.near", "Action", Nil, None), s"o$d",
+              OutcomeView("intents.near", Seq(rid(d)), "SuccessValue", Nil,
+                "0", 1L))))))
+        }
+    }
+    val sc = spark.sparkContext
+    def jobsDuring[A](body: => A): (Int, A) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      sc.addSparkListener(counter)
+      try {
+        val a = body
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        (n.get, a)
+      } finally sc.removeSparkListener(counter)
+    }
+    val counts = Seq(1, 8).map { depth =>
+      val df = spark.createDataset(chain(depth)).toDF()
+      val (fold, (_, lookup, _)) = jobsDuring(StreamingResolver.processBatchFull(
+        StreamingResolver.emptyState(spark), df, acc,
+        maxHeightHint = Some(100L + depth)))
+      val (batch, resolved) = jobsDuring(ReceiptTxResolver.resolve(
+        BronzeExtractors.transactions(df, acc),
+        BronzeExtractors.outcomes(df), accounts = acc))
+      // the counted jobs did the whole closure
+      assert(lookup.count() === depth + 1 && resolved.count() === depth + 1)
+      (fold, batch)
+    }
+    assert(counts(0) === counts(1), "job count depends on chain depth")
+    assert(counts(0)._1 <= 1 && counts(0)._2 <= 1, counts)
+  }
 }
