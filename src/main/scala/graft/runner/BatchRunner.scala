@@ -3,35 +3,37 @@ package graft.runner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.bronze.BronzeExtractors
+import graft.metrics.Tracing
+import graft.metrics.Tracing.span
 import graft.model.{AccountsConfig, NearModel}
 import graft.silver.SilverTransforms
 import graft.sink.ParquetSink
 import graft.sources.BlockFileSource
 import graft.state.ReceiptTxResolver
+import graft.streaming.StreamingResolver
 
 /** The product path end-to-end (reference:
   * indexer-clickhouse/src/main.rs + handlers/mod.rs:66-139): resume
-  * from the sink, read new blocks, extract bronze, resolve receipts
-  * against a PERSISTED state window, write the four bronze tables and
-  * the silver tables.
+  * from the sink, read every new block, and fold them through
+  * [[ingestBatch]] — the one per-batch body, which the streaming runner
+  * ([[graft.streaming.StreamRunner]]) also calls once per micro-batch.
+  * A batch run is one micro-batch over all unseen blocks.
   *
-  * Resolution state across runs: instead of the reference's external
-  * Redis, the resolver's inputs (tx seeds, outcome edges) are
-  * themselves warehouse tables; a restart replays only the last
-  * `ttlBlocks` of them — exactly the reference's "warm the cache ~20
-  * blocks before the range" procedure, made deterministic. State reads
-  * prune height-bucket PARTITIONS (readFinalSince) and each run drops
-  * the buckets its TTL can never read again, so both the replayed
-  * slice and the stored state stay O(TTL window) regardless of chain
+  * Resolution state across runs is one warehouse table,
+  * `resolver_state` (receipt_id, tx_hash, main, entry_height), the
+  * Spark-native stand-in for the reference's Redis TTL cache. Both
+  * runners load it with [[loadState]]; each batch appends its own
+  * entries and drops the height buckets no later batch can read, so
+  * the table stays O(TTL window + the last batch) whatever the chain
   * length.
   */
 object BatchRunner {
 
   final case class RunSummary(fromHeight: Option[Long], toHeight: Long,
-      nBlocks: Long, nEvents: Long, nTransactions: Long, nReceipts: Long,
-      nOutcomes: Long)
+      nBlocks: Long)
 
   private val eventsPk = Seq("related_receipt_id", "index_in_log")
+  private val statePk = Seq("receipt_id")
 
   /** Write-side CLUSTERING keys for the silver MV tables (row-group
     * locality, the prefix of the reference's ORDER BY). Dedup is NOT by
@@ -85,170 +87,194 @@ object BatchRunner {
   def writeSilverCascade(events: DataFrame, accounts: AccountsConfig,
       warehouse: String, seq: Long): Unit = {
     val nep245 = SilverTransforms.nep245Events(events)
-    // The 8 cascade writes have NO inter-table ordering constraint
-    // (the runner-level contract orders only resolver STATE after the
-    // event-derived tables and transactions last): each is an
-    // idempotent PK-FINAL insert, and a crash leaving any SUBSET
-    // written replays the batch into the same keys. So submit them
-    // CONCURRENTLY — the reference's own sinks write async under
-    // tokio, and on a small micro-batch the serialized form pays 8×
-    // Spark job latency for work the scheduler could overlap (cascade
-    // ingest measured 16.7 → ~25 blocks/s from this overlap alone).
-    // Every job still runs on the session's shared scheduler; per-write
-    // failures surface via Await (first failure fails the batch before
-    // the checkpoint commits, exactly as the serial form did).
+    def write(name: String, keys: Seq[String], df: => DataFrame) =
+      s"insert_${name}_to_db" ->
+        (() => ParquetSink.writeBatch(df, s"$warehouse/$name", seq, keys))
+    // the 8 cascade writes have no inter-table ordering constraint, so
+    // they run concurrently (cascade ingest measured 16.7 → ~25 blocks/s
+    // from this overlap alone)
+    concurrently(Seq(
+      // incremental gold rollup at the replay-atomic (block, token)
+      // grain — resume-overlap replays rewrite identical rows and
+      // keyed FINAL absorbs them (see GoldViews.blockTransferRollup)
+      write("gold_block_rollup", Seq("block_height", "token_id"),
+        graft.gold.GoldViews.blockTransferRollup(nep245)),
+      write("silver_nep245", silverClusterKeys, nep245),
+      write("silver_token_diff", silverClusterKeys,
+        SilverTransforms.dip4TokenDiff(events, accounts)),
+      write("silver_public_keys", silverClusterKeys,
+        SilverTransforms.dip4PublicKeys(events, accounts)),
+      write("silver_intents_executed", silverClusterKeys,
+        SilverTransforms.dip4IntentsExecuted(events, accounts)),
+      write("silver_fee_changed", silverClusterKeys,
+        SilverTransforms.dip4FeeChanged(events, accounts)),
+      write("silver_transfer", silverClusterKeys,
+        SilverTransforms.dip4Transfer(events, accounts)),
+      write("silver_staging_transfer", silverClusterKeys,
+        SilverTransforms.stagingDip4Transfer(events, accounts))))
+  }
+
+  /** Submit `writes` as concurrent Spark jobs, each under its named
+    * span; `before(i)` runs ahead of launching write i (the failpoint
+    * seam). Every write is an idempotent PK-FINAL insert, and a crash
+    * leaving any subset written replays the batch into the same keys —
+    * the reference's own sinks write async under tokio. A throw from
+    * `before` stops launching; the first failure is rethrown only after
+    * every launched write has terminated, so none keeps running as a
+    * zombie past the batch's failure boundary, racing the replay. */
+  private def concurrently(writes: Seq[(String, () => Unit)],
+      before: Int => Unit = _ => ()): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq[(String, Seq[String], () => DataFrame)](
-      ("gold_block_rollup", Seq("block_height", "token_id"),
-        // incremental gold rollup at the replay-atomic (block, token)
-        // grain — resume-overlap replays rewrite identical rows and
-        // keyed FINAL absorbs them (see GoldViews.blockTransferRollup)
-        () => graft.gold.GoldViews.blockTransferRollup(nep245)),
-      ("silver_nep245", silverClusterKeys, () => nep245),
-      ("silver_token_diff", silverClusterKeys,
-        () => SilverTransforms.dip4TokenDiff(events, accounts)),
-      ("silver_public_keys", silverClusterKeys,
-        () => SilverTransforms.dip4PublicKeys(events, accounts)),
-      ("silver_intents_executed", silverClusterKeys,
-        () => SilverTransforms.dip4IntentsExecuted(events, accounts)),
-      ("silver_fee_changed", silverClusterKeys,
-        () => SilverTransforms.dip4FeeChanged(events, accounts)),
-      ("silver_transfer", silverClusterKeys,
-        () => SilverTransforms.dip4Transfer(events, accounts)),
-      ("silver_staging_transfer", silverClusterKeys,
-        () => SilverTransforms.stagingDip4Transfer(events, accounts)))
     // span parent captured HERE: the Futures run on pool threads that
     // inherit neither the trace stack nor Spark's local properties
-    val ctx = graft.metrics.Tracing.context()
-    val running = writes.map { case (name, keys, df) =>
-      Future(graft.metrics.Tracing.spanIn(ctx, s"insert_${name}_to_db") {
-        ParquetSink.writeBatch(df(), s"$warehouse/$name", seq, keys)
-      })
-    }
-    // Await ALL writes before propagating the first failure (ADVICE
-    // r10): failing fast on write k would leave jobs k+1…8 running as
-    // zombies past the batch's failure boundary, racing the replayed
-    // batch into the same tables. The PK-FINAL replay contract absorbs
-    // such duplicates, but a failed batch should still return only
-    // after every cascade job has terminated.
-    val outcomes = running.map(f =>
+    val ctx = Tracing.context()
+    val launched = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    val stopped = try {
+      writes.zipWithIndex.foreach { case ((name, write), i) =>
+        before(i)
+        launched += Future(Tracing.spanIn(ctx, name)(write()))
+      }
+      None
+    } catch { case e: Throwable => Some(e) }
+    val outcomes = launched.toSeq.map(f =>
       scala.util.Try(Await.result(f, Duration.Inf)))
-    outcomes.foreach(_.get) // rethrows the first failure, if any
+    stopped.foreach(e => throw e)
+    outcomes.foreach(_.get) // rethrows the first write failure, if any
   }
 
+  /** (min height, max height, block count) of a block batch, None when
+    * it is empty. Called on a LAZY checkpoint, this one aggregate job
+    * also materializes the checkpoint, so every later consumer of the
+    * batch reads the materialized blocks. */
+  def heightRange(blocks: DataFrame): Option[(Long, Long, Long)] = {
+    val r = blocks.agg(min(col("header.height")), max(col("header.height")),
+      count(lit(1))).collect()(0)
+    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1), r.getLong(2)))
+  }
+
+  /** The persisted resolver state, FINAL (one row per receipt). Empty
+    * when the table holds no data files yet — existence alone is not
+    * readable. Entries a TTL expiry removed from a runner's in-memory
+    * carry may resurface here, but every lookup applies the TTL per row,
+    * so resurrection is invisible (the reference's Redis `SET ... EX`
+    * after a warm restart). */
+  def loadState(spark: SparkSession, warehouse: String): DataFrame = {
+    val path = s"$warehouse/resolver_state"
+    ParquetSink.recoverSwap(path) // tolerate a crashed compaction
+    if (ParquetSink.hasData(path))
+      ParquetSink.readFinal(spark.read.parquet(path), statePk)
+        .select(StreamingResolver.stateCols.map(col): _*)
+        .localCheckpoint()
+    else StreamingResolver.emptyState(spark)
+  }
+
+  /** One batch of the ingest fold (reference: handlers/mod.rs:66-139):
+    * resolve `blocks` (heights `minH`..`maxH`) against `state`, write
+    * receipts, execution outcomes, events and the silver cascade
+    * concurrently, then the resolver state, then the transactions.
+    * Returns the carry: the TTL-trimmed state for a next batch of
+    * higher blocks.
+    *
+    * Write order is the restart contract. The transactions table is the
+    * resume marker (`lastHeight` reads it), so it commits LAST: a crash
+    * anywhere before replays the whole batch, and FINAL dedup absorbs
+    * the re-inserts. The state commits after the event-derived tables,
+    * so a replay runs against the old state — identical rows — never
+    * against a state that skipped the batch.
+    *
+    * The state written is this batch's lookup entries at heights
+    * >= `minH`, untrimmed (first write wins, so older entries never
+    * change), and buckets below `minH - ttlBlocks` are dropped. A batch
+    * run re-processes the tx-less blocks above the resume marker, so the
+    * table must hold every entry live at the batch's own lowest height;
+    * the max-height trim of the carry would lose them.
+    *
+    * `failpoint(maxH, writePoint)` fires before each of the six writes
+    * (0=receipts, 1=execution_outcomes, 2=events, 3=silver cascade,
+    * 4=resolver state, 5=transactions): the crash-injection seam of the
+    * soak suite. A throw fails the batch before the streaming checkpoint
+    * commits, so the batch replays whole and the write order above must
+    * absorb the partial writes. */
+  def ingestBatch(blocks: DataFrame, minH: Long, maxH: Long,
+      state: DataFrame, warehouse: String, accounts: AccountsConfig,
+      ttlBlocks: Long, failpoint: (Long, Int) => Unit): DataFrame =
+    // per-batch phase spans, named after the reference's own handler
+    // hierarchy (TRACING.md:45-63) so traces line up engine-to-engine;
+    // no-ops unless Tracing.enable() ran
+    span("handle_streamer_message",
+      "min_height" -> minH.toString, "max_height" -> maxH.toString) {
+      // carry = TTL-trimmed state for the next batch; lookup = the
+      // untrimmed entry set THIS batch's rows resolve against with
+      // per-row TTL (early rows must not see the max-height trim)
+      val (carry, lookup, events0) =
+        span("cache_map_new_receipts_from_outcomes") {
+          StreamingResolver.processBatchFull(state, blocks, accounts,
+            ttlBlocks, maxHeightHint = Some(maxH))
+        }
+      val events = span("parse_events") { events0.localCheckpoint() }
+      // inserts write with AQE off, where a broadcast of the lookup
+      // would cost its own collect job ahead of each write
+      val lookupShuffled = lookup.hint("shuffle_hash")
+      val ofInt = BronzeExtractors.outcomesOfInterest(
+        BronzeExtractors.outcomes(blocks), accounts)
+      def withParentTx(rows: DataFrame) =
+        ReceiptTxResolver.attachParentTx(rows, lookupShuffled, ttlBlocks)
+      span("insert_batches") {
+        concurrently(Seq(
+          "insert_receipts_to_db" -> (() => ParquetSink.writeBatch(
+            withParentTx(BronzeExtractors.receiptRows(ofInt)),
+            s"$warehouse/receipts", maxH, Seq("receipt_id"))),
+          "insert_execution_outcomes_to_db" -> (() => ParquetSink.writeBatch(
+            withParentTx(BronzeExtractors.executionOutcomeRows(ofInt)),
+            s"$warehouse/execution_outcomes", maxH,
+            Seq("execution_outcome_id"))),
+          "insert_events_to_db" -> (() => ParquetSink.writeBatch(
+            events, s"$warehouse/events", maxH, eventsPk)),
+          "silver_cascade" -> (() =>
+            writeSilverCascade(events, accounts, warehouse, maxH))),
+          before = failpoint(maxH, _))
+      }
+      span("persist_resolver_state") {
+        failpoint(maxH, 4)
+        // block_height = entry_height drives the sink's bucketing
+        ParquetSink.writeBatch(lookup.filter(col("entry_height") >= minH)
+          .withColumn("block_height", col("entry_height")),
+          s"$warehouse/resolver_state", maxH, statePk)
+        ParquetSink.dropBucketsBelow(s"$warehouse/resolver_state",
+          minH - ttlBlocks)
+      }
+      span("handle_transactions") {
+        failpoint(maxH, 5)
+        span("insert_transactions_to_db") {
+          ParquetSink.writeBatch(
+            BronzeExtractors.transactionRows(blocks, accounts),
+            s"$warehouse/transactions", maxH, Seq("transaction_hash"))
+        }
+      }
+      carry
+    }
+
   /** Process every block in `blocksDir` newer than the sink's resume
-    * height; returns None when there is nothing new. */
+    * height as one [[ingestBatch]]; returns None when there is nothing
+    * new. */
   def run(spark: SparkSession, blocksDir: String, warehouse: String,
       accounts: AccountsConfig = AccountsConfig(),
       ttlBlocks: Long = NearModel.TtlBlocks): Option[RunSummary] = {
-
     // S3 resume: the reference reads max(block_height) from the
     // transactions table (indexer-clickhouse/src/database.rs:15-39)
     val resume = ParquetSink.lastHeight(spark, s"$warehouse/transactions")
     val all = BlockFileSource.readBlocks(spark, blocksDir)
     // one materialized read of the (possibly remote) block files; every
     // downstream branch reads the checkpoint, not the source
-    val blocks = (resume match {
-      case Some(h) => all.filter(col("header.height") > h)
-      case None => all
-    }).localCheckpoint()
-    if (blocks.isEmpty) return None
-    val agg0 = blocks
-      .agg(min(col("header.height")), max(col("header.height")),
-        count(lit(1))).collect()(0)
-    val (fromNew, toHeight, nBlocks) =
-      (agg0.getLong(0), agg0.getLong(1), agg0.getLong(2))
-
-    val txs = BronzeExtractors.transactions(blocks, accounts)
-      .localCheckpoint()
-    val outs = BronzeExtractors.outcomes(blocks).localCheckpoint()
-
-    // persist this batch's resolver inputs, then resolve over the
-    // TTL-window slice of the full state history
-    val seedsProj = txs.select(col("block_height"), col("block_timestamp_ns"),
-      col("block_hash"), col("transaction_hash"), col("signer_id"),
-      col("receiver_id"), col("actions"), col("first_receipt_id"),
-      col("of_interest"))
-    ParquetSink.writeBatch(seedsProj,
-      s"$warehouse/state_seeds", toHeight, Seq("transaction_hash"))
-    val edgesProj = outs.select(col("block_height"), col("receipt_id"),
-      col("receiver_id"), col("predecessor_id"), col("receipt_ids"))
-    ParquetSink.writeBatch(edgesProj,
-      s"$warehouse/state_edges", toHeight, Seq("receipt_id"))
-
-    // Replay window: state that could still matter for the OLDEST new
-    // block. Expiry within the resolve is the resolver's own per-hop
-    // TTL check — this bound only caps how much history is re-read.
-    // readFinalSince prunes to the window's height-bucket PARTITIONS,
-    // so the scan is O(TTL window) regardless of chain length. A state
-    // table with no data files yet (a first batch carrying no
-    // transactions/outcomes writes nothing) reads as empty — parquet
-    // schema inference cannot.
-    val minStateHeight = fromNew - ttlBlocks
-    val seedState =
-      if (ParquetSink.hasData(s"$warehouse/state_seeds"))
-        ParquetSink.readFinalSince(spark,
-          s"$warehouse/state_seeds", Seq("transaction_hash"), minStateHeight)
-      else seedsProj.limit(0)
-    val edgeState =
-      if (ParquetSink.hasData(s"$warehouse/state_edges"))
-        ParquetSink.readFinalSince(spark,
-          s"$warehouse/state_edges", Seq("receipt_id"), minStateHeight)
-      else edgesProj.limit(0)
-    val resolved = ReceiptTxResolver.resolve(
-      seedState, edgeState, ttlBlocks, accounts = accounts)
-
-    // bronze tables
-    val txRows = txs.filter(col("of_interest"))
-      .drop("first_receipt_id", "of_interest")
-
-    val ofInt = BronzeExtractors.outcomesOfInterest(outs, accounts)
-    // inserts write with AQE off, where a broadcast of the resolver
-    // output would cost its own collect job ahead of each write
-    val resolvedShuffled = resolved.hint("shuffle_hash")
-    val receiptRows = ReceiptTxResolver.attachParentTx(
-      BronzeExtractors.receiptRows(ofInt), resolvedShuffled, ttlBlocks)
-    ParquetSink.writeBatch(receiptRows, s"$warehouse/receipts", toHeight,
-      Seq("receipt_id"))
-    val outcomeRows = ReceiptTxResolver.attachParentTx(
-      BronzeExtractors.executionOutcomeRows(ofInt), resolvedShuffled,
-      ttlBlocks)
-    ParquetSink.writeBatch(outcomeRows, s"$warehouse/execution_outcomes",
-      toHeight, Seq("execution_outcome_id"))
-
-    val events = ReceiptTxResolver.attachTxHash(
-      BronzeExtractors.eventRows(outs, accounts), resolved,
-      ttlBlocks = ttlBlocks)
-      .localCheckpoint()
-    ParquetSink.writeBatch(events, s"$warehouse/events", toHeight, eventsPk)
-
-    // silver: the FULL MV cascade fires on the inserted batch only
-    // (whole-row dedup on read — see silverClusterKeys)
-    writeSilverCascade(events, accounts, warehouse, toHeight)
-
-    // The transactions table is the RESUME MARKER (lastHeight reads it),
-    // so it commits LAST: a crash anywhere above leaves the resume point
-    // untouched and the whole batch is re-processed idempotently
-    // (FINAL dedup absorbs the re-inserts).
-    ParquetSink.writeBatch(txRows, s"$warehouse/transactions", toHeight,
-      Seq("transaction_hash"))
-
-    // Summary counts materialize BEFORE the trim — receipt/outcome rows
-    // re-derive from the state-window reads the trim is about to prune.
-    val summary = RunSummary(resume, toHeight, nBlocks, events.count(),
-      txRows.count(), receiptRows.count(), outcomeRows.count())
-
-    // Retention: the NEXT run replays from (toHeight+1) - ttl at the
-    // earliest, so state partitions strictly below that bound can never
-    // be read again — drop them (partition-level, no rewrite). Runs
-    // after the commit point: a crash before this re-trims next run.
-    val retainFrom = toHeight + 1 - ttlBlocks
-    ParquetSink.dropBucketsBelow(s"$warehouse/state_seeds", retainFrom)
-    ParquetSink.dropBucketsBelow(s"$warehouse/state_edges", retainFrom)
-
-    Some(summary)
+    val blocks = resume.fold(all)(h => all.filter(col("header.height") > h))
+      .localCheckpoint(eager = false)
+    heightRange(blocks).map { case (minH, maxH, n) =>
+      ingestBatch(blocks, minH, maxH, loadState(spark, warehouse), warehouse,
+        accounts, ttlBlocks, (_, _) => ())
+      RunSummary(resume, maxH, n)
+    }
   }
 
   /** FINAL view of a warehouse table (read path for every consumer;

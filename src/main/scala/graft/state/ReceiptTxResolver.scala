@@ -27,10 +27,10 @@ import graft.model.{AccountsConfig, NearModel}
   *    *results* the tiers are equivalent (lookups consult both); we
   *    carry the tier through so metrics/tests can observe promotions.
   *
-  * Both ingest paths resolve through the one core, [[fixpoint]]: the
-  * batch [[resolve]] over a whole chain slice, and the streaming fold
-  * ([[graft.streaming.StreamingResolver]]) over the carried TTL window
-  * plus one micro-batch.
+  * Everything resolves through the one core, [[fixpoint]]: the ingest
+  * fold ([[graft.streaming.StreamingResolver]], which both runners run
+  * per batch) over the carried TTL window plus one batch, and the
+  * queries' [[resolve]] over a whole chain slice.
   */
 object ReceiptTxResolver {
 
@@ -96,7 +96,10 @@ object ReceiptTxResolver {
     * O(entries + edges): on the streaming path, the carried TTL window
     * plus the batch's edges. The result, (receipt_id, tx_hash, main,
     * entry_height, promoted) with one row per resolved receipt, is
-    * checkpointed once. */
+    * checkpointed once. Its counters ride whatever action the caller
+    * runs (observe = zero extra jobs): entries by tier plus T4
+    * promotions — the reference's cache promotion metric
+    * (indexer-common/src/metrics.rs:36-88). */
   def fixpoint(entries: DataFrame, edges: DataFrame, ttlBlocks: Long,
       maxHops: Int): DataFrame = {
     // a null tier reads as potential; rows without a key or target
@@ -109,11 +112,17 @@ object ReceiptTxResolver {
         coalesce(col("hop_main"), lit(false)).as("m"),
         col("hop_height").as("h"), lit(true).as("edge")))
       .filter(col("k").isNotNull && col("v").isNotNull)
-    input.coalesce(1)
+    val resolved = input.coalesce(1)
       .mapPartitions(rows => closure(rows, ttlBlocks, maxHops)
         .map { case (id, e) => Row(id, e.tx, e.main, e.height, e.promoted) }
       )(Encoders.row(coreSchema))
       .localCheckpoint()
+    Metrics.observedAgg(resolved, "resolver",
+      count(lit(1)).as("resolver_entries_total"),
+      coalesce(sum(when(col("main"), 1L)), lit(0L))
+        .as("resolver_main_total"),
+      coalesce(sum(when(col("promoted"), 1L)), lit(0L))
+        .as("resolver_promoted_total"))
   }
 
   private def closure(rows: Iterator[Row], ttlBlocks: Long,
@@ -158,20 +167,9 @@ object ReceiptTxResolver {
       outcomes: DataFrame,
       ttlBlocks: Long = NearModel.TtlBlocks,
       maxHops: Int = 32,
-      accounts: AccountsConfig = AccountsConfig()): DataFrame = {
-    val resolved = fixpoint(seeds(transactions), edges(outcomes, accounts),
-      ttlBlocks, maxHops)
-    // Counters ride whatever action the caller runs (observe = zero
-    // extra jobs): entries by tier plus T4 promotions — the reference's
-    // cache promotion metric (indexer-common/src/metrics.rs:36-88).
-    Metrics.observedAgg(resolved, "resolver",
-      count(lit(1)).as("resolver_entries_total"),
-      coalesce(sum(when(col("main"), 1L)), lit(0L))
-        .as("resolver_main_total"),
-      coalesce(sum(when(col("promoted"), 1L)), lit(0L))
-        .as("resolver_promoted_total"))
-      .drop("promoted")
-  }
+      accounts: AccountsConfig = AccountsConfig()): DataFrame =
+    fixpoint(seeds(transactions), edges(outcomes, accounts), ttlBlocks,
+      maxHops).drop("promoted")
 
   /** An entry is readable at `atHeight` only while its TTL holds —
     * the Redis `SET ... EX` expiry seen by lookups (T1). Without this,

@@ -27,7 +27,7 @@ import graft.state.ReceiptTxResolver
   *  4. the batch's events resolve against state′; unresolved → dropped
   *     (T5 warn-and-drop policy).
   *
-  * Steps 1–2 are the batch resolver's core,
+  * Steps 1–2 are the resolver core,
   * [[graft.state.ReceiptTxResolver.fixpoint]], run over carry ∪ seeds
   * with no hop bound: one Spark job per micro-batch whatever the chain
   * depth, in one task holding O(carried TTL window + the batch's
@@ -63,7 +63,7 @@ object StreamingResolver {
   /** [[processBatch]] also returning the LOOKUP state: the untrimmed
     * post-fixpoint entry set this batch's own rows must resolve
     * against, with TTL applied PER ROW (each row sees entries live at
-    * its own height — the batch resolver's `entryLive` contract). The
+    * its own height — the `entryLive` contract of `attachTxHash`). The
     * carried state is trimmed relative to the batch's newest height,
     * which is safe for the FUTURE (the next batch's rows are all
     * higher) but wrong for lookups inside a multi-block batch: an
@@ -104,7 +104,7 @@ object StreamingResolver {
     // its checkpoint blocks.
     //
     // CROSS-BATCH LIVENESS: because carry is lazy over THIS batch's
-    // `lookup`, the caller's state var (StreamRunner's `state = st2`)
+    // `lookup`, the caller's state var (StreamRunner's `state`)
     // keeps referencing these checkpoint blocks into the NEXT
     // micro-batch, until that batch's own fixpoint lands. Nothing may
     // unpersist `lookup` while carry is live.

@@ -302,6 +302,92 @@ class NearPipelineSpec extends AnyFunSuite {
     assert(img(wh1).size === 11)
   }
 
+  test("runner restart: the resolver state holds every entry live at a " +
+    "batch's lowest height") {
+    import graft.runner.BatchRunner
+    import graft.sink.ParquetSink
+    import graft.sources.BlockFileSource
+    import graft.streaming.StreamRunner
+    def freshDir(n: String) = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$n")
+      ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val log = NearModel.EventJsonPrefix +
+      """{"standard":"nep245","version":"1.0.0","event":"mt_transfer","data":[]}"""
+    def block(h: Long, txs: Seq[TxWithOutcome],
+        outs: Seq[OutcomeWithReceipt]) =
+      Block(BlockHeader(h, NearFixtures.T0 + h * 1000000000L, s"B$h"),
+        Seq(Shard(if (txs.isEmpty) None else Some(Chunk(txs)), outs)))
+    def tx(hash: String, receipt: String) = TxWithOutcome(
+      TransactionView(hash, "alice.near", "intents.near", Nil), s"oc_$hash",
+      OutcomeView("alice.near", Seq(receipt), "SuccessReceiptId", Nil, "0", 1L))
+    def exec(receipt: String, spawns: Seq[String]) = OutcomeWithReceipt(
+      ReceiptView(receipt, "intents.near", "alice.near", "Action", Nil, None),
+      s"o_$receipt", OutcomeView("intents.near", spawns, "SuccessValue",
+        Seq(log), "0", 1L))
+    def image(wh: String, table: String, pk: Seq[String]): Seq[String] = {
+      val t = BatchRunner.tableFinal(spark, wh, table, pk)
+      t.select(t.columns.sorted.map(col): _*)
+        .collect().map(_.toString).sorted.toSeq
+    }
+    def images(wh: String) = Seq(
+      image(wh, "events", Seq("related_receipt_id", "index_in_log")),
+      image(wh, "receipts", Seq("receipt_id")))
+    def resolvedEvents(wh: String) =
+      BatchRunner.tableFinal(spark, wh, "events",
+        Seq("related_receipt_id", "index_in_log"))
+        .select("related_receipt_id", "tx_hash", "block_height")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .sorted.toSeq
+
+    // tx1 at 100 seeds r1; r1 executes at 140 and spawns r2; an
+    // unrelated tx at 160 moves the resume marker; r2 executes at 180.
+    // Split at 160, the second stage must still see the seed at 100.
+    val chain = Seq(block(100L, Seq(tx("tx1", "r1")), Nil),
+      block(140L, Nil, Seq(exec("r1", Seq("r2")))),
+      block(160L, Seq(tx("tx2", "r3")), Nil),
+      block(180L, Nil, Seq(exec("r2", Nil))))
+    val oneShot = freshDir("carry_oneshot")
+    val oneShotBlocks = freshDir("carry_oneshot_blocks")
+    BlockFileSource.writeBlockFiles(spark, chain, oneShotBlocks)
+    BatchRunner.run(spark, oneShotBlocks, oneShot, acc)
+    assert(resolvedEvents(oneShot) ===
+      Seq(("r1", "tx1", 140L), ("r2", "tx1", 180L)))
+    Seq[(String, String) => Unit](
+      (bd, wh) => BatchRunner.run(spark, bd, wh, acc),
+      (bd, wh) => StreamRunner.runStream(spark, bd, wh, acc)
+    ).zipWithIndex.foreach { case (ingest, i) =>
+      val wh = freshDir(s"carry_twostage_$i")
+      val bd = freshDir(s"carry_twostage_blocks_$i")
+      BlockFileSource.writeBlockFiles(spark, chain.take(3), bd)
+      ingest(bd, wh)
+      BlockFileSource.writeBlockFiles(spark, chain, bd)
+      ingest(bd, wh)
+      assert(images(wh) === images(oneShot), s"two-stage ingest $i")
+    }
+
+    // Blocks 140 and 200 carry no transactions, so the resume marker
+    // stays at 100 and a second run re-processes them: r1's receipt
+    // row must still resolve against the seed at 100.
+    val wh = freshDir("carry_reprocess")
+    val bd = freshDir("carry_reprocess_blocks")
+    BlockFileSource.writeBlockFiles(spark, Seq(
+      block(100L, Seq(tx("tx1", "r1")), Nil),
+      block(140L, Nil, Seq(exec("r1", Seq("r2")))),
+      block(200L, Nil, Nil)), bd)
+    BatchRunner.run(spark, bd, wh, acc)
+    val first = images(wh)
+    val again = BatchRunner.run(spark, bd, wh, acc)
+    assert(again.exists(s => s.fromHeight.contains(100L) && s.nBlocks == 2L))
+    assert(images(wh) === first)
+    assert(BatchRunner.tableFinal(spark, wh, "receipts", Seq("receipt_id"))
+      .filter(col("receipt_id") === "r1")
+      .select("parent_transaction_hash").collect().map(_.getString(0))
+      .toSeq === Seq("tx1"))
+  }
+
   test("warehouse compaction preserves every table image and the resume " +
     "point") {
     import graft.runner.BatchRunner
@@ -370,15 +456,20 @@ class NearPipelineSpec extends AnyFunSuite {
     // every in-fixture resolution hop/lookup spans <= 2 blocks, so a
     // 10-block TTL resolves identically to the default 50 — but makes
     // the retention bound bite between the 100-102 and 160-161 groups
+    val state = s"$wh/resolver_state"
     BlockFileSource.writeBlockFiles(spark, ordered.take(3), bd)
     BatchRunner.run(spark, bd, wh, acc, ttlBlocks = 10L)
-    assert(buckets(s"$wh/state_seeds") === Set(2L)) // heights 100-102
+    assert(buckets(state) === Set(2L)) // heights 100-102
     BlockFileSource.writeBlockFiles(spark, ordered, bd)
     BatchRunner.run(spark, bd, wh, acc, ttlBlocks = 10L)
-    // retainFrom = 161 + 1 - 10 = 152 -> bucket 2 can never be read
-    // again and is dropped; bucket 3 (160-161) stays
-    assert(buckets(s"$wh/state_seeds") === Set(3L))
-    assert(buckets(s"$wh/state_edges") === Set(3L))
+    // this run starts at 102 (the tx-less block above the resume point
+    // 101), so it retains from 102 - 10 = 92: bucket 2 (100-149) stays
+    // next to bucket 3 (160-161)
+    assert(buckets(state) === Set(2L, 3L))
+    // a third run re-processes only 161 and retains from 151: bucket 2
+    // can never be read again and is dropped
+    BatchRunner.run(spark, bd, wh, acc, ttlBlocks = 10L)
+    assert(buckets(state) === Set(3L))
     // the trimmed warehouse still serves the full FINAL events image
     val pk = Seq("related_receipt_id", "index_in_log")
     val events = BatchRunner.tableFinal(spark, wh, "events", pk)
@@ -389,8 +480,8 @@ class NearPipelineSpec extends AnyFunSuite {
     assert(events === batch)
     // and the windowed read truly prunes: the scan carries a partition
     // filter on height_bucket, not just a data filter on block_height
-    val plan = ParquetSink.readFinalSince(spark, s"$wh/state_seeds",
-      Seq("transaction_hash"), 152L)
+    val plan = ParquetSink.readFinalSince(spark, state, Seq("receipt_id"),
+      152L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       plan.contains("height_bucket"), plan)

@@ -48,7 +48,7 @@ class SourcesSpec extends AnyFunSuite {
     // the product runner ingests straight from the lake:// URI
     val warehouse = tmp("lake_wh")
     val summary = graft.runner.BatchRunner.run(spark, lakePath, warehouse, acc)
-    assert(summary.nonEmpty && summary.get.nEvents > 0)
+    assert(summary.nonEmpty)
     val batch = graft.queries.NearQueries.bronzeEvents(spark, "")
       .collect().map(_.toString).sorted.toSeq
     def eventsOf(wh: String): Seq[String] = graft.runner.BatchRunner
@@ -56,7 +56,8 @@ class SourcesSpec extends AnyFunSuite {
         Seq("related_receipt_id", "index_in_log"))
       .select(NearFixtures.eventCols.map(col): _*)
       .collect().map(_.toString).sorted.toSeq
-    assert(eventsOf(warehouse) === batch)
+    val lakeEvents = eventsOf(warehouse)
+    assert(lakeEvents.nonEmpty && lakeEvents === batch)
 
     // the STREAMING source lists and reads through the same FS
     // abstraction — the checkpointed query consumes lake:// files

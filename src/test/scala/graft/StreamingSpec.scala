@@ -204,6 +204,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(goldStreamed.nonEmpty)
   }
 
+  test("runStream exports the resolver entry, main-tier and promotion " +
+    "counters") {
+    import graft.metrics.Metrics
+    def tmp(name: String): String = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
+      graft.sink.ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val blocksDir = tmp("counters_blocks")
+    graft.sources.BlockFileSource.writeBlockFiles(spark, NearFixtures.blocks,
+      blocksDir)
+    Metrics.install(spark)
+    Metrics.reset()
+    StreamRunner.runStream(spark, blocksDir, tmp("counters_wh"), acc)
+    val names = Seq("resolver_entries_total", "resolver_main_total",
+      "resolver_promoted_total")
+    val deadline = System.nanoTime() + 10000000000L
+    while (!names.forall(Metrics.snapshot().contains) &&
+        System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val snap = Metrics.snapshot()
+    assert(names.forall(snap.contains), snap)
+    assert(snap("resolver_entries_total") > 0L)
+    assert(snap("resolver_main_total") <= snap("resolver_entries_total"))
+  }
+
   test("real Structured Streaming wiring: MemoryStream + foreachBatch, " +
     "one block per micro-batch") {
     import spark.implicits._
