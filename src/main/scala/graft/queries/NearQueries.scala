@@ -7,6 +7,7 @@ import graft.silver.SilverTransforms
 import graft.gold.GoldViews
 import graft.state.ReceiptTxResolver
 import graft.fixtures.NearFixtures
+import graft.sink.ParquetSink
 
 /** Declared queries exercising the NEAR layer end-to-end over the
   * deterministic fixture corpus ([[NearFixtures]]; the sfDir argument is
@@ -171,9 +172,6 @@ object NearQueries {
 
   // ----------------------------------------------------------------- sink
 
-  private def freshSinkDir(name: String): String =
-    graft.sink.ParquetSink.scratchDir(name)
-
   private val eventPk = Seq("related_receipt_id", "index_in_log")
 
   /** K1/K2/K4 round trip: append the bronze events TWICE (the
@@ -181,8 +179,7 @@ object NearQueries {
     * FINAL dedup → exactly the original rows (oracle: the same pinned
     * VALUES as near_bronze_events). */
   def sinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sink.ParquetSink
-    val path = freshSinkDir("events_rt")
+    val path = ParquetSink.scratchDir("events_rt")
     val ev = eventsDf(spark)
     ParquetSink.writeBatch(ev, path, 0L, eventPk)
     ParquetSink.writeBatch(ev, path, 1L, eventPk)
@@ -201,8 +198,7 @@ object NearQueries {
     * resolving across the merge. The pin-0 frame is checkpointed
     * before compact() swaps the files out from under its lazy scan. */
   def readAsOf(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sink.ParquetSink
-    val path = freshSinkDir("events_asof")
+    val path = ParquetSink.scratchDir("events_asof")
     val ev = eventsDf(spark)
     ParquetSink.writeBatch(ev, path, 0L, eventPk)
     ParquetSink.writeBatch(
@@ -225,8 +221,7 @@ object NearQueries {
   /** S3 resume-from-last-height + raw-vs-FINAL row counts, before and
     * after compaction. */
   def sinkResume(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sink.ParquetSink
-    val path = freshSinkDir("events_resume")
+    val path = ParquetSink.scratchDir("events_resume")
     val ev = eventsDf(spark)
     ParquetSink.writeBatch(ev, path, 0L, eventPk)
     ParquetSink.writeBatch(ev, path, 1L, eventPk)
@@ -245,7 +240,7 @@ object NearQueries {
   def s1FileSource(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.BlockFileSource
     graft.Tables.tune(spark)
-    val path = graft.sink.ParquetSink.scratchDir("blocks_src")
+    val path = ParquetSink.scratchDir("blocks_src")
     BlockFileSource.writeBlockFiles(spark, NearFixtures.blocks, path)
     val b = BlockFileSource.readBlocks(spark, path)
     val outs = BronzeExtractors.outcomes(b)
@@ -291,8 +286,8 @@ object NearQueries {
     import graft.runner.BatchRunner
     import graft.sources.BlockFileSource
     graft.Tables.tune(spark)
-    val warehouse = freshSinkDir("runner_wh")
-    val blocksDir = freshSinkDir("runner_blocks")
+    val warehouse = ParquetSink.scratchDir("runner_wh")
+    val blocksDir = ParquetSink.scratchDir("runner_blocks")
     val ordered = NearFixtures.blocks.sortBy(_.header.height)
     BlockFileSource.writeBlockFiles(spark, ordered.take(3), blocksDir)
     BatchRunner.run(spark, blocksDir, warehouse, acc)
@@ -317,8 +312,8 @@ object NearQueries {
     import graft.runner.BatchRunner
     import graft.sources.BlockFileSource
     graft.Tables.tune(spark)
-    val warehouse = freshSinkDir("gold_rollup_wh")
-    val blocksDir = freshSinkDir("gold_rollup_blocks")
+    val warehouse = ParquetSink.scratchDir("gold_rollup_wh")
+    val blocksDir = ParquetSink.scratchDir("gold_rollup_blocks")
     val ordered = NearFixtures.blocks.sortBy(_.header.height)
     BlockFileSource.writeBlockFiles(spark, ordered.take(3), blocksDir)
     BatchRunner.run(spark, blocksDir, warehouse, acc)
@@ -345,8 +340,8 @@ object NearQueries {
     import graft.sources.BlockFileSource
     import graft.streaming.StreamRunner
     graft.Tables.tune(spark)
-    val warehouse = freshSinkDir("stream_wh")
-    val blocksDir = freshSinkDir("stream_blocks")
+    val warehouse = ParquetSink.scratchDir("stream_wh")
+    val blocksDir = ParquetSink.scratchDir("stream_blocks")
     val ordered = NearFixtures.blocks.sortBy(_.header.height)
     BlockFileSource.writeBlockFiles(spark, ordered.take(3), blocksDir)
     StreamRunner.runStream(spark, blocksDir, warehouse, acc)

@@ -477,22 +477,19 @@ object ParquetSink {
     f.delete(): Unit
   }
 
-  /** Per-JVM scratch dir for sink-scenario queries and streaming-twin
-    * feeds/warehouses: `tmpdir/graft_sink_<pid>_<name>`, emptied on
-    * entry and deleted at JVM exit.
-    *
-    * The pid component is LOAD-BEARING: these paths used to be fixed
-    * (`graft_sink_<name>`), so two JVMs running the same declared query
-    * concurrently — a background Verify replay beside the test suite —
-    * fed each other's streams and the suite read ~100× inflated MV
-    * state (round-16 incident: `w_stream_rolling_7d` at sf0.001 read
-    * the sf0.1 replay's feed). Same failure class as the "no
-    * concurrent sbt" rule; the unique path removes the hazard instead
-    * of ruling it away. */
+  /** A fresh scratch dir for sink-scenario queries and streaming-twin
+    * feeds/warehouses: `tmpdir/graft_sink_<pid>_<name>_<n>`, where `n`
+    * counts calls in this JVM, so every call gets its own path — two
+    * queries that share a name (the dedup twins, the graph twins) can
+    * run concurrently in one JVM (the parallel Verify) without wiping
+    * each other's feed, and two JVMs (a Verify replay beside the test
+    * suite) never share one either. Emptied on entry (a stale dir of a
+    * killed JVM with a recycled pid) and removed at JVM exit. */
   def scratchDir(name: String): String = {
     val d = new java.io.File(
       System.getProperty("java.io.tmpdir"),
-      s"graft_sink_${ProcessHandle.current().pid()}_$name")
+      s"graft_sink_${ProcessHandle.current().pid()}_${name}_" +
+        scratchSeq.incrementAndGet())
     delete(d)
     // ONE shutdown hook for all scratch names (ADVICE r16): a
     // per-name hook accumulates threads in a long-lived process
@@ -508,6 +505,7 @@ object ParquetSink {
     scratchRegistered.put(d.getAbsolutePath, java.lang.Boolean.TRUE): Unit
     d.getAbsolutePath
   }
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong()
   private val scratchHookArmed =
     new java.util.concurrent.atomic.AtomicBoolean(false)
   private val scratchRegistered =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.sink.ParquetSink
@@ -49,33 +48,53 @@ object StreamingAnnIndex {
     StructField("doc_id", LongType),
     StructField("embedding", ArrayType(DoubleType))))
 
-  /** Stream every unconsumed chunk into the index table, then stop
-    * (Trigger.AvailableNow — the [[StreamingDedup.runStream]] resume
-    * contract: call again after new chunks land and the same
-    * checkpoint continues from the first unseen file). */
-  def runStream(spark: SparkSession, feedDir: String, warehouse: String,
-      planes: Array[Array[Double]]): Unit = {
-    val path = s"$warehouse/ann_vectors"
-    val query = StreamingDedup.readDocStream(spark, feedDir, vecSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_ann_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val assigned = batch
-            .select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-            .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
-            .withColumn("bucket",
-              graft.llm.Similarity.signBucketCol(planes))
-            .withColumn("block_height", col("vec_id"))
-          ParquetSink.writeBatch(assigned, path, maxId, Seq("vec_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+  /** The embeddings feed: vec_id on the `doc_id` rail, vectors cast to
+    * array<double>. */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.embeddings(spark, dir)
+      .select(col("vec_id").as("doc_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+
+  /** (vec_id, emb, nrm) — the normalized vector row every index holds. */
+  private def normed(vecs: DataFrame): DataFrame = vecs
+    .select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
+    .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+
+  /** [[TwinReplay.fold]] of the vector feed into the vec_id-keyed
+    * ReplacingMergeTree-analog table `table`, each micro-batch one
+    * narrow map (`assign`) over its normalized rows. */
+  private def indexStream(spark: SparkSession, feedDir: String,
+      warehouse: String, table: String)(assign: DataFrame => DataFrame): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, vecSchema),
+      s"$warehouse/_${table}_checkpoint") { (batch, maxId) =>
+      ParquetSink.writeBatch(
+        assign(normed(batch)).withColumn("block_height", col("vec_id")),
+        s"$warehouse/$table", maxId, Seq("vec_id"))
+    }
+
+  /** PRODUCER: train the coarse quantizer on the full corpus, persist
+    * it versioned through the model store, and load it back — the rare
+    * producer pass the streamed consumers read. */
+  private def storedCentroids(spark: SparkSession, vecs: DataFrame,
+      name: String, nCells: Int, iters: Int): Array[Array[Double]] = {
+    val modelRoot = ParquetSink.scratchDir(s"${name}_model_store")
+    graft.sink.ModelStore.saveKmeans(spark, modelRoot, name, 1L,
+      graft.llm.Similarity.kmeansCentroids(normed(vecs).localCheckpoint(),
+        nCells, iters))
+    val centroids = graft.sink.ModelStore.loadKmeans(spark, modelRoot, name)
+    ParquetSink.delete(new java.io.File(modelRoot))
+    centroids
   }
+
+  /** Stream every unconsumed chunk into the sign-bucket index table
+    * (`ann_vectors`), then stop ([[TwinReplay.fold]] — the
+    * [[StreamingDedup.runStream]] resume contract: call again after new
+    * chunks land and the same checkpoint continues from the first
+    * unseen file). */
+  def runStream(spark: SparkSession, feedDir: String, warehouse: String,
+      planes: Array[Array[Double]]): Unit =
+    indexStream(spark, feedDir, warehouse, "ann_vectors")(
+      _.withColumn("bucket", graft.llm.Similarity.signBucketCol(planes)))
 
   /** The accumulated index, FINAL-deduped — the search surface. */
   def indexTable(spark: SparkSession, warehouse: String): DataFrame =
@@ -83,51 +102,22 @@ object StreamingAnnIndex {
       spark.read.parquet(s"$warehouse/ann_vectors"), Seq("vec_id"))
       .select("vec_id", "emb", "nrm", "bucket")
 
-  /** Declared query (`s_stream_ann_lsh`): build the ANN index by
-    * STREAMING the embeddings table — checkpointed file source, two
-    * chunks, a stop, then the full feed against the same checkpoint
-    * (the mid-stream restart, byte-identical early chunks skipped by
-    * the source) — then answer the batch query's exact probe set over
-    * the streamed index. Oracle: shared with `s_ann_lsh` (one search
-    * over two index builds must be one result). Correctness-only:
-    * its cost is micro-batch orchestration, the batch twin is the
-    * benched operator. */
-  /** Stream every unconsumed chunk into the IVF index table: per
-    * micro-batch, one narrow map assigning each vector to its coarse
-    * cell with the FIXED stored quantizer
+  /** Stream every unconsumed chunk into the IVF index table
+    * (`ivf_vectors`): per micro-batch, one narrow map assigning each
+    * vector to its coarse cell with the FIXED stored quantizer
     * ([[graft.llm.Similarity.assignCells]] — the same argmax
-    * expression as the batch build), appended through the
-    * ReplacingMergeTree-analog sink keyed on vec_id. */
+    * expression as the batch build). */
   def runKmeansStream(spark: SparkSession, feedDir: String,
-      warehouse: String, centroids: Array[Array[Double]]): Unit = {
-    val path = s"$warehouse/ivf_vectors"
-    val query = StreamingDedup.readDocStream(spark, feedDir, vecSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_ivf_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val assigned = graft.llm.Similarity.assignCells(
-            batch.select(col("doc_id").as("vec_id"),
-                col("embedding").as("emb"))
-              .withColumn("nrm", sqrt(expr("dot_product(emb, emb)"))),
-            centroids)
-            .withColumn("block_height", col("vec_id"))
-          ParquetSink.writeBatch(assigned, path, maxId, Seq("vec_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String, centroids: Array[Array[Double]]): Unit =
+    indexStream(spark, feedDir, warehouse, "ivf_vectors")(
+      graft.llm.Similarity.assignCells(_, centroids))
 
   /** Declared query (`s_stream_ann_kmeans`): the FULL production ANN
     * topology in one scenario — the trained coarse quantizer persists
     * through the versioned model store (the rare producer pass,
     * VERDICT r12 #1), the corpus STREAMS through the fixed stored
-    * model into an incrementally-absorbed index MV (checkpointed, two
-    * chunks, a mid-stream restart), and the search runs the SAME
+    * model into an incrementally-absorbed index MV (the
+    * [[TwinReplay.replay]] restart), and the search runs the SAME
     * multi-probe implementation as the batch query over the
     * accumulated index. Equals batch `s_ann_kmeans` and shares its
     * oracle: the model is bit-identical (trained on the full corpus,
@@ -137,29 +127,11 @@ object StreamingAnnIndex {
       nQueries: Int = 20, nCells: Int = 8, iters: Int = 2,
       nprobe: Int = 2, nChunks: Int = 5): DataFrame = {
     graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("ivf_feed")
-    val warehouse = StreamingDedup.freshDir("ivf_wh")
-    val vecs = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("doc_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    // PRODUCER: train on the full corpus, persist versioned, load back
-    val eTrain = vecs
-      .select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
-      .localCheckpoint()
-    val modelRoot = StreamingDedup.freshDir("ivf_model_store")
-    graft.sink.ModelStore.saveKmeans(spark, modelRoot, "ivf_stream", 1L,
-      graft.llm.Similarity.kmeansCentroids(eTrain, nCells, iters))
-    val centroids =
-      graft.sink.ModelStore.loadKmeans(spark, modelRoot, "ivf_stream")
-    ParquetSink.delete(new java.io.File(modelRoot))
+    val vecs = vectors(spark, dir)
+    val centroids = storedCentroids(spark, vecs, "ivf_stream", nCells, iters)
     // CONSUMER: stream the corpus through the fixed stored model
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      takeChunks = 2, schema = vecSchema)
-    runKmeansStream(spark, feed, warehouse, centroids)
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      schema = vecSchema)
-    runKmeansStream(spark, feed, warehouse, centroids)
+    val warehouse = TwinReplay.replay(spark, "ivf", vecs, nChunks, vecSchema)(
+      runKmeansStream(spark, _, _, centroids))(_ => ())
     val index = ParquetSink.readFinal(
       spark.read.parquet(s"$warehouse/ivf_vectors"), Seq("vec_id"))
       .select("vec_id", "emb", "nrm", "cell")
@@ -168,37 +140,18 @@ object StreamingAnnIndex {
   }
 
   /** Stream every unconsumed chunk into a PLAIN normalized vector
-    * table (vec_id, emb, nrm) — the minimal embedding index the
-    * decontamination census reads: one narrow map per micro-batch
-    * (norm only, no bucket/cell config), appended through the
-    * ReplacingMergeTree-analog sink keyed on vec_id. */
+    * table (`vec_index`: vec_id, emb, nrm) — the minimal embedding
+    * index the decontamination census reads (norm only, no
+    * bucket/cell config). */
   def runVectorStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val path = s"$warehouse/vec_index"
-    val query = StreamingDedup.readDocStream(spark, feedDir, vecSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_vec_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val normed = batch
-            .select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-            .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
-            .withColumn("block_height", col("vec_id"))
-          ParquetSink.writeBatch(normed, path, maxId, Seq("vec_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    indexStream(spark, feedDir, warehouse, "vec_index")(identity)
 
   /** Declared query (`s_stream_decontaminate`, VERDICT r13 #5):
     * CONTINUOUS semantic decontamination — the training corpus streams
-    * into an incrementally-accumulated PK-FINAL embedding index
-    * (checkpointed, two chunks, a mid-stream restart over the full
-    * feed), and the SAME bounded-probe leak census as the batch query
+    * into an incrementally-accumulated PK-FINAL embedding index (the
+    * [[TwinReplay.replay]] restart), and the SAME bounded-probe leak
+    * census as the batch query
     * ([[graft.llm.Similarity.decontaminateRel]]) runs over the
     * accumulated index — how a feed-shaped training pipeline actually
     * consumes the leakage report: re-run the census as the corpus
@@ -210,19 +163,8 @@ object StreamingAnnIndex {
   def sStreamDecontaminate(spark: SparkSession, dir: String,
       nProbes: Int = 32, threshold: Double = 0.4,
       nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("decon_feed")
-    val warehouse = StreamingDedup.freshDir("decon_wh")
-    val vecs = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("doc_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      takeChunks = 2, schema = vecSchema)
-    runVectorStream(spark, feed, warehouse)
-    // mid-stream restart over the full feed, same checkpoint
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      schema = vecSchema)
-    runVectorStream(spark, feed, warehouse)
+    val warehouse = TwinReplay.replay(spark, "decon", vectors(spark, dir),
+      nChunks, vecSchema)(runVectorStream(spark, _, _))(_ => ())
     val index = ParquetSink.readFinal(
       spark.read.parquet(s"$warehouse/vec_index"), Seq("vec_id"))
       .select("vec_id", "emb", "nrm")
@@ -230,71 +172,33 @@ object StreamingAnnIndex {
   }
 
   /** Stream every unconsumed chunk into the prototypicality FACT table
-    * — per micro-batch, one narrow map computing each vector's argmax
-    * cell and cosine-to-own-centroid with the FIXED stored quantizer
-    * ([[graft.llm.Similarity.assignWithProto]], the same expression as
-    * the batch build), appended through the ReplacingMergeTree-analog
-    * sink keyed on vec_id. */
+    * (`proto_facts`) — per micro-batch, one narrow map computing each
+    * vector's argmax cell and cosine-to-own-centroid with the FIXED
+    * stored quantizer ([[graft.llm.Similarity.assignWithProto]], the
+    * same expression as the batch build). */
   def runPruneStream(spark: SparkSession, feedDir: String,
-      warehouse: String, centroids: Array[Array[Double]]): Unit = {
-    val path = s"$warehouse/proto_facts"
-    val query = StreamingDedup.readDocStream(spark, feedDir, vecSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_proto_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val facts = graft.llm.Similarity.assignWithProto(
-            batch.select(col("doc_id").as("vec_id"),
-                col("embedding").as("emb"))
-              .withColumn("nrm", sqrt(expr("dot_product(emb, emb)"))),
-            centroids)
-            .withColumn("block_height", col("vec_id"))
-          ParquetSink.writeBatch(facts, path, maxId, Seq("vec_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String, centroids: Array[Array[Double]]): Unit =
+    indexStream(spark, feedDir, warehouse, "proto_facts")(
+      graft.llm.Similarity.assignWithProto(_, centroids))
 
   /** Declared query (`s_stream_prune`): CONTINUOUS prototype pruning —
     * the quantizer trains once and persists through the versioned
     * model store (the rare producer pass), the corpus STREAMS through
     * the fixed stored model into a PK-FINAL prototypicality fact table
-    * (checkpointed, two chunks, a mid-stream restart), and the
-    * rank-and-cut read ([[graft.llm.Similarity.pruneRankFromFacts]] —
-    * the SAME body as batch, ranks being non-additive derive at read)
-    * re-evaluates as the corpus grows. Equals batch
-    * `s_prune_prototypes` and shares its oracle. Correctness-only:
-    * micro-batch orchestration dominates, the batch twin is benched. */
+    * (the [[TwinReplay.replay]] restart), and the rank-and-cut read
+    * ([[graft.llm.Similarity.pruneRankFromFacts]] — the SAME body as
+    * batch, ranks being non-additive derive at read) re-evaluates as
+    * the corpus grows. Equals batch `s_prune_prototypes` and shares
+    * its oracle. Correctness-only: micro-batch orchestration
+    * dominates, the batch twin is benched. */
   def sStreamPrune(spark: SparkSession, dir: String, nCells: Int = 8,
       iters: Int = 2, prunePct: Int = 25, nChunks: Int = 5): DataFrame = {
     graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("proto_feed")
-    val warehouse = StreamingDedup.freshDir("proto_wh")
-    val vecs = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("doc_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-    // PRODUCER: train on the full corpus, persist versioned, load back
-    val eTrain = vecs
-      .select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
-      .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
-      .localCheckpoint()
-    val modelRoot = StreamingDedup.freshDir("proto_model_store")
-    graft.sink.ModelStore.saveKmeans(spark, modelRoot, "proto_stream", 1L,
-      graft.llm.Similarity.kmeansCentroids(eTrain, nCells, iters))
-    val centroids =
-      graft.sink.ModelStore.loadKmeans(spark, modelRoot, "proto_stream")
-    ParquetSink.delete(new java.io.File(modelRoot))
+    val vecs = vectors(spark, dir)
+    val centroids = storedCentroids(spark, vecs, "proto_stream", nCells, iters)
     // CONSUMER: stream the corpus through the fixed stored model
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      takeChunks = 2, schema = vecSchema)
-    runPruneStream(spark, feed, warehouse, centroids)
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      schema = vecSchema)
-    runPruneStream(spark, feed, warehouse, centroids)
+    val warehouse = TwinReplay.replay(spark, "proto", vecs, nChunks,
+      vecSchema)(runPruneStream(spark, _, _, centroids))(_ => ())
     graft.llm.Similarity.pruneRankFromFacts(
       ParquetSink.readFinal(
         spark.read.parquet(s"$warehouse/proto_facts"), Seq("vec_id"))
@@ -302,25 +206,25 @@ object StreamingAnnIndex {
       prunePct)
   }
 
+  /** Declared query (`s_stream_ann_lsh`): build the ANN index by
+    * STREAMING the embeddings table through the [[TwinReplay.replay]]
+    * restart (two chunks, a stop, then the full feed against the same
+    * checkpoint, byte-identical early chunks skipped by the source) —
+    * then answer the batch query's exact probe set over the streamed
+    * index. Oracle: shared with `s_ann_lsh` (one search over two index
+    * builds must be one result). Correctness-only: its cost is
+    * micro-batch orchestration, the batch twin is the benched
+    * operator. */
   def sStreamAnnLsh(spark: SparkSession, dir: String, k: Int = 3,
       nQueries: Int = 20, nPlanes: Int = 4, nChunks: Int = 5): DataFrame = {
     graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("ann_feed")
-    val warehouse = StreamingDedup.freshDir("ann_wh")
-    val vecs = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("doc_id"),
-        col("embedding").cast("array<double>").as("embedding"))
+    val vecs = vectors(spark, dir)
     // index config: same plane derivation as the batch build
     val planes = graft.llm.Similarity.annPlanes(
       vecs.select(col("doc_id").as("vec_id"),
         col("embedding").as("emb")), nPlanes)
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      takeChunks = 2, schema = vecSchema)
-    runStream(spark, feed, warehouse, planes)
-    // mid-stream restart over the full feed, same checkpoint
-    StreamingDedup.writeDocChunks(spark, vecs, feed, nChunks,
-      schema = vecSchema)
-    runStream(spark, feed, warehouse, planes)
+    val warehouse = TwinReplay.replay(spark, "ann", vecs, nChunks, vecSchema)(
+      runStream(spark, _, _, planes))(_ => ())
     graft.llm.Similarity.annLshSearch(
       indexTable(spark, warehouse), k, nQueries, nPlanes)
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
   StructField, StructType}
 import graft.sink.ParquetSink
@@ -35,30 +34,21 @@ object StreamingAnomaly {
   private val keys = Seq("event_type", "epoch_day")
   private val sums = Seq("day_count")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
-    * checkpoint), folding each micro-batch into the daily count grid. */
+  /** Drain every unseen chunk file through [[TwinReplay.fold]],
+    * folding each micro-batch into the daily count grid. */
   def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val gridPath = s"$warehouse/anomaly_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, eventSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_anomaly_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = batch
-            .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
-            .groupBy(col("event_type"), col("epoch_day"))
-            .agg(count(lit(1)).as("day_count"))
-            .withColumn("block_height", col("epoch_day"))
-          ParquetSink.writeSummedBatch(partial, gridPath, maxId, keys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    TwinReplay.fold(
+      StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_anomaly_checkpoint") { (batch, maxId) =>
+      val partial = batch
+        .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
+        .groupBy(col("event_type"), col("epoch_day"))
+        .agg(count(lit(1)).as("day_count"))
+        .withColumn("block_height", col("epoch_day"))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/anomaly_summed",
+        maxId, keys)
+    }
 
   /** Declared query (`w_stream_anomaly`): stream the events table
     * through the incremental grid — two chunks, a mid-stream restart
@@ -70,8 +60,7 @@ object StreamingAnomaly {
     * not data volume. */
   def wStreamAnomaly(spark: SparkSession, dir: String,
       nChunks: Int = 5): DataFrame =
-    graft.queries.EventQueries.anomalyFromDaily(
-      streamedGrid(spark, dir, "anomaly", nChunks))
+    readAnomalies(spark, replayed(spark, dir, "anomaly", nChunks))
 
   /** Declared query (`w_stream_anomaly_mad`): the ROBUST detector over
     * the SAME incrementally-summed daily grid — the median/MAD read is
@@ -83,38 +72,25 @@ object StreamingAnomaly {
   def wStreamAnomalyMad(spark: SparkSession, dir: String,
       nChunks: Int = 5): DataFrame =
     graft.queries.EventQueries.madFromDaily(
-      streamedGrid(spark, dir, "anomaly_mad", nChunks))
+      grid(spark, replayed(spark, dir, "anomaly_mad", nChunks)))
 
-  /** Stream the events table into the daily-count summing MV (two
-    * chunks, mid-stream restart from the same checkpoint, a compaction
-    * MERGE between runs) and return the accumulated grid — shared by
-    * both anomaly twins. */
-  private def streamedGrid(spark: SparkSession, dir: String, tag: String,
-      nChunks: Int): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir(s"${tag}_feed")
-    val warehouse = StreamingDedup.freshDir(s"${tag}_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-        col("value"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/anomaly_summed", keys, sums)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = eventSchema)
-    runStream(spark, feed, warehouse)
+  /** Both anomaly twins' MV build: the events feed through the
+    * [[TwinReplay.replay]] restart, the grid compacted between runs. */
+  private def replayed(spark: SparkSession, dir: String, tag: String,
+      nChunks: Int): String =
+    TwinReplay.replay(spark, tag,
+      graft.Tables.events(spark, dir).select(col("event_id").as("doc_id"),
+        col("ts"), col("event_type"), col("value")),
+      nChunks, eventSchema)(runStream(spark, _, _))(wh =>
+      ParquetSink.compactSummed(spark, s"$wh/anomaly_summed", keys, sums))
+
+  private def grid(spark: SparkSession, warehouse: String): DataFrame =
     ParquetSink.readSummed(
       spark.read.parquet(s"$warehouse/anomaly_summed"), keys, sums)
       .select(col("event_type"), col("epoch_day"), col("day_count"))
-  }
 
   /** The shared-detector read over the accumulated summed grid —
     * shared by the declared query and the randomized soak. */
-  def readAnomalies(spark: SparkSession, warehouse: String): DataFrame = {
-    val grid = ParquetSink.readSummed(
-      spark.read.parquet(s"$warehouse/anomaly_summed"), keys, sums)
-      .select(col("event_type"), col("epoch_day"), col("day_count"))
-    graft.queries.EventQueries.anomalyFromDaily(grid)
-  }
+  def readAnomalies(spark: SparkSession, warehouse: String): DataFrame =
+    graft.queries.EventQueries.anomalyFromDaily(grid(spark, warehouse))
 }

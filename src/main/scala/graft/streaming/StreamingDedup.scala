@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.llm.Dedup
 import graft.sink.ParquetSink
@@ -166,7 +165,7 @@ object StreamingDedup {
   }
 
   /** Run the streaming dedup over every chunk file the checkpoint has
-    * not consumed yet, then stop (Trigger.AvailableNow — same resume
+    * not consumed yet, then stop ([[TwinReplay.fold]] — same resume
     * contract as [[StreamRunner.runStream]]: call again after new
     * chunks land and the SAME checkpoint continues from the first
     * unseen file).
@@ -181,56 +180,35 @@ object StreamingDedup {
       threshold: Double = 0.8): Unit = {
     val docsPath = s"$warehouse/dedup_docs"
     val bandsPath = s"$warehouse/dedup_bands"
-    val pairsPath = s"$warehouse/dedup_pairs"
-    val query = readDocStream(spark, docsDir)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_dedup_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          // corpus first: the verify stage below must see this batch
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            docsPath, maxId, Seq("doc_id"))
-          val allDocs = ParquetSink.readFinal(
-            spark.read.parquet(docsPath), Seq("doc_id"))
-            .select("doc_id", "text")
-          val state =
-            if (ParquetSink.hasData(bandsPath))
-              spark.read.parquet(bandsPath)
-            else emptyBands(spark)
-          val (newBands, pairs, cached) =
-            processBatchTracked(batch, state, allDocs, gramHashes, threshold)
-          ParquetSink.writeBatch(
-            pairs.withColumn("block_height", col("doc_b")),
-            pairsPath, maxId, pairsPk)
-          // band state commits last (see scaladoc). Replayed band rows
-          // are identical (deterministic signatures) — FINAL-safe.
-          ParquetSink.writeBatch(
-            newBands.withColumn("block_height", col("doc_id")),
-            bandsPath, maxId, Seq("doc_id", "band"))
-          // the verify stage persists per batch; drop EXACTLY those
-          // entries once the writes above have consumed them —
-          // CacheManager holds strong references (a long-running stream
-          // would accumulate dead entries without bound), and a
-          // session-wide clearCache() would also drop caches the CALLER
-          // holds (ADVICE r5)
-          cached.foreach(_.unpersist())
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    TwinReplay.fold(readDocStream(spark, docsDir),
+      s"$warehouse/_dedup_checkpoint") { (batch, maxId) =>
+      // corpus first: the verify stage below must see this batch
+      ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
+        docsPath, maxId, Seq("doc_id"))
+      val allDocs = ParquetSink.readFinal(
+        spark.read.parquet(docsPath), Seq("doc_id"))
+        .select("doc_id", "text")
+      val state =
+        if (ParquetSink.hasData(bandsPath)) spark.read.parquet(bandsPath)
+        else emptyBands(spark)
+      val (newBands, pairs, cached) =
+        processBatchTracked(batch, state, allDocs, gramHashes, threshold)
+      ParquetSink.writeBatch(pairs.withColumn("block_height", col("doc_b")),
+        s"$warehouse/dedup_pairs", maxId, pairsPk)
+      // band state commits last (see scaladoc). Replayed band rows
+      // are identical (deterministic signatures) — FINAL-safe.
+      ParquetSink.writeBatch(
+        newBands.withColumn("block_height", col("doc_id")),
+        bandsPath, maxId, Seq("doc_id", "band"))
+      // the verify stage persists per batch; drop EXACTLY those
+      // entries once the writes above have consumed them —
+      // CacheManager holds strong references (a long-running stream
+      // would accumulate dead entries without bound), and a
+      // session-wide clearCache() would also drop caches the CALLER
+      // holds (ADVICE r5)
+      cached.foreach(_.unpersist())
+    }
   }
-
-  /** Fresh tmp-dir for a declared streaming query's feed/warehouse —
-    * shared by [[dStreamMinhash]] and
-    * [[StreamingCorpusClean.pipeStreamClean]]. */
-  // per-JVM unique + emptied on entry — see ParquetSink.scratchDir's
-  // scaladoc for why the pid component is load-bearing
-  private[streaming] def freshDir(name: String): String =
-    ParquetSink.scratchDir(name)
 
   private def emptyBands(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -246,36 +224,29 @@ object StreamingDedup {
       .orderBy("doc_a", "doc_b")
 
   /** Declared query (`d_stream_minhash`): stream the documents table
-    * through the REAL dedup stream — checkpointed file source, two
-    * chunks, a stop, then the remaining chunks against the same
-    * checkpoint (the mid-stream restart) — and return the accumulated
-    * pairs. Oracle: the exact all-pairs Jaccard, same as
-    * `d_minhash_pairs` — the incremental union over batches equals the
-    * batch LSH output because a pair's candidate condition fires
-    * exactly when its later doc arrives. Correctness-only (excluded
+    * through the REAL dedup stream under the [[TwinReplay.replay]]
+    * restart (two chunks, a stop, then the remaining chunks against
+    * the same checkpoint) and return the accumulated pairs. Oracle:
+    * the exact all-pairs Jaccard, same as `d_minhash_pairs` — the
+    * incremental union over batches equals the batch LSH output
+    * because a pair's candidate condition fires exactly when its
+    * later doc arrives. Correctness-only (excluded
     * from Bench): its cost is micro-batch orchestration, not data
     * volume; the batch twin is the benched operator. */
   def dStreamMinhash(spark: SparkSession, dir: String,
       nChunks: Int = 5, threshold: Double = 0.8): DataFrame =
-    streamedPairs(spark, dir, nChunks, threshold)
+    pairsTable(spark, replayed(spark, dir, nChunks, threshold))
 
-  /** The streamed pair MV build shared by [[dStreamMinhash]] and the
-    * derived-at-read components twin ([[dStreamDupGroups]]). */
-  private def streamedPairs(spark: SparkSession, dir: String,
-      nChunks: Int, threshold: Double): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = freshDir("dedup_feed")
-    val warehouse = freshDir("dedup_wh")
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    writeDocChunks(spark, docs, feed, nChunks, takeChunks = 2)
-    runStream(spark, feed, warehouse, threshold = threshold)
-    // mid-stream restart: the full feed lands (byte-identical early
-    // chunks), same checkpoint — only the unseen chunks stream,
-    // against the reloaded band table
-    writeDocChunks(spark, docs, feed, nChunks)
-    runStream(spark, feed, warehouse, threshold = threshold)
-    pairsTable(spark, warehouse)
-  }
+  /** The pair MV build shared by [[dStreamMinhash]] and the
+    * derived-at-read components twin ([[dStreamDupGroups]]): the
+    * documents feed through the [[TwinReplay.replay]] restart — the
+    * unseen chunks stream against the reloaded band table. */
+  private def replayed(spark: SparkSession, dir: String,
+      nChunks: Int, threshold: Double): String =
+    TwinReplay.replay(spark, "dedup",
+      graft.Tables.documents(spark, dir).select("doc_id", "text"),
+      nChunks, docSchema)(runStream(spark, _, _, threshold = threshold))(
+      _ => ())
 
   /** Declared query (`d_stream_dup_groups`): connected components
     * derived AT READ from the incrementally-maintained pair MV — the
@@ -288,7 +259,7 @@ object StreamingDedup {
   def dStreamDupGroups(spark: SparkSession, dir: String,
       nChunks: Int = 5, threshold: Double = 0.8): DataFrame =
     graft.llm.Dedup.minLabelComponents(
-      streamedPairs(spark, dir, nChunks, threshold)
+      pairsTable(spark, replayed(spark, dir, nChunks, threshold))
         .select(col("doc_a"), col("doc_b"))
         .localCheckpoint())
       .orderBy(col("doc_id"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sink.ParquetSink
 import graft.llm.TextAnalysis
@@ -33,7 +32,7 @@ object StreamingDsir {
     StructField("text", StringType)))
   private val pk = Seq("doc_id", "b")
 
-  /** Drain every unseen chunk (Trigger.AvailableNow, resumable
+  /** Drain every unseen chunk ([[TwinReplay.fold]], resumable
     * checkpoint): per micro-batch, land the batch docs' bucket counts
     * under PK FINAL. `target` is the same any-predicate target the
     * batch selector takes (VERDICT r14 #7) — evaluated per document
@@ -42,24 +41,14 @@ object StreamingDsir {
     * points it at. */
   def runStream(spark: SparkSession, feedDir: String, warehouse: String,
       target: org.apache.spark.sql.Column =
-        col("lang") === "en"): Unit = {
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_dsir_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            TextAnalysis.dsirDocBucketCounts(batch, target = target)
-              .withColumn("block_height", col("doc_id")),
-            s"$warehouse/dsir_db", maxId, pk)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+        col("lang") === "en"): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_dsir_checkpoint") { (batch, maxId) =>
+      ParquetSink.writeBatch(
+        TextAnalysis.dsirDocBucketCounts(batch, target = target)
+          .withColumn("block_height", col("doc_id")),
+        s"$warehouse/dsir_db", maxId, pk)
+    }
 
   /** Weigh the accumulated corpus against the accumulated bucket model
     * — the shared model + fold + top-k over the FINAL facts read. */
@@ -71,26 +60,16 @@ object StreamingDsir {
         .select(col("doc_id"), col("is_target"), col("b"), col("c")), k)
 
   /** Declared query (`t_stream_dsir`): stream the documents table into
-    * the incremental facts MV — two chunks, a mid-stream RESTART from
-    * the same checkpoint, a compaction merge between the runs — then
-    * the shared weighing read. Equals the batch
-    * [[TextAnalysis.tDsirWeights]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
+    * the incremental facts MV under the [[TwinReplay.replay]] restart,
+    * a compaction merge between the runs, then the shared weighing
+    * read. Equals the batch [[TextAnalysis.tDsirWeights]] and shares
+    * its oracle. Correctness-only: its cost is micro-batch
+    * orchestration, not data volume. */
   def tStreamDsir(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("dsir_feed")
-    val warehouse = StreamingDedup.freshDir("dsir_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/dsir_db", pk)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = feedSchema)
-    runStream(spark, feed, warehouse)
-    readWeights(spark, warehouse)
-  }
+      nChunks: Int = 5): DataFrame =
+    readWeights(spark, TwinReplay.replay(spark, "dsir",
+      graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("text")),
+      nChunks, feedSchema)(runStream(spark, _, _))(wh =>
+      ParquetSink.compact(spark, s"$wh/dsir_db", pk)))
 }

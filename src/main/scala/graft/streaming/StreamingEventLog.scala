@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
   StructField, StructType}
 import graft.queries.EventQueries
@@ -29,9 +28,9 @@ import graft.sink.ParquetSink
   *    read would ride the summing/hourly MVs for its bounded grids;
   *    the log IS the reference's own bronze-table design.)
   *
-  * All three: checkpointed file stream, two chunks, a STOP, then the
-  * full feed against the same checkpoint (the mid-stream restart), a
-  * compaction between runs, identical oracle to the batch twin.
+  * All three run the [[TwinReplay.replay]] restart (two chunks, a
+  * STOP, a compaction, then the full feed against the same
+  * checkpoint) and share the oracle of their batch twin.
   */
 object StreamingEventLog {
 
@@ -46,69 +45,39 @@ object StreamingEventLog {
 
   /** Summing-MV stream for the hourly grid (gap fill). */
   def runGridStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val gridPath = s"$warehouse/hourly_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_grid_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = EventQueries.hourlyHighValue(batch)
-            .withColumn("block_height", col("epoch_hour"))
-          ParquetSink.writeSummedBatch(partial, gridPath, maxId, gridKeys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_grid_checkpoint") { (batch, maxId) =>
+      val partial = EventQueries.hourlyHighValue(batch)
+        .withColumn("block_height", col("epoch_hour"))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/hourly_summed",
+        maxId, gridKeys)
+    }
 
   /** Append-only event-log stream (SCD2 / interval coverage). */
   def runLogStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val logPath = s"$warehouse/events_log"
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_log_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            logPath, maxId, Seq("doc_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_log_checkpoint") { (batch, maxId) =>
+      ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
+        s"$warehouse/events_log", maxId, Seq("doc_id"))
+    }
 
   private def feedRows(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.events(spark, dir)
       .select(col("event_id").as("doc_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
 
-  /** Two-run stream (restart mid-feed) + compaction between runs;
-    * returns the warehouse dir. */
-  private def streamTwice(spark: SparkSession, dir: String, tag: String,
-      run: (SparkSession, String, String) => Unit,
-      compact: (SparkSession, String) => Unit,
-      nChunks: Int): String = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir(s"${tag}_feed")
-    val warehouse = StreamingDedup.freshDir(s"${tag}_wh")
-    val evs = feedRows(spark, dir)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    run(spark, feed, warehouse)
-    compact(spark, warehouse)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = feedSchema)
-    run(spark, feed, warehouse)
-    warehouse
+  /** The log twins' MV build: the events feed through the
+    * [[TwinReplay.replay]] restart, the log compacted between runs;
+    * returns the FINAL log. */
+  private def replayedLog(spark: SparkSession, dir: String, tag: String,
+      nChunks: Int): DataFrame = {
+    val warehouse = TwinReplay.replay(spark, tag, feedRows(spark, dir),
+      nChunks, feedSchema)(runLogStream(spark, _, _))(wh =>
+      ParquetSink.compact(spark, s"$wh/events_log", Seq("doc_id")))
+    ParquetSink.readFinal(
+      spark.read.parquet(s"$warehouse/events_log"), Seq("doc_id"))
   }
 
   /** Declared query (`w_stream_gap_fill`) — equals the batch
@@ -116,10 +85,10 @@ object StreamingEventLog {
     * its cost is micro-batch orchestration, not data volume. */
   def wStreamGapFill(spark: SparkSession, dir: String,
       nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "gapfill", runGridStream,
-      (s, wh) => ParquetSink.compactSummed(
-        s, s"$wh/hourly_summed", gridKeys, gridSums),
-      nChunks)
+    val warehouse = TwinReplay.replay(spark, "gapfill", feedRows(spark, dir),
+      nChunks, feedSchema)(runGridStream(spark, _, _))(wh =>
+      ParquetSink.compactSummed(
+        spark, s"$wh/hourly_summed", gridKeys, gridSums))
     val grid = ParquetSink.readSummed(
       spark.read.parquet(s"$warehouse/hourly_summed"), gridKeys, gridSums)
       .select(col("event_type"), col("epoch_hour"), col("hour_dec"))
@@ -129,26 +98,19 @@ object StreamingEventLog {
   /** Declared query (`k_stream_scd2`) — equals the batch
     * [[EventQueries.kScd2History]] and shares its oracle. */
   def kStreamScd2(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "scd2", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.scd2FromEvents(readLog(spark, warehouse)
+      nChunks: Int = 5): DataFrame =
+    EventQueries.scd2FromEvents(replayedLog(spark, dir, "scd2", nChunks)
       .select(col("user_id"), expr("ts DIV 1000").as("ts_us"),
         col("doc_id").as("event_id"), col("event_type")))
-  }
 
   /** Declared query (`w_stream_interval_coverage`) — equals the batch
     * [[EventQueries.wIntervalCoverage]] and shares its oracle. */
   def wStreamIntervalCoverage(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "coverage", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.coverageFromEvents(spark, readLog(spark, warehouse)
-      .select(col("user_id"), expr("ts DIV 1000").as("ts_us"),
-        col("doc_id").as("event_id")))
-  }
+      nChunks: Int = 5): DataFrame =
+    EventQueries.coverageFromEvents(spark,
+      replayedLog(spark, dir, "coverage", nChunks)
+        .select(col("user_id"), expr("ts DIV 1000").as("ts_us"),
+          col("doc_id").as("event_id")))
 
   /** Declared query (`w_stream_funnel`) — equals the batch
     * [[EventQueries.wFunnelSteps]] and shares its oracle. Funnel levels
@@ -157,19 +119,11 @@ object StreamingEventLog {
     * PK-FINAL facts MV the SCD2/coverage twins ride, answered through
     * the SHARED [[EventQueries.funnelFromEvents]] at read. */
   def wStreamFunnel(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "funnel", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
+      nChunks: Int = 5): DataFrame =
     EventQueries.funnelFromEvents(spark,
-      readLog(spark, warehouse)
+      replayedLog(spark, dir, "funnel", nChunks)
         .select(col("user_id"), col("ts"), col("event_type")),
       86400L * 1000000000L)
-  }
-
-  private def readLog(spark: SparkSession, warehouse: String): DataFrame =
-    ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/events_log"), Seq("doc_id"))
 
   /** Declared query (`w_stream_rfm`) — equals the batch
     * [[EventQueries.wRfm]] and shares its oracle. Quartile scores are
@@ -178,15 +132,11 @@ object StreamingEventLog {
     * the SCD2/coverage/funnel twins, answered through the SHARED
     * [[EventQueries.rfmFromPurchases]] at read. */
   def wStreamRfm(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    val warehouse = streamTwice(spark, dir, "rfm", runLogStream,
-      (s, wh) => ParquetSink.compact(s, s"$wh/events_log", Seq("doc_id")),
-      nChunks)
-    EventQueries.rfmFromPurchases(readLog(spark, warehouse)
+      nChunks: Int = 5): DataFrame =
+    EventQueries.rfmFromPurchases(replayedLog(spark, dir, "rfm", nChunks)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), expr("ts DIV 1000L").as("ts_us"),
         col("value")))
-  }
 
   // ---------------- streaming tombstone deletes ----------------------
 
@@ -234,31 +184,21 @@ object StreamingEventLog {
     * under its original seq and FINAL's deterministic tie-break absorbs
     * it. */
   def runTombstoneStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val sinkPath = s"$warehouse/tomb"
-    val query = StreamingDedup.readDocStream(spark, feedDir,
-        tombstoneFeedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_tomb_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val seqs = batch.select(col("seq")).distinct()
-            .collect().map(_.getLong(0)).sorted
-          seqs.foreach { s =>
-            ParquetSink.writeBatch(
-              batch.filter(col("seq") === s)
-                .select(col("event_id"), col("user_id"),
-                  col("event_type"), col("value"), col("block_height"),
-                  col("is_deleted")),
-              sinkPath, s, Seq("event_id"))
-          }
-        }
+      warehouse: String): Unit =
+    TwinReplay.fold(
+      StreamingDedup.readDocStream(spark, feedDir, tombstoneFeedSchema),
+      s"$warehouse/_tomb_checkpoint") { (batch, _) =>
+      val seqs = batch.select(col("seq")).distinct()
+        .collect().map(_.getLong(0)).sorted
+      seqs.foreach { s =>
+        ParquetSink.writeBatch(
+          batch.filter(col("seq") === s)
+            .select(col("event_id"), col("user_id"),
+              col("event_type"), col("value"), col("block_height"),
+              col("is_deleted")),
+          s"$warehouse/tomb", s, Seq("event_id"))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+    }
 
   /** Declared query (`k_stream_tombstone`) — the tombstone-DELETE path
     * through the REAL streaming engine, same oracle as the batch
@@ -272,17 +212,10 @@ object StreamingEventLog {
       nChunks: Int = 8): DataFrame = {
     import graft.validate.Validation.h60
     import graft.Tables.dsum
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("tomb_feed")
-    val warehouse = StreamingDedup.freshDir("tomb_wh")
-    val waves = tombstoneWaves(spark, dir)
-    StreamingDedup.writeDocChunks(spark, waves, feed, nChunks,
-      takeChunks = nChunks - 1, schema = tombstoneFeedSchema)
-    runTombstoneStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/tomb", Seq("event_id"))
-    StreamingDedup.writeDocChunks(spark, waves, feed, nChunks,
-      schema = tombstoneFeedSchema)
-    runTombstoneStream(spark, feed, warehouse)
+    val warehouse = TwinReplay.replay(spark, "tomb", tombstoneWaves(spark, dir),
+      nChunks, tombstoneFeedSchema, firstWave = nChunks - 1)(
+      runTombstoneStream(spark, _, _))(wh =>
+      ParquetSink.compact(spark, s"$wh/tomb", Seq("event_id")))
     ParquetSink.readFinalWithDeletes(
       spark.read.parquet(s"$warehouse/tomb"), Seq("event_id"))
       .agg(

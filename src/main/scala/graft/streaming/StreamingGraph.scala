@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 import graft.sink.ParquetSink
@@ -59,58 +58,49 @@ object StreamingGraph {
         .toDF("event_type", "bkt", "user_id")
     }
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
+  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
     * checkpoint), folding each micro-batch's NEW occupancy facts into
     * the fact table and their pair deltas into the summing MV. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit = {
     val factsPath = s"$warehouse/graph_facts"
-    val pairsPath = s"$warehouse/graph_pairs_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, eventSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_graph_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val existing = factsOr(spark, factsPath)
-          val newFacts = batch
-            .select(col("event_type"),
-              expr(s"ts DIV ${CoOccurrenceMv.BucketNs}L").as("bkt"),
-              col("user_id"))
-            .distinct()
-            .join(existing, factPk, "left_anti")
-            .localCheckpoint() // read 3x (old-join, new-join, append)
-          if (!newFacts.isEmpty) {
-            val vsOld = newFacts.as("n")
-              .join(existing.as("o"),
-                col("n.event_type") === col("o.event_type") &&
-                  col("n.bkt") === col("o.bkt") &&
-                  col("n.user_id") =!= col("o.user_id"))
-              .select(
-                least(col("n.user_id"), col("o.user_id")).as("u"),
-                greatest(col("n.user_id"), col("o.user_id")).as("v"))
-            val vsNew = newFacts.as("x")
-              .join(newFacts.as("y"),
-                col("x.event_type") === col("y.event_type") &&
-                  col("x.bkt") === col("y.bkt") &&
-                  col("x.user_id") < col("y.user_id"))
-              .select(col("x.user_id").as("u"), col("y.user_id").as("v"))
-            val deltas = vsOld.unionByName(vsNew)
-              .groupBy(col("u"), col("v"))
-              .agg(count(lit(1)).as("nco"))
-              .withColumn("block_height", pmod(col("u"), lit(100L)))
-            // pair deltas FIRST (see object scaladoc: replay safety)
-            ParquetSink.writeSummedBatch(deltas, pairsPath, maxId, pairKeys)
-            ParquetSink.writeBatch(
-              newFacts.withColumn("block_height", pmod(col("bkt"), lit(100L))),
-              factsPath, maxId, factPk)
-          }
-        }
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_graph_checkpoint") { (batch, maxId) =>
+      val existing = factsOr(spark, factsPath)
+      val newFacts = batch
+        .select(col("event_type"),
+          expr(s"ts DIV ${CoOccurrenceMv.BucketNs}L").as("bkt"),
+          col("user_id"))
+        .distinct()
+        .join(existing, factPk, "left_anti")
+        .localCheckpoint() // read 3x (old-join, new-join, append)
+      if (!newFacts.isEmpty) {
+        val vsOld = newFacts.as("n")
+          .join(existing.as("o"),
+            col("n.event_type") === col("o.event_type") &&
+              col("n.bkt") === col("o.bkt") &&
+              col("n.user_id") =!= col("o.user_id"))
+          .select(
+            least(col("n.user_id"), col("o.user_id")).as("u"),
+            greatest(col("n.user_id"), col("o.user_id")).as("v"))
+        val vsNew = newFacts.as("x")
+          .join(newFacts.as("y"),
+            col("x.event_type") === col("y.event_type") &&
+              col("x.bkt") === col("y.bkt") &&
+              col("x.user_id") < col("y.user_id"))
+          .select(col("x.user_id").as("u"), col("y.user_id").as("v"))
+        val deltas = vsOld.unionByName(vsNew)
+          .groupBy(col("u"), col("v"))
+          .agg(count(lit(1)).as("nco"))
+          .withColumn("block_height", pmod(col("u"), lit(100L)))
+        // pair deltas FIRST (see object scaladoc: replay safety)
+        ParquetSink.writeSummedBatch(deltas,
+          s"$warehouse/graph_pairs_summed", maxId, pairKeys)
+        ParquetSink.writeBatch(
+          newFacts.withColumn("block_height", pmod(col("bkt"), lit(100L))),
+          factsPath, maxId, factPk)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    }
   }
 
   /** The maintained edge table: summed pair counts through THE shared
@@ -122,29 +112,20 @@ object StreamingGraph {
         pairKeys, pairSums))
 
   /** Stream the events table into the incrementally-maintained graph
-    * (two chunks, a mid-stream restart from the same checkpoint, a
-    * compaction of BOTH state tables between the runs) and return the
-    * accumulated edge relation — shared by the declared twin and the
-    * suite's streamed ≡ batch pins. */
+    * under the [[TwinReplay.replay]] restart, BOTH state tables
+    * compacted between the runs, and return the accumulated edge
+    * relation — shared by the declared twins and the suite's streamed
+    * ≡ batch pins. */
   private[graft] def streamedEdges(spark: SparkSession, dir: String,
-      nChunks: Int): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("graph_feed")
-    val warehouse = StreamingDedup.freshDir("graph_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-        col("user_id"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/graph_pairs_summed",
-      pairKeys, pairSums)
-    ParquetSink.compact(spark, s"$warehouse/graph_facts", factPk)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    edgesTable(spark, warehouse)
-  }
+      nChunks: Int): DataFrame =
+    edgesTable(spark, TwinReplay.replay(spark, "graph",
+      graft.Tables.events(spark, dir).select(col("event_id").as("doc_id"),
+        col("ts"), col("event_type"), col("user_id")),
+      nChunks, eventSchema)(runStream(spark, _, _)) { wh =>
+      ParquetSink.compactSummed(spark, s"$wh/graph_pairs_summed",
+        pairKeys, pairSums)
+      ParquetSink.compact(spark, s"$wh/graph_facts", factPk)
+    })
 
   /** Declared query (`g_stream_pagerank`): PageRank over the
     * incrementally-maintained edge MV — two chunk waves, a mid-stream

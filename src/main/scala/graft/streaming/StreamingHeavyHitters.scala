@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sink.ParquetSink
 import graft.llm.TextAnalysis
@@ -36,30 +35,20 @@ object StreamingHeavyHitters {
   private val keys = Seq("token")
   private val sums = Seq("tf")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
+  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
     * checkpoint), folding each micro-batch into the summing table. */
   def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val path = s"$warehouse/vocab_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, hhSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_vocab_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = batch
-            .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-            .groupBy(col("token"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("block_height", lit(maxId))
-          ParquetSink.writeSummedBatch(partial, path, maxId, keys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, hhSchema),
+      s"$warehouse/_vocab_checkpoint") { (batch, maxId) =>
+      val partial = batch
+        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
+        .groupBy(col("token"))
+        .agg(count(lit(1)).as("tf"))
+        .withColumn("block_height", lit(maxId))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/vocab_summed",
+        maxId, keys)
+    }
 
   /** The φ-threshold read over the accumulated summed vocabulary —
     * shared by the declared query and the randomized soak. */
@@ -77,27 +66,17 @@ object StreamingHeavyHitters {
   }
 
   /** Declared query (`t_stream_heavy_hitters`): stream the documents
-    * table through the incremental vocabulary MV — two chunks, a
-    * mid-stream restart from the same checkpoint (only unseen chunks
-    * replay), a compaction MERGE between the two runs — then the
-    * φ-threshold read over the summed counts. Equals the batch
-    * [[graft.llm.TextAnalysis.tHeavyHitters]] and shares its oracle.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
+    * table through the incremental vocabulary MV under the
+    * [[TwinReplay.replay]] restart, a compaction MERGE between the two
+    * runs, then the φ-threshold read over the summed counts. Equals
+    * the batch [[graft.llm.TextAnalysis.tHeavyHitters]] and shares its
+    * oracle. Correctness-only: its cost is micro-batch orchestration,
+    * not data volume. */
   def tStreamHeavyHitters(spark: SparkSession, dir: String,
-      phi: Double = 0.02, nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("hh_feed")
-    val warehouse = StreamingDedup.freshDir("hh_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = hhSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/vocab_summed", keys, sums)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = hhSchema)
-    runStream(spark, feed, warehouse)
-    readHeavyHitters(spark, warehouse, phi)
-  }
+      phi: Double = 0.02, nChunks: Int = 5): DataFrame =
+    readHeavyHitters(spark, TwinReplay.replay(spark, "hh",
+      graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")),
+      nChunks, hhSchema)(runStream(spark, _, _))(wh =>
+      ParquetSink.compactSummed(spark, s"$wh/vocab_summed", keys, sums)),
+      phi)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.llm.Dedup
 import graft.sink.ParquetSink
 
@@ -82,7 +81,7 @@ object StreamingPrefix {
   }
 
   /** Run the streaming prefix join over every unconsumed chunk file,
-    * then stop (Trigger.AvailableNow — same resume contract as
+    * then stop ([[TwinReplay.fold]] — same resume contract as
     * [[StreamingDedup.runStream]]). Warehouse tables: `prefix_docs`,
     * `prefix_index` (full shingle rows, PK (doc_id, h)),
     * `prefix_pairs` (verified output, PK (doc_a, doc_b)). */
@@ -91,68 +90,47 @@ object StreamingPrefix {
       threshold: Double = 0.8): Unit = {
     val docsPath = s"$warehouse/prefix_docs"
     val indexPath = s"$warehouse/prefix_index"
-    val pairsPath = s"$warehouse/prefix_pairs"
-    val query = StreamingDedup.readDocStream(spark, docsDir)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_prefix_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          // corpus first: the verify stage below must see this batch
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            docsPath, maxId, Seq("doc_id"))
-          val allDocs = ParquetSink.readFinal(
-            spark.read.parquet(docsPath), Seq("doc_id"))
-            .select("doc_id", "text")
-          val state =
-            if (ParquetSink.hasData(indexPath))
-              spark.read.parquet(indexPath)
-            else emptyIndex(spark)
-          val (newRows, pairs, cached) =
-            processBatchTracked(batch, state, allDocs, gramHashes, threshold)
-          ParquetSink.writeBatch(
-            pairs.withColumn("block_height", col("doc_b")),
-            pairsPath, maxId, StreamingDedup.pairsPk)
-          // index state commits last: a crash mid-batch replays against
-          // a state that has not seen the batch; replayed rows are
-          // identical (deterministic shingles) — FINAL-safe
-          ParquetSink.writeBatch(
-            newRows.withColumn("block_height", col("doc_id")),
-            indexPath, maxId, Seq("doc_id", "h"))
-          cached.foreach(_.unpersist())
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  private def emptyIndex(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Seq.empty[(Long, Long)].toDF("doc_id", "h")
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, docsDir),
+      s"$warehouse/_prefix_checkpoint") { (batch, maxId) =>
+      // corpus first: the verify stage below must see this batch
+      ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
+        docsPath, maxId, Seq("doc_id"))
+      val allDocs = ParquetSink.readFinal(
+        spark.read.parquet(docsPath), Seq("doc_id"))
+        .select("doc_id", "text")
+      val state =
+        if (ParquetSink.hasData(indexPath)) spark.read.parquet(indexPath)
+        else Seq.empty[(Long, Long)].toDF("doc_id", "h")
+      val (newRows, pairs, cached) =
+        processBatchTracked(batch, state, allDocs, gramHashes, threshold)
+      ParquetSink.writeBatch(pairs.withColumn("block_height", col("doc_b")),
+        s"$warehouse/prefix_pairs", maxId, StreamingDedup.pairsPk)
+      // index state commits last: a crash mid-batch replays against
+      // a state that has not seen the batch; replayed rows are
+      // identical (deterministic shingles) — FINAL-safe
+      ParquetSink.writeBatch(
+        newRows.withColumn("block_height", col("doc_id")),
+        indexPath, maxId, Seq("doc_id", "h"))
+      cached.foreach(_.unpersist())
+    }
   }
 
   /** Declared query (`d_stream_prefix`): stream the documents table
-    * through the real prefix join — checkpointed file source, two
-    * chunks, a stop, then the full feed against the same checkpoint
-    * (the mid-stream restart) — and return the accumulated pairs.
-    * Oracle: the exact all-pairs Jaccard, same as `d_prefix_pairs` —
-    * four independent routes (batch LSH, batch prefix, streamed LSH,
-    * streamed prefix) to one verified answer. Correctness-only
-    * (excluded from Bench): its cost is micro-batch orchestration, not
-    * data volume; the batch twin is the benched operator. */
+    * through the real prefix join under the [[TwinReplay.replay]]
+    * restart (two chunks, a stop, then the full feed against the same
+    * checkpoint) and return the accumulated pairs. Oracle: the exact
+    * all-pairs Jaccard, same as `d_prefix_pairs` — four independent
+    * routes (batch LSH, batch prefix, streamed LSH, streamed prefix)
+    * to one verified answer. Correctness-only (excluded from Bench):
+    * its cost is micro-batch orchestration, not data volume; the batch
+    * twin is the benched operator. */
   def dStreamPrefix(spark: SparkSession, dir: String,
       nChunks: Int = 5, threshold: Double = 0.8): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("prefix_feed")
-    val warehouse = StreamingDedup.freshDir("prefix_wh")
-    val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks, takeChunks = 2)
-    runStream(spark, feed, warehouse, threshold = threshold)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks)
-    runStream(spark, feed, warehouse, threshold = threshold)
+    val warehouse = TwinReplay.replay(spark, "prefix",
+      graft.Tables.documents(spark, dir).select("doc_id", "text"),
+      nChunks, StreamingDedup.docSchema)(
+      runStream(spark, _, _, threshold = threshold))(_ => ())
     ParquetSink.readFinal(
       spark.read.parquet(s"$warehouse/prefix_pairs"), StreamingDedup.pairsPk)
       .select("doc_a", "doc_b", "jaccard")

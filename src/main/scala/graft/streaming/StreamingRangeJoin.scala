@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.sink.ParquetSink
 
@@ -47,11 +46,10 @@ object StreamingRangeJoin {
   private val pairPk = Seq("event_a", "event_b")
 
   /** Drain every unseen chunk file through the watermarked two-stream
-    * join (Trigger.AvailableNow, resumable checkpoint — join state
+    * join ([[TwinReplay.fold]], resumable checkpoint — join state
     * included). */
   def runStream(spark: SparkSession, feedDir: String, warehouse: String,
       windowUs: Long): Unit = {
-    val path = s"$warehouse/range_pairs"
     // window + 1 h slack, in µs — the delay scales with the caller's
     // window so the eviction slack can never drift below the contract
     val delay = s"${windowUs + 3600000000L} microseconds"
@@ -65,62 +63,46 @@ object StreamingRangeJoin {
     // interval terms, NOTHING else (ADVICE r14 #1): StreamingJoinHelper
     // solves each non-equi conjunct for a state-eviction bound by
     // substituting the watermark and EVALUATING the rest — any term
-    // carrying a non-watermark attribute (the old `abs(ts_a−ts_b)`
-    // restatement, or even the `event_a < event_b` tie-break) throws
-    // cannotEvaluateExpressionError into the log at WARN on every run.
-    // The interval pair alone is the full predicate anyway: t_x =
-    // timestamp_micros(ts_x) is order-isomorphic to the Long µs value,
-    // so it IS |ts_a − ts_b| ≤ windowUs exactly. The `event_a <
-    // event_b` tie-break moves into the foreachBatch BODY (batch
-    // domain): a post-join .filter on the stream side gets pushed
-    // right back into the join condition by PushPredicateThroughJoin,
-    // re-creating the noise. State is per-INPUT-row, so buffering both
-    // orientations costs nothing extra; the batch filter drops the
-    // mirrored/self pairs before the sink.
+    // carrying a non-watermark attribute (even the `event_a < event_b`
+    // tie-break) throws cannotEvaluateExpressionError into the log at
+    // WARN on every run. The interval pair alone is the full predicate
+    // anyway: t_x = timestamp_micros(ts_x) is order-isomorphic to the
+    // Long µs value, so it IS |ts_a − ts_b| ≤ windowUs exactly. The
+    // tie-break therefore runs in the fold BODY (batch domain): a
+    // filter on the streaming frame gets pushed right back into the
+    // join condition by PushPredicateThroughJoin, re-creating the
+    // noise. State is per-INPUT-row, so buffering both orientations
+    // costs nothing extra; the body drops the mirrored/self pairs
+    // before the sink (the batch's max event_b, the insert seq, may
+    // then come from a self pair — FINAL reads are seq-order only).
     val joined = side("a").join(side("b"),
       col("u_a") === col("u_b") &&
         col("t_b") >= col("t_a") - expr(s"INTERVAL ${windowUs} MICROSECOND") &&
         col("t_b") <= col("t_a") + expr(s"INTERVAL ${windowUs} MICROSECOND"))
       .select(col("u_a").as("user_id"), col("event_a"), col("event_b"),
         (col("ts_b") - col("ts_a")).as("gap_us"))
-    val query = joined.writeStream
-      .option("checkpointLocation", s"$warehouse/_range_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.filter(col("event_a") < col("event_b"))
-          .localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("event_b"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("event_b")),
-            path, maxId, pairPk)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    TwinReplay.fold(joined, s"$warehouse/_range_checkpoint",
+      orderCol = "event_b") { (batch, maxId) =>
+      ParquetSink.writeBatch(batch.filter(col("event_a") < col("event_b"))
+        .withColumn("block_height", col("event_b")),
+        s"$warehouse/range_pairs", maxId, pairPk)
+    }
   }
 
   /** Declared query (`w_stream_range_join`): stream the events table
-    * through the watermarked two-stream join — two chunks, a
-    * mid-stream restart from the same checkpoint (join STATE restored,
-    * so stop-straddling pairs are found), then the full feed — and
-    * read the accumulated FINAL pair table. Equals the batch
+    * through the watermarked two-stream join under the
+    * [[TwinReplay.replay]] restart (join STATE restored, so
+    * stop-straddling pairs are found) and read the accumulated FINAL
+    * pair table. Equals the batch
     * [[graft.queries.EventQueries.wRangeJoin]] and shares its oracle.
     * Correctness-only: its cost is micro-batch orchestration, not data
     * volume. */
   def wStreamRangeJoin(spark: SparkSession, dir: String,
       windowUs: Long = 3600000000L, nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("range_feed")
-    val warehouse = StreamingDedup.freshDir("range_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("user_id"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runStream(spark, feed, warehouse, windowUs)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = feedSchema)
-    runStream(spark, feed, warehouse, windowUs)
+    val warehouse = TwinReplay.replay(spark, "range",
+      graft.Tables.events(spark, dir)
+        .select(col("event_id").as("doc_id"), col("ts"), col("user_id")),
+      nChunks, feedSchema)(runStream(spark, _, _, windowUs))(_ => ())
     ParquetSink.readFinal(spark.read.parquet(s"$warehouse/range_pairs"),
         pairPk)
       .select(col("user_id"), col("event_a"), col("event_b"), col("gap_us"))

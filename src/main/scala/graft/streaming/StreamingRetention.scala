@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
   StructField, StructType}
 import graft.sink.ParquetSink
@@ -36,86 +35,61 @@ object StreamingRetention {
     StructField("value", DoubleType)))
   private val pk = Seq("user_id", "epoch_day")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
+  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
     * checkpoint), folding each micro-batch's distinct (user, day)
     * facts into the activity table (PK FINAL — replays invisible). */
   def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val actPath = s"$warehouse/retention_activity"
-    val query = StreamingDedup.readDocStream(spark, feedDir, eventSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_retention_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          // distinct facts of THIS batch only — the per-batch increment
-          val partial = batch
-            .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
-            .select(col("user_id"), col("epoch_day"))
-            .distinct()
-            .withColumn("block_height", col("epoch_day"))
-          ParquetSink.writeBatch(partial, actPath, maxId, pk)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_retention_checkpoint") { (batch, maxId) =>
+      // distinct facts of THIS batch only — the per-batch increment
+      val partial = batch
+        .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
+        .select(col("user_id"), col("epoch_day"))
+        .distinct()
+        .withColumn("block_height", col("epoch_day"))
+      ParquetSink.writeBatch(partial, s"$warehouse/retention_activity",
+        maxId, pk)
+    }
+
+  /** The activity MV under the [[TwinReplay.replay]] restart — with or
+    * without a compaction between the runs — read FINAL as the
+    * (user_id, epoch_day) fact set. */
+  private def replayedActivity(spark: SparkSession, dir: String,
+      tag: String, nChunks: Int, compact: Boolean): DataFrame = {
+    val warehouse = TwinReplay.replay(spark, tag,
+      graft.Tables.events(spark, dir).select(col("event_id").as("doc_id"),
+        col("ts"), col("user_id"), col("event_type"), col("value")),
+      nChunks, eventSchema)(runStream(spark, _, _))(wh =>
+      if (compact)
+        ParquetSink.compact(spark, s"$wh/retention_activity", pk))
+    ParquetSink.readFinal(
+      spark.read.parquet(s"$warehouse/retention_activity"), pk)
+      .select(col("user_id"), col("epoch_day"))
   }
 
   /** Declared query (`g_stream_retention`): stream the events table
-    * through the activity MV — two chunks, a mid-stream restart from
-    * the same checkpoint — then answer the cohort matrix from the
-    * accumulated activity set. Same oracle as `g_retention_cohorts`.
-    * Correctness-only: its cost is micro-batch orchestration, not data
-    * volume. */
+    * through the activity MV ([[TwinReplay.replay]], no compaction),
+    * then answer the cohort matrix from the accumulated activity set.
+    * Same oracle as `g_retention_cohorts`. Correctness-only: its cost
+    * is micro-batch orchestration, not data volume. */
   def gStreamRetention(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("retention_feed")
-    val warehouse = StreamingDedup.freshDir("retention_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    val act = ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/retention_activity"), pk)
-      .select(col("user_id"), col("epoch_day"))
-    graft.queries.EventQueries.retentionFromActivity(act)
-  }
+      nChunks: Int = 5): DataFrame =
+    graft.queries.EventQueries.retentionFromActivity(replayedActivity(
+      spark, dir, "retention", nChunks, compact = false))
 
   /** Declared query (`w_stream_active_users`): the SAME activity MV
     * (distinct (user, day) facts under PK FINAL — append-only,
-    * replay-invisible), answered as the DAU/WAU report through the
-    * shared [[graft.queries.EventQueries.activeUsersFromFacts]]. The
+    * replay-invisible; compacted between the runs), answered as the
+    * DAU/WAU report through the shared
+    * [[graft.queries.EventQueries.activeUsersFromFacts]]. The
     * trailing-distinct window is exactly the kind of result a sink
     * could never maintain incrementally (one late fact shifts seven
     * days of wau), while the fact set absorbs replays for free — the
     * retention precedent applied to a second non-additive report.
     * Same oracle as `w_active_users`. Correctness-only. */
   def wStreamActiveUsers(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("activeusers_feed")
-    val warehouse = StreamingDedup.freshDir("activeusers_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = 2, schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/retention_activity", pk)
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      schema = eventSchema)
-    runStream(spark, feed, warehouse)
-    val act = ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/retention_activity"), pk)
-      .select(col("user_id"), col("epoch_day"))
-    graft.queries.EventQueries.activeUsersFromFacts(act)
-  }
+      nChunks: Int = 5): DataFrame =
+    graft.queries.EventQueries.activeUsersFromFacts(replayedActivity(
+      spark, dir, "activeusers", nChunks, compact = true))
 }

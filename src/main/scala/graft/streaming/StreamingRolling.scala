@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
   StringType, StructField, StructType}
 import graft.sink.ParquetSink
@@ -28,7 +27,8 @@ object StreamingRolling {
 
   // the batch query's own day constant — shared, not re-declared
   private val NanosPerDay = graft.queries.EventQueries.NanosPerDay
-  private val eventSchema = StructType(Seq(
+  /** The rolling grid's event feed schema (`doc_id` = event_id). */
+  val eventSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), // event_id; the feed writer keys on doc_id
     StructField("ts", LongType), // epoch nanos (feed carries the normalized Long)
     StructField("event_type", StringType),
@@ -36,41 +36,22 @@ object StreamingRolling {
   private val keys = Seq("event_type", "epoch_day")
   private val sums = Seq("day_dec")
 
-  /** Drain every unseen chunk file (Trigger.AvailableNow, resumable
+  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
     * checkpoint), folding each micro-batch into the daily summing
     * grid. */
   def runStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val gridPath = s"$warehouse/rolling_summed"
-    val query = StreamingDedup.readDocStream(spark, feedDir, eventSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_rolling_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = batch
-            .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
-            .groupBy(col("event_type"), col("epoch_day"))
-            .agg(sum(col("value").cast(DecimalType(28, 2))).as("day_dec"))
-            .withColumn("day_dec", col("day_dec").cast(DecimalType(28, 2)))
-            .withColumn("block_height", col("epoch_day"))
-          ParquetSink.writeSummedBatch(partial, gridPath, maxId, keys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Write the first `takeChunks` of the deterministic chunk sequence
-    * into the feed (idempotent per chunk: same corpus + nChunks →
-    * byte-identical files, so re-writes of already-present chunks are
-    * invisible to the stream's file tracking). */
-  def writeWave(spark: SparkSession, evs: DataFrame, feed: String,
-      nChunks: Int, takeChunks: Int): Unit =
-    StreamingDedup.writeDocChunks(spark, evs, feed, nChunks,
-      takeChunks = takeChunks, schema = eventSchema)
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_rolling_checkpoint") { (batch, maxId) =>
+      val partial = batch
+        .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
+        .groupBy(col("event_type"), col("epoch_day"))
+        .agg(sum(col("value").cast(DecimalType(28, 2))).as("day_dec"))
+        .withColumn("day_dec", col("day_dec").cast(DecimalType(28, 2)))
+        .withColumn("block_height", col("epoch_day"))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/rolling_summed",
+        maxId, keys)
+    }
 
   /** The read-time RANGE-frame window over the summed daily grid. */
   def readRolling(spark: SparkSession, warehouse: String): DataFrame = {
@@ -86,26 +67,17 @@ object StreamingRolling {
   }
 
   /** Declared query (`w_stream_rolling_7d`): stream the events table
-    * through the incremental grid — two chunks, a mid-stream restart
-    * from the same checkpoint (only unseen chunks replay), a compaction
-    * MERGE between the two runs — then apply the RANGE-frame window
-    * over the summed grid. Equals the batch
+    * through the incremental grid under the [[TwinReplay.replay]]
+    * restart, a compaction MERGE between the two runs, then apply the
+    * RANGE-frame window over the summed grid. Equals the batch
     * [[graft.queries.EventQueries.wRolling7d]] and shares its oracle.
     * Correctness-only: its cost is micro-batch orchestration, not data
     * volume. */
   def wStreamRolling7d(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("rolling_feed")
-    val warehouse = StreamingDedup.freshDir("rolling_wh")
-    val evs = graft.Tables.events(spark, dir)
-      .select(col("event_id").as("doc_id"), col("ts"), col("event_type"),
-        col("value"))
-    writeWave(spark, evs, feed, nChunks, takeChunks = 2)
-    runStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/rolling_summed", keys, sums)
-    writeWave(spark, evs, feed, nChunks, takeChunks = Int.MaxValue)
-    runStream(spark, feed, warehouse)
-    readRolling(spark, warehouse)
-  }
+      nChunks: Int = 5): DataFrame =
+    readRolling(spark, TwinReplay.replay(spark, "rolling",
+      graft.Tables.events(spark, dir).select(col("event_id").as("doc_id"),
+        col("ts"), col("event_type"), col("value")),
+      nChunks, eventSchema)(runStream(spark, _, _))(wh =>
+      ParquetSink.compactSummed(spark, s"$wh/rolling_summed", keys, sums)))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 import graft.sink.ParquetSink
@@ -21,9 +20,9 @@ import graft.sink.ParquetSink
   * [[graft.llm.TextAnalysis.paretoFromPoints]]) run at read —
   * identical oracles to the batch twins, replay-idempotent by key.
   *
-  * Run shape: checkpointed file stream, two chunks, STOP, compaction,
-  * then the full feed against the same checkpoint (the mid-stream
-  * restart) — the suite additionally pins streamed ≡ batch at sf0.001.
+  * Run shape: the [[TwinReplay.replay]] restart with a compaction
+  * between the runs — the suite additionally pins streamed ≡ batch at
+  * sf0.001.
   */
 object StreamingSample {
 
@@ -39,70 +38,45 @@ object StreamingSample {
   /** Append-only doc-fact stream under PK FINAL (schema per twin). */
   def runFactsStream(spark: SparkSession, feedDir: String,
       warehouse: String,
-      schema: StructType = feedSchema): Unit = {
-    val path = s"$warehouse/sample_facts"
-    val query = StreamingDedup.readDocStream(spark, feedDir, schema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_facts_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            path, maxId, Seq("doc_id"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+      schema: StructType = feedSchema): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, schema),
+      s"$warehouse/_facts_checkpoint") { (batch, maxId) =>
+      ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
+        s"$warehouse/sample_facts", maxId, Seq("doc_id"))
+    }
+
+  /** The fact log under the [[TwinReplay.replay]] restart, compacted
+    * between the runs; returns the FINAL log. */
+  private def replayedFacts(spark: SparkSession, tag: String,
+      facts: => DataFrame, nChunks: Int, schema: StructType): DataFrame = {
+    val warehouse = TwinReplay.replay(spark, tag, facts, nChunks, schema)(
+      runFactsStream(spark, _, _, schema))(wh =>
+      ParquetSink.compact(spark, s"$wh/sample_facts", Seq("doc_id")))
+    ParquetSink.readFinal(
+      spark.read.parquet(s"$warehouse/sample_facts"), Seq("doc_id"))
   }
 
   /** Declared query (`t_stream_sample_priority`) — equals the batch
     * [[graft.llm.TextAnalysis.tSamplePriority]] and shares its oracle.
     * Correctness-only: its cost is micro-batch orchestration. */
   def tStreamSamplePriority(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("sample_feed")
-    val warehouse = StreamingDedup.freshDir("sample_wh")
-    val facts = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runFactsStream(spark, feed, warehouse)
-    ParquetSink.compact(spark, s"$warehouse/sample_facts", Seq("doc_id"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      schema = feedSchema)
-    runFactsStream(spark, feed, warehouse)
-    val log = ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/sample_facts"), Seq("doc_id"))
+      nChunks: Int = 5): DataFrame =
     graft.llm.TextAnalysis.samplePriorityFromFacts(
-      log.select(col("doc_id"), col("lang"), col("n_chars")))
-  }
+      replayedFacts(spark, "sample", graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("n_chars")),
+        nChunks, feedSchema)
+        .select(col("doc_id"), col("lang"), col("n_chars")))
 
   /** Declared query (`t_stream_pareto`) — equals the batch
     * [[graft.llm.TextAnalysis.tParetoFrontier]] and shares its oracle.
     * Correctness-only: its cost is micro-batch orchestration. */
   def tStreamPareto(spark: SparkSession, dir: String,
-      nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("pareto_feed")
-    val warehouse = StreamingDedup.freshDir("pareto_wh")
-    val facts = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"),
-        size(graft.llm.TextAnalysis.tokens(col("text"))).cast("long")
-          .as("n_tokens"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      takeChunks = 2, schema = paretoSchema)
-    runFactsStream(spark, feed, warehouse, paretoSchema)
-    ParquetSink.compact(spark, s"$warehouse/sample_facts", Seq("doc_id"))
-    StreamingDedup.writeDocChunks(spark, facts, feed, nChunks,
-      schema = paretoSchema)
-    runFactsStream(spark, feed, warehouse, paretoSchema)
-    val log = ParquetSink.readFinal(
-      spark.read.parquet(s"$warehouse/sample_facts"), Seq("doc_id"))
+      nChunks: Int = 5): DataFrame =
     graft.llm.TextAnalysis.paretoFromPoints(
-      log.select(col("doc_id"), col("n_chars"), col("n_tokens")))
-  }
+      replayedFacts(spark, "pareto", graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("n_chars"),
+          size(graft.llm.TextAnalysis.tokens(col("text"))).cast("long")
+            .as("n_tokens")),
+        nChunks, paretoSchema)
+        .select(col("doc_id"), col("n_chars"), col("n_tokens")))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.llm.Dedup
 import graft.sink.ParquetSink
 
@@ -35,56 +34,34 @@ import graft.sink.ParquetSink
 object StreamingSpans {
 
   /** Run the streaming index build over every unconsumed chunk file,
-    * then stop (Trigger.AvailableNow — the [[StreamingDedup.runStream]]
+    * then stop ([[TwinReplay.fold]] — the [[StreamingDedup.runStream]]
     * resume contract). Warehouse tables: `spans_docs` (PK doc_id),
     * `spans_index` ((doc_id, pos, win), PK (doc_id, pos)). */
   def runStream(spark: SparkSession, docsDir: String,
-      warehouse: String): Unit = {
-    val docsPath = s"$warehouse/spans_docs"
-    val indexPath = s"$warehouse/spans_index"
-    val query = StreamingDedup.readDocStream(spark, docsDir)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_spans_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          ParquetSink.writeBatch(
-            batch.withColumn("block_height", col("doc_id")),
-            docsPath, maxId, Seq("doc_id"))
-          // index commits second: a crash between the writes replays the
-          // batch, regenerating identical window rows — FINAL-safe
-          ParquetSink.writeBatch(
-            Dedup.windowRows(batch)
-              .withColumn("block_height", col("doc_id")),
-            indexPath, maxId, Seq("doc_id", "pos"))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, docsDir),
+      s"$warehouse/_spans_checkpoint") { (batch, maxId) =>
+      ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
+        s"$warehouse/spans_docs", maxId, Seq("doc_id"))
+      // index commits second: a crash between the writes replays the
+      // batch, regenerating identical window rows — FINAL-safe
+      ParquetSink.writeBatch(
+        Dedup.windowRows(batch).withColumn("block_height", col("doc_id")),
+        s"$warehouse/spans_index", maxId, Seq("doc_id", "pos"))
+    }
 
   /** Declared query (`d_stream_spans`): stream the MODELED corpus (the
     * batch family's base + remix relation — input modeling, not
-    * operator work) through the real index MV — checkpointed file
-    * source, two chunks, a stop, then the full feed against the same
-    * checkpoint (the mid-stream restart) — and answer the span report
-    * from the accumulated index. Oracle: same SQL as `d_dup_spans`.
+    * operator work) through the real index MV under the
+    * [[TwinReplay.replay]] restart, and answer the span report from
+    * the accumulated index. Oracle: same SQL as `d_dup_spans`.
     * Correctness-only (excluded from Bench): its cost is micro-batch
     * orchestration; the batch twin is the benched operator. */
   def dStreamSpans(spark: SparkSession, dir: String,
       nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("spans_feed")
-    val warehouse = StreamingDedup.freshDir("spans_wh")
-    val corpus = Dedup.spansCorpus(
-      graft.Tables.documents(spark, dir)).localCheckpoint()
-    StreamingDedup.writeDocChunks(spark, corpus, feed, nChunks,
-      takeChunks = 2)
-    runStream(spark, feed, warehouse)
-    StreamingDedup.writeDocChunks(spark, corpus, feed, nChunks)
-    runStream(spark, feed, warehouse)
+    val warehouse = TwinReplay.replay(spark, "spans",
+      Dedup.spansCorpus(graft.Tables.documents(spark, dir)).localCheckpoint(),
+      nChunks, StreamingDedup.docSchema)(runStream(spark, _, _))(_ => ())
     val wins = ParquetSink.readFinal(
       spark.read.parquet(s"$warehouse/spans_index"), Seq("doc_id", "pos"))
       .select(col("doc_id"), col("pos"), col("win"))

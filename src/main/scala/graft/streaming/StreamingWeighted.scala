@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 import graft.sink.ParquetSink
@@ -31,24 +30,14 @@ object StreamingWeighted {
 
   /** Summing-MV stream for the per-(lang, value) weight histogram. */
   def runHistStream(spark: SparkSession, feedDir: String,
-      warehouse: String): Unit = {
-    val path = s"$warehouse/weight_hist"
-    val query = StreamingDedup.readDocStream(spark, feedDir, feedSchema)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_hist_checkpoint")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        if (!batch.isEmpty) {
-          val maxId = batch.agg(max(col("doc_id"))).collect()(0).getLong(0)
-          val partial = graft.llm.TextAnalysis.weightHist(batch)
-            .withColumn("block_height", col("value"))
-          ParquetSink.writeSummedBatch(partial, path, maxId, gridKeys)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      warehouse: String): Unit =
+    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_hist_checkpoint") { (batch, maxId) =>
+      val partial = graft.llm.TextAnalysis.weightHist(batch)
+        .withColumn("block_height", col("value"))
+      ParquetSink.writeSummedBatch(partial, s"$warehouse/weight_hist",
+        maxId, gridKeys)
+    }
 
   /** Declared query (`t_stream_weighted_percentiles`) — equals the
     * batch [[graft.llm.TextAnalysis.tWeightedPercentiles]] and shares
@@ -56,19 +45,12 @@ object StreamingWeighted {
     * orchestration. */
   def tStreamWeightedPercentiles(spark: SparkSession, dir: String,
       nChunks: Int = 5): DataFrame = {
-    graft.Tables.tune(spark)
-    val feed = StreamingDedup.freshDir("weighted_feed")
-    val warehouse = StreamingDedup.freshDir("weighted_wh")
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      takeChunks = 2, schema = feedSchema)
-    runHistStream(spark, feed, warehouse)
-    ParquetSink.compactSummed(spark, s"$warehouse/weight_hist",
-      gridKeys, gridSums)
-    StreamingDedup.writeDocChunks(spark, docs, feed, nChunks,
-      schema = feedSchema)
-    runHistStream(spark, feed, warehouse)
+    val warehouse = TwinReplay.replay(spark, "weighted",
+      graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
+      nChunks, feedSchema)(runHistStream(spark, _, _))(wh =>
+      ParquetSink.compactSummed(spark, s"$wh/weight_hist",
+        gridKeys, gridSums))
     val hist = ParquetSink.readSummed(
       spark.read.parquet(s"$warehouse/weight_hist"), gridKeys, gridSums)
       .select(col("lang"), col("value"), col("wsum"))

@@ -76,19 +76,28 @@ class Round16Spec extends AnyFunSuite {
       stored.collect().map(_.toString).toSeq)
   }
 
-  test("scratch dirs are per-JVM (pid-scoped) and per-name stable " +
-      "within the JVM — the round-16 concurrent-replay isolation") {
+  test("scratch dirs are per-call unique and pid-scoped — the " +
+      "concurrent-replay isolation, in one JVM and across JVMs") {
+    def empty(p: String): Boolean = {
+      val d = new java.io.File(p)
+      !d.exists() || d.list().isEmpty
+    }
     val a = graft.sink.ParquetSink.scratchDir("spec_probe")
-    val b = graft.sink.ParquetSink.scratchDir("spec_probe")
-    assert(a === b, "same name, same JVM, same path")
-    val pid = ProcessHandle.current().pid()
-    assert(a.contains(s"graft_sink_${pid}_spec_probe"),
-      s"path must carry the pid: $a")
-    // emptied on entry: leave a file, re-enter, gone
+    assert(empty(a), "a fresh scratch dir is empty")
+    // a file left in the first dir must survive a second call with the
+    // same name: a concurrent twin may still be reading it
     val f = new java.io.File(a, "leftover")
     new java.io.File(a).mkdirs()
     java.nio.file.Files.writeString(f.toPath, "x")
-    graft.sink.ParquetSink.scratchDir("spec_probe")
-    assert(!f.exists(), "scratchDir must empty the dir on entry")
+    val b = graft.sink.ParquetSink.scratchDir("spec_probe")
+    assert(a !== b, "same name, same JVM, distinct paths")
+    assert(f.exists(), "a second call must not touch the first dir")
+    val pid = ProcessHandle.current().pid()
+    Seq(a, b).foreach { p =>
+      assert(p.contains(s"graft_sink_${pid}_spec_probe"),
+        s"path must carry the pid: $p")
+    }
+    assert(empty(b), "a fresh scratch dir is empty")
+    graft.sink.ParquetSink.delete(new java.io.File(a))
   }
 }

@@ -791,7 +791,8 @@ class StreamingSpec extends AnyFunSuite {
       val cuts = (Seq(nChunks) ++
         Seq.fill(3)(1 + rnd.nextInt(nChunks))).distinct.sorted
       cuts.foreach { take =>
-        StreamingRolling.writeWave(spark, evs, feed, nChunks, take)
+        graft.streaming.StreamingDedup.writeDocChunks(spark, evs, feed,
+          nChunks, take, schema = StreamingRolling.eventSchema)
         StreamingRolling.runStream(spark, feed, wh) // restart per wave
         if (rnd.nextBoolean())
           ParquetSink.compactSummed(spark, s"$wh/rolling_summed",
