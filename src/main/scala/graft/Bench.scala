@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // 1-minute system load at start/end: bench wall times carry 2-5×
@@ -78,16 +77,8 @@ object Bench {
         f"$maxLoad%.1f after ${waitBudgetMs / 1000}%d s wait — artifact " +
         "will carry load_contaminated:true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.localSession(cpus)
     // Untimed warm-up: JVM/codegen/scan initialization otherwise lands
     // entirely on whichever query happens to run first.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -193,7 +184,7 @@ object Bench {
       import spark.implicits._
       val blocks = spark.createDataset(
         graft.fixtures.BlockGen.genBlocks(nBlocks)).toDF()
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       blocks.count() // materialize input outside the timed section
       val acc = graft.model.AccountsConfig()
       def runPipeline(): Unit = {
@@ -356,15 +347,18 @@ object Bench {
       "since r17 load_suspect queries are automatically RE-RUN at end of bench after a bounded wait-for-quiet, and the rerun columns land beside the originals in the detail record (rerun.warm_med is the number to read for a flagged query); " +
       "since r18 a query is also rerun-flagged on warm-pass SPREAD (max/min > 3x and max-min > 0.5s, stamped spread_suspect) - the 1-min load stamp misses sub-minute contamination spikes; " +
       "since r18 the cascade DEFAULT is back to one pin (perFile=100) x 1 rep - the r17 default (100,500 x 3 reps, env-restorable via SPARK_GRAFT_CASCADE_PER_FILE/SPARK_GRAFT_CASCADE_REPS) blew the driver's wall budget; ingest_cascade_blocks_per_sec stays the first pin's rep-median, ingest_cascade_pins carries all reps; " +
-      "since r18 the sum of all wait-for-quiet pauses is capped (SPARK_GRAFT_BENCH_WAIT_TOTAL_SEC, default 600) and the stdout contract line is SHORT (headline totals + the cold per-query map at ms precision, printed after spark.stop with stderr quiesced) - r6-r16 lines grew past the 4 KiB atomic-pipe-write limit and concurrent executor stderr corrupted them mid-line (BENCH parsed:null on rc=0); queries_warm and this note moved to this detail file"
+      "since r18 the sum of all wait-for-quiet pauses is capped (SPARK_GRAFT_BENCH_WAIT_TOTAL_SEC, default 600) and the stdout contract line is SHORT (headline totals + the cold per-query map at ms precision, printed after spark.stop with stderr quiesced) - r6-r16 lines grew past the 4 KiB atomic-pipe-write limit and concurrent executor stderr corrupted them mid-line (BENCH parsed:null on rc=0); queries_warm and this note moved to this detail file; " +
+      "the default detail file name carries the core count (BENCH_DETAIL_c<cpus>.json, so runs at different widths no longer overwrite each other) and the short stdout line lists the load_suspect/spread_suspect query names under suspect"
     val loadEnd = sampleLoad()
     // SELF-SUFFICIENT per-query artifact (VERDICT r14 #3): the driver's
     // BENCH_r*.json keeps only a 2000-char stdout tail — r14's per-query
     // warm column and even ingest_blocks_per_sec were truncated away.
     // This file carries every number the stdout line does PLUS all warm
     // runs and their median, and is committed to the tree each round.
+    // The default name carries the core count, so a run at one width
+    // never overwrites another width's artifact.
     val detailPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
+      "SPARK_GRAFT_BENCH_DETAIL", s"BENCH_DETAIL_c$cpus.json")
     val perQuery = results.map { case (k, (cold, warms, qLoad)) =>
       val rerun = rerunResults.get(k).map { case (c, ws, l) =>
         s""","rerun":{"cold":$c,"warm":[${ws.mkString(",")}],""" +
@@ -435,12 +429,16 @@ object Bench {
       }
     val qsShort = results.map { case (k, v) => "\"" + k + "\":" + ms3(v._1) }
       .mkString("{", ",", "}")
-    val shortNote = "cold per-query map at ms precision; queries_warm, " +
+    // the queries flagged load_suspect or spread_suspect, by name
+    val suspectJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val shortNote = "cold per-query map at ms precision; suspect lists " +
+      "the load_suspect/spread_suspect queries; queries_warm, " +
       "per-query warm passes/medians/load stamps/reruns, cascade pins " +
       "and the methodology note are in bench_detail"
     val line = s"""{"metric":"total","value":${ms3(total)},"unit":"sec"""" +
       s""","total_warm":${ms3(totalWarm)},"queries":$qsShort""" +
-      s""","failed":$failed,"ingest_blocks_per_sec":${ms3(blocksPerSec)}""" +
+      s""","failed":$failed,"suspect":$suspectJson""" +
+      s""","ingest_blocks_per_sec":${ms3(blocksPerSec)}""" +
       s""","ingest_blocks_n":$nBlocks""" +
       s""","ingest_cascade_blocks_per_sec":${ms3(cascadeBps)}""" +
       s""","ingest_cascade_blocks_n":$cascadeBlocks""" +

@@ -21,8 +21,9 @@ object Tables {
     * when the bytes are small (the shape of a byte-small/CPU-heavy
     * relation: 5000 media assets ≈ a few hundred KB). `repartition(N,
     * cols…)` is REPARTITION_BY_NUM, which AQE never coalesces — measured
-    * on this Spark (tools/FloorAB): floor=1MB gives by-col → 1 task,
-    * by-num → 32 tasks. Pinning N here lets the session keep AQE's
+    * on this Spark by the FloorAB tool (removed; kept in commit
+    * 58ab0d2): floor=1MB gives by-col → 1 task, by-num → 32 tasks.
+    * Pinning N here lets the session keep AQE's
     * small-partition floor at its default, so every tiny post-shuffle
     * stage elsewhere still coalesces (the r10 global floor=1b traded a
     * ~2× tax on small-shuffle queries for this fan-out; see VERDICT r10
@@ -33,7 +34,9 @@ object Tables {
   implicit class FanoutOps(private val df: DataFrame) {
     import org.apache.spark.sql.catalyst.plans.logical.{
       LogicalPlan, Project, Filter => LFilter, Generate, SubqueryAlias,
-      LeafNode}
+      LocalRelation}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
 
     /** True iff the plan is narrow transforms over leaf relations — no
       * exchange can exist below it, so `df.rdd.getNumPartitions` is
@@ -48,12 +51,8 @@ object Tables {
     private def narrowOverLeaf(p: LogicalPlan): Boolean = p match {
       case _: Project | _: LFilter | _: Generate | _: SubqueryAlias =>
         p.children.forall(narrowOverLeaf)
-      case l: LeafNode => l.nodeName match {
-        // parquet scans, localCheckpoint results, literal relations
-        case "LogicalRelation" | "LogicalRDD" | "LocalRelation" |
-             "Relation" => true
-        case _ => false
-      }
+      // parquet scans, localCheckpoint results, literal relations
+      case _: LogicalRelation | _: LogicalRDD | _: LocalRelation => true
       case _ => false
     }
 
@@ -68,18 +67,29 @@ object Tables {
       * byte-small scans are 1-2 splits and the pinned repartition fires
       * exactly as before. Results are partitioning-independent by
       * design (gate-verified), so the flip cannot change any row. */
-    def fanout(cols: Column*): DataFrame =
-      // -Dgraft.fanout.off=true: measurement seam for tools/FloorAB's
-      // per-query fan-out A/B (is the shuffle worth it for THIS CPU
-      // stage?); production call sites are the measured winners.
-      if (sys.props.get("graft.fanout.off").contains("true")) df
-      else {
-        val target =
-          df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-        if (narrowOverLeaf(df.queryExecution.analyzed) &&
-            df.rdd.getNumPartitions >= target) df
-        else df.repartition(target, cols: _*)
-      }
+    def fanout(cols: Column*): DataFrame = {
+      val target =
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      if (narrowOverLeaf(df.queryExecution.analyzed) &&
+          df.rdd.getNumPartitions >= target) df
+      else df.repartition(target, cols: _*)
+    }
+  }
+
+  /** The one local session every entry point builds (Bench, Verify,
+    * the tools, the test suite): `local[cpus]` with `cpus` shuffle
+    * partitions, AQE on, the UI off and the [[GraftExtensions]]
+    * function injection, then [[tune]] for the per-session settings. */
+  def localSession(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    tune(spark)
   }
 
   /** Idempotent per-session settings every query path relies on. */
@@ -99,11 +109,6 @@ object Tables {
     // where they are declared, via [[FanoutOps.fanout]] (explicit-N
     // repartition = REPARTITION_BY_NUM, which AQE never coalesces), so
     // the session-wide floor can let AQE do its job everywhere else.
-    // Overridable via -Dgraft.aqe.minPartitionSize for tools/FloorAB.
-    sys.props.get("graft.aqe.minPartitionSize").foreach { v =>
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", v)
-    }
     graft.functions.GraftFunctions.register(spark)
     spark
   }

@@ -12,6 +12,17 @@ object Verify {
   type QueryFn = (SparkSession, String) => DataFrame
 
   def main(args: Array[String]): Unit = {
+    val spark = Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val code = run(spark, args)
+    spark.stop()
+    if (code != 0) sys.exit(code)
+  }
+
+  /** The dump over `args` = `sfDir outDir [name…]` in `spark`; returns
+    * the process exit code (1 if any query threw). Leaves the session
+    * running, so a test can call it on a shared session. */
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional extra args: restrict the dump AND oracle_sql.json to the
     // named queries, so tools/check.py's tally covers exactly the dumped
@@ -19,16 +30,6 @@ object Verify {
     // is dumped
     val only: String => Boolean =
       if (rest.isEmpty) _ => true else rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     Files.deleteIfExists(Paths.get(outDir, FailuresFile))
     // Sorted name order for symmetry with Bench (VERDICT r8 #1): the dump
@@ -42,12 +43,12 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    if (failures.nonEmpty) {
+    if (failures.isEmpty) 0
+    else {
       writeFailures(outDir, failures)
       System.err.println(s"[verify] ${failures.size} of ${todo.size} " +
         s"queries failed: ${failures.map(_._1).mkString(", ")}")
-      sys.exit(1)
+      1
     }
   }
 

@@ -356,12 +356,12 @@ object Similarity {
     * margin-proportional index-size cost (measured +1.1% rows at
     * eps 0.01 on the 200k sweep corpus). NOTE the honest r16 finding:
     * on THAT corpus the residual 0.005 recall loss turned out NOT to
-    * be a boundary case — pair-level diagnosis
-    * ([[graft.tools.TailDiag]]) showed the missed near-twin deep
+    * be a boundary case — pair-level diagnosis (the TailDiag tool,
+    * removed; kept in commit 58ab0d2) showed the missed near-twin deep
     * inside its cell (margin 0.46) with the cell the query's FIRST
     * probe, i.e. an ADC-ranking miss that nCand = 16·k closes at
     * single assignment. Replication is the right tool when the
-    * diagnosis IS a probe-unreached boundary cell; run TailDiag
+    * diagnosis IS a probe-unreached boundary cell; diagnose the pair
     * before reaching for either dial. `eps ≤ 0` is EXACTLY
     * [[withCell]] — one row per vector, same plan — so every pinned
     * gate row is untouched.
@@ -423,10 +423,10 @@ object Similarity {
     * true neighbor near the Voronoi boundary between two cells is
     * invisible to single-probe IVF by construction; probing the
     * runner-up cell recovers exactly that loss (recall measured against
-    * the exact grid at sf0.1 by [[graft.tools.ScaleRecall]]). Cost
-    * shape unchanged at scale: the QUERY side fans out nprobe× (still
-    * broadcast-bounded), the corpus side stays one row per vector in
-    * one cell. */
+    * the exact grid at sf0.1 by the ScaleRecall tool, removed; kept
+    * in commit 58ab0d2). Cost shape unchanged at scale: the QUERY side
+    * fans out nprobe× (still broadcast-bounded), the corpus side stays
+    * one row per vector in one cell. */
   def sAnnKmeans(spark: SparkSession, dir: String, k: Int = 3,
       nQueries: Int = 20, nCells: Int = 8, iters: Int = 2,
       nprobe: Int = 2): DataFrame = {

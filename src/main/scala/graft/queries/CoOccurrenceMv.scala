@@ -60,11 +60,12 @@ object CoOccurrenceMv {
     * DEFINITION, and the hot key lives inside a SELF-join — no side is
     * a broadcastable dim, so the straggler lever at 100× is splitting
     * the skewed shuffle partition itself. EVIDENCED by
-    * [[graft.tools.HotCellEvidence]]: on a corpus whose one cell holds
-    * 50% of facts (~100% of pair work), AQE's `OptimizeSkewedJoin`
-    * splits the hot partition on BOTH sides of the sort-merge
-    * self-join (m×n sub-pairs, `skew=true` in the executed plan),
-    * results bit-identical, measured ~2× faster than the unsplit run.
+    * the HotCellEvidence tool (removed; kept in commit 58ab0d2): on a
+    * corpus whose one cell holds 50% of facts (~100% of pair work),
+    * AQE's `OptimizeSkewedJoin` splits the hot partition on BOTH sides
+    * of the sort-merge self-join (m×n sub-pairs, `skew=true` in the
+    * executed plan), results bit-identical, measured ~2× faster than
+    * the unsplit run.
     * One production-tuning fact the tool surfaced: the split is floored
     * by `spark.sql.adaptive.coalescePartitions.minPartitionSize`
     * (default 1 MB) — a skewed partition only splits into groups of at
@@ -138,10 +139,11 @@ object CoOccurrenceMv {
   /** AUTO-ENGAGE threshold (max distinct users in one occupancy cell)
     * past which [[pairCountsAuto]] switches to the salted build
     * (VERDICT r14 #1). MEASURED, not guessed — the
-    * [[graft.tools.HotCellEvidence]] sweep at DEFAULT configs (warm,
-    * local[8], one cell holding 50% of facts): at |cell| = 2k–4k
-    * salting is cost-neutral (2.83 vs 2.89 s, 9.18 vs 9.40 s), at 8k
-    * it wins 1.44× (71.3 → 49.4 s), past that local-mode total
+    * HotCellEvidence sweep (tool removed; kept in commit 58ab0d2) at
+    * DEFAULT configs (warm, local[8], one cell holding 50% of facts):
+    * at |cell| = 2k–4k salting is cost-neutral (2.83 vs 2.89 s, 9.18
+    * vs 9.40 s), at 8k it wins 1.44× (71.3 → 49.4 s), past that
+    * local-mode total
     * pair-aggregation work masks the straggler. The loss is
     * asymmetric — a false-positive costs the bounded (S+1)× fact
     * replication (measured ≈ free at 2k), while a false-negative

@@ -119,9 +119,9 @@ object ZOrderLayout {
 
   /** Write `df` as `nFiles` files clustered by the BALANCED z-key
     * (range-partition + per-file sort — the OPTIMIZE ZORDER write
-    * path). Returns the directory. Used by the pruning spec and
-    * [[graft.tools.ZorderPrune]]; at scale this is the compaction
-    * job's output layout. */
+    * path). Returns the directory. Used by the pruning spec (and by
+    * the ZorderPrune tool, removed; kept in commit 58ab0d2); at scale
+    * this is the compaction job's output layout. */
   def writeZOrdered(df: DataFrame, path: String, nFiles: Int): String = {
     balancedZ(df).repartitionByRange(nFiles, col("zq"))
       .sortWithinPartitions(col("zq"))

@@ -70,9 +70,9 @@ object Sessionize {
     * (lag + running-sum windows + per-session aggregate,
     * [[sessionsBatchWindow]]) was built on the guide-§4 expectation
     * that the typed flatMapGroupsWithState boundary dominates — the
-    * in-session A/B ([[graft.tools.AbSessionize]], sf0.1, 5 alternating
-    * reps) measured the WINDOW form 25-50% slower (0.46-0.92 s vs
-    * 0.37-0.66 s): two WindowExec passes plus the session-grain
+    * in-session A/B (the AbSessionize tool, removed; kept in commit
+    * 58ab0d2; sf0.1, 5 alternating reps) measured the WINDOW form
+    * 25-50% slower (0.46-0.92 s vs 0.37-0.66 s): two WindowExec passes plus the session-grain
     * aggregate cost more than the per-row encoder hop at this group
     * size. The stateFn path stays the default; the window twin is kept
     * (suite-pinned equal) as the spill-safe alternative for a corpus

@@ -1,31 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off evidence tool: measure trained-IVF ANN recall against the
   * EXACT brute-force top-k at scale, single-probe vs multi-probe
   * (VERDICT r8 #6 — the recall lift of probing the nprobe nearest
   * k-means cells instead of only the argmax cell, same methodology as
-  * [[ScaleRecall]]). The exact side is the broadcast-query top-k — 20
-  * query vectors against the corpus scan, bounded regardless of SF.
+  * the ScaleRecall tool, removed; kept in commit 58ab0d2). The exact
+  * side is the broadcast-query top-k — 20 query vectors against the
+  * corpus scan, bounded regardless of SF.
   *
   * `sbt "runMain graft.tools.AnnRecall"` — prints recall@k per nprobe.
   * Recorded in SCALE_CHECK_r09.md. */
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // k is env-tunable because the SfGen sf1 corpus is 10 key-shifted
     // copies: each query's 9 exact twins saturate any small-k recall
     // (measured 1.0 at k=3 for every index/probe setting) — k beyond

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decade-up evidence for the pair-graph consumer family
@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * quadratic-or-worse above the sf0.01 gate (`d_dup_groups`
   * `d_cc_stars` `d_stream_dup_groups` `d_cluster_rep` `d_walk_counts`
   * `d_ngram_pairs`) all derive from a verified near-dup pair relation
-  * — so the scale cross-check runs Spark-side, the [[ScaleRecall]]
-  * methodology extended to the whole family:
+  * — so the scale cross-check runs Spark-side, the methodology of the
+  * ScaleRecall tool (removed; kept in commit 58ab0d2) extended to the
+  * whole family:
   *
   *  1. EXACT pairs by grid-partitioned self-join (every doc pair
   *     meets exactly once; no LSH, no banding) for BOTH shingle
@@ -47,14 +48,8 @@ object DecadeGraphCheck {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val threshold = 0.8
     val gridP = sys.env.getOrElse("SPARK_GRAFT_GRID_P", "16").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Tables.tune(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.localSession(cpus)
     var failures = 0
     val verdicts = scala.collection.mutable.LinkedHashMap
       .empty[String, (Boolean, String)]
@@ -64,7 +59,7 @@ object DecadeGraphCheck {
       * reference at sf0.1 (5k docs), intractable at sf1 (50k). */
     def exactPairsGrid(shingleExpr: String): Set[(Long, Long)] = {
       val sets = graft.Tables.documents(spark, dir)
-        .repartition(cpus.toInt, col("doc_id"))
+        .repartition(cpus, col("doc_id"))
         .select(col("doc_id"), expr(shingleExpr).as("gs"))
         .filter(size(col("gs")) > 0)
         .persist()
@@ -105,7 +100,7 @@ object DecadeGraphCheck {
         .filter(size(col("gs")) > 0)
         .select(col("doc_id"), size(col("gs")).as("sz"),
           explode(array_distinct(col("gs"))).as("h"))
-        .repartition(cpus.toInt, col("h"))
+        .repartition(cpus, col("h"))
         .persist()
       val out = sets.as("a")
         .join(sets.as("b"),

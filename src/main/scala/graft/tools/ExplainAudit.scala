@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints the formatted physical plan of selected headline
   * queries so scan pushdown / join strategies / codegen spans can be
@@ -18,14 +17,10 @@ object ExplainAudit {
     // width-dependent behavior (r18: the adaptive fanout guard is the
     // identity when the scan is at least shuffle.partitions wide —
     // dump with SPARK_GRAFT_SHUFFLE_PARTITIONS=1 to see it fire)
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores)
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(v => spark.conf.set("spark.sql.shuffle.partitions", v))
     val names = if (args.nonEmpty) args.toSeq
       else Seq("p_filter_project", "m_json_extract", "q3_shipping_priority",
         "q5_local_supplier", "s_cosine_topk", "d_minhash_pairs",

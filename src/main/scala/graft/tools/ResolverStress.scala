@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.model._
 
 /** Deep receipt-chain stress for the streaming resolver at
@@ -43,13 +42,8 @@ object ResolverStress {
     val gaps = Array(1L, 3L, 7L, 13L, 51L)
     val t0 = graft.fixtures.NearFixtures.T0
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     import spark.implicits._
 
     // ---- corpus (driver-built, bounded: nBlocks × origins × ≤10 hops)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-relation second-implementation replay for `g_cooccur_salted`
@@ -25,17 +25,8 @@ object SaltedReplayCheck {
       sys.exit(2)
     }
     val Array(dir, dump) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def fp(df: DataFrame, label: String): (Long, Long, Long) = {
       val r = df.agg(

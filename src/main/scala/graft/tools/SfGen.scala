@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Self-generated >gate-scale corpus (VERDICT r8 #8): union N
@@ -20,14 +20,7 @@ object SfGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dst) = args.take(2)
     val copies = sys.env.getOrElse("SPARK_GRAFT_SF_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(32)
     new java.io.File(dst).mkdirs()
 
     def load(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time individual declared queries in isolation (the iterating twin of
   * [[graft.Bench]] — same session shape, but only the named queries):
   * `sbt "runMain graft.tools.TimeQuery d_ngram_pairs d_minhash_pairs"`.
@@ -10,17 +8,9 @@ import org.apache.spark.sql.SparkSession
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.range(1000).selectExpr("sum(id)").collect()
     args.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.metrics.Tracing
 
 /** Traced cascade run (VERDICT r14 #6 + #4): drive the full streaming
@@ -17,14 +16,8 @@ object TraceCascade {
     val nBlocks = args.headOption.map(_.toInt).getOrElse(2000)
     val perFile = args.lift(1).map(_.toInt).getOrElse(100)
     val out = args.lift(2).getOrElse("TRACE_SAMPLE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_trace").toString

@@ -36,4 +36,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .collect()(0).getDouble(0)
     assert(viaSql === (1.5 * 2.0 + -2.0 * 0.5))
   }
+
+  test("the suite session is Tables.localSession(4): its settings are " +
+    "the ones Bench and Verify run with") {
+    val s = SharedSpark.spark
+    assert(s.sparkContext.master === "local[4]")
+    assert(s.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(s.conf.get("spark.sql.extensions") === "graft.GraftExtensions")
+  }
 }

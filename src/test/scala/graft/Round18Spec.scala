@@ -63,4 +63,34 @@ class Round18Spec extends AnyFunSuite {
     assert(!out.queryExecution.analyzed.toString
       .contains("RepartitionByExpression"))
   }
+
+  // the production input: a parquet scan (a LogicalRelation leaf), read
+  // back from files written here
+  private def parquetRead(name: String, nFiles: Int) = {
+    val path = graft.sink.ParquetSink.scratchDir(name)
+    spark.range(1000).toDF("id").repartition(nFiles)
+      .write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  test("fanout is the identity on a parquet scan already as wide as " +
+      "the session parallelism (the production scan node matches)") {
+    val wide = parquetRead("fanout_wide_scan", 4 * shufflePartitions)
+    assert(wide.rdd.getNumPartitions >= shufflePartitions,
+      "precondition: the scan must be at least shuffle.partitions wide")
+    val out = wide.fanout(col("id"))
+    assert(!out.queryExecution.analyzed.toString
+        .contains("RepartitionByExpression"),
+      "no repartition node may be added on an already-wide parquet scan")
+    assert(out.rdd.getNumPartitions === wide.rdd.getNumPartitions)
+  }
+
+  test("fanout still pins N on a 1-file parquet scan") {
+    val narrow = parquetRead("fanout_narrow_scan", 1)
+    assert(narrow.rdd.getNumPartitions === 1)
+    val out = narrow.fanout(col("id"))
+    assert(out.queryExecution.analyzed.toString
+      .contains("RepartitionByExpression"))
+    assert(out.rdd.getNumPartitions === shufflePartitions)
+  }
 }

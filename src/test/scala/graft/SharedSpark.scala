@@ -2,21 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession shared by every suite (JVM-forked once by sbt). */
+/** One SparkSession shared by every suite (JVM-forked once by sbt):
+  * the same [[Tables.localSession]] Bench and Verify run, at 4 cores.
+  * Its extension injection is the production path — functions resolve
+  * in raw sessions with no Tables.tune call (see GraftExtensionsSpec). */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      // the production injection path — functions resolve in raw
-      // sessions with no Tables.tune call (see GraftExtensionsSpec)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.tune(s)
-  }
+  lazy val spark: SparkSession = Tables.localSession(4)
 }

@@ -93,11 +93,15 @@ class SourcesSpec extends AnyFunSuite {
               case r => Some(r.getDouble(0))
             }
         } catch { case _: org.apache.spark.SparkException => None }
-      // wait until at least two refreshes landed (price advanced past 1)
-      while (usdcPrice().forall(_ < 2.0) && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      assert(usdcPrice().exists(_ >= 2.0),
-        s"no second refresh after ${calls.get()} fetches")
+      // wait until at least two refreshes landed (price advanced past
+      // 1); judge the price a read observed, since a fresh read can race
+      // the next swap
+      var seen = 0.0
+      while (seen < 2.0 && System.nanoTime() < deadline) {
+        seen = math.max(seen, usdcPrice().getOrElse(0.0))
+        if (seen < 2.0) Thread.sleep(100)
+      }
+      assert(seen >= 2.0, s"no second refresh after ${calls.get()} fetches")
     } finally query.stop()
     // stop() may interrupt a tick mid-swap; recover, then the image is
     // a complete, readable snapshot of one fetch

@@ -66,4 +66,32 @@ class TwinReplaySpec extends AnyFunSuite {
     assert(text.contains("java.lang.IllegalStateException"), text)
     assert(text.contains("boom \\\"x\\\""), text)
   }
+
+  private def dumpDirs(out: String): Set[String] =
+    new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).toSet
+
+  test("Verify.run with a name subset dumps and writes oracle SQL for " +
+    "exactly those names, and returns 0") {
+    val out = graft.sink.ParquetSink.scratchDir("verify_subset_spec")
+    val names = Seq("p_filter_project", "q1_pricing_summary")
+    assert(Verify.run(spark, Array(dir, out) ++ names) === 0)
+    assert(dumpDirs(out) === names.toSet)
+    val oracle = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(out, "oracle_sql.json"))
+    val keys = "[{,]\"([a-z0-9_]+)\": \"".r.findAllMatchIn(oracle)
+      .map(_.group(1)).toSet
+    assert(keys === names.toSet, oracle)
+    assert(!new java.io.File(s"$out/${Verify.FailuresFile}").exists())
+  }
+
+  test("Verify.run returns non-zero and writes the failure file when a " +
+    "query throws") {
+    val out = graft.sink.ParquetSink.scratchDir("verify_throw_spec")
+    assert(Verify.run(spark,
+      Array(s"$out/no_such_sf", out, "p_filter_project")) !== 0)
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(out, Verify.FailuresFile))
+    assert(text.contains("\"name\": \"p_filter_project\""), text)
+    assert(dumpDirs(out).isEmpty)
+  }
 }
