@@ -3,7 +3,9 @@ package graft.metrics
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -118,12 +120,23 @@ object Metrics {
     folded.clear()
   }
 
+  /** Spark's own codegen figures for this JVM (driver and, in local
+    * mode, executors): classes compiled and seconds spent compiling,
+    * read at scrape time — zero jobs, no timers of our own. */
+  private def codegenCounters(): Seq[(String, String)] = Seq(
+    "codegen_compiles_total" ->
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toString,
+    "codegen_compile_seconds_total" ->
+      java.math.BigDecimal.valueOf(CodeGenerator.compileTime, 9)
+        .toPlainString)
+
   /** Prometheus text exposition format (metrics.rs serves the same).
     * Phase-duration histograms ([[Tracing]]) ride the same page, the
     * way the reference's process serves counters and tracing from one
     * binary. */
   def renderPrometheus(): String =
-    snapshot().toSeq.sortBy(_._1).map { case (k, v) =>
+    (snapshot().toSeq.map { case (k, v) => k -> v.toString } ++
+      codegenCounters()).sortBy(_._1).map { case (k, v) =>
       s"# TYPE $k counter\n$k $v"
     }.mkString("", "\n", "\n") + Tracing.renderPrometheus()
 }

@@ -91,8 +91,7 @@ object BatchRunner {
       s"insert_${name}_to_db" ->
         (() => ParquetSink.writeBatch(df, s"$warehouse/$name", seq, keys))
     // the 8 cascade writes have no inter-table ordering constraint, so
-    // they run concurrently (cascade ingest measured 16.7 → ~25 blocks/s
-    // from this overlap alone)
+    // they run concurrently
     concurrently(Seq(
       // incremental gold rollup at the replay-atomic (block, token)
       // grain — resume-overlap replays rewrite identical rows and
@@ -196,65 +195,86 @@ object BatchRunner {
     * 4=resolver state, 5=transactions): the crash-injection seam of the
     * soak suite. A throw fails the batch before the streaming checkpoint
     * commits, so the batch replays whole and the write order above must
-    * absorb the partial writes. */
+    * absorb the partial writes.
+    *
+    * The whole body runs under [[interpreted]] on the sessions of
+    * `blocks` and `state` (they differ on the stream: the micro-batch
+    * lives on the stream's cloned session, the state on the caller's). */
   def ingestBatch(blocks: DataFrame, minH: Long, maxH: Long,
       state: DataFrame, warehouse: String, accounts: AccountsConfig,
       ttlBlocks: Long, failpoint: (Long, Int) => Unit): DataFrame =
-    // per-batch phase spans, named after the reference's own handler
-    // hierarchy (TRACING.md:45-63) so traces line up engine-to-engine;
-    // no-ops unless Tracing.enable() ran
-    span("handle_streamer_message",
-      "min_height" -> minH.toString, "max_height" -> maxH.toString) {
-      // carry = TTL-trimmed state for the next batch; lookup = the
-      // untrimmed entry set THIS batch's rows resolve against with
-      // per-row TTL (early rows must not see the max-height trim)
-      val (carry, lookup, events0) =
-        span("cache_map_new_receipts_from_outcomes") {
-          StreamingResolver.processBatchFull(state, blocks, accounts,
-            ttlBlocks, maxHeightHint = Some(maxH))
+    ParquetSink.withConf(Seq(blocks.sparkSession, state.sparkSession),
+        interpreted) {
+      // per-batch phase spans, named after the reference's own handler
+      // hierarchy (TRACING.md:45-63) so traces line up engine-to-engine;
+      // no-ops unless Tracing.enable() ran
+      span("handle_streamer_message",
+        "min_height" -> minH.toString, "max_height" -> maxH.toString) {
+        // carry = TTL-trimmed state for the next batch; lookup = the
+        // untrimmed entry set THIS batch's rows resolve against with
+        // per-row TTL (early rows must not see the max-height trim)
+        val (carry, lookup, events0) =
+          span("cache_map_new_receipts_from_outcomes") {
+            StreamingResolver.processBatchFull(state, blocks, accounts,
+              ttlBlocks, maxHeightHint = Some(maxH))
+          }
+        val events = span("parse_events") { events0.localCheckpoint() }
+        // inserts write with AQE off, where a broadcast of the lookup
+        // would cost its own collect job ahead of each write
+        val lookupShuffled = lookup.hint("shuffle_hash")
+        val ofInt = BronzeExtractors.outcomesOfInterest(
+          BronzeExtractors.outcomes(blocks), accounts)
+        def withParentTx(rows: DataFrame) =
+          ReceiptTxResolver.attachParentTx(rows, lookupShuffled, ttlBlocks)
+        span("insert_batches") {
+          concurrently(Seq(
+            "insert_receipts_to_db" -> (() => ParquetSink.writeBatch(
+              withParentTx(BronzeExtractors.receiptRows(ofInt)),
+              s"$warehouse/receipts", maxH, Seq("receipt_id"))),
+            "insert_execution_outcomes_to_db" -> (() => ParquetSink.writeBatch(
+              withParentTx(BronzeExtractors.executionOutcomeRows(ofInt)),
+              s"$warehouse/execution_outcomes", maxH,
+              Seq("execution_outcome_id"))),
+            "insert_events_to_db" -> (() => ParquetSink.writeBatch(
+              events, s"$warehouse/events", maxH, eventsPk)),
+            "silver_cascade" -> (() =>
+              writeSilverCascade(events, accounts, warehouse, maxH))),
+            before = failpoint(maxH, _))
         }
-      val events = span("parse_events") { events0.localCheckpoint() }
-      // inserts write with AQE off, where a broadcast of the lookup
-      // would cost its own collect job ahead of each write
-      val lookupShuffled = lookup.hint("shuffle_hash")
-      val ofInt = BronzeExtractors.outcomesOfInterest(
-        BronzeExtractors.outcomes(blocks), accounts)
-      def withParentTx(rows: DataFrame) =
-        ReceiptTxResolver.attachParentTx(rows, lookupShuffled, ttlBlocks)
-      span("insert_batches") {
-        concurrently(Seq(
-          "insert_receipts_to_db" -> (() => ParquetSink.writeBatch(
-            withParentTx(BronzeExtractors.receiptRows(ofInt)),
-            s"$warehouse/receipts", maxH, Seq("receipt_id"))),
-          "insert_execution_outcomes_to_db" -> (() => ParquetSink.writeBatch(
-            withParentTx(BronzeExtractors.executionOutcomeRows(ofInt)),
-            s"$warehouse/execution_outcomes", maxH,
-            Seq("execution_outcome_id"))),
-          "insert_events_to_db" -> (() => ParquetSink.writeBatch(
-            events, s"$warehouse/events", maxH, eventsPk)),
-          "silver_cascade" -> (() =>
-            writeSilverCascade(events, accounts, warehouse, maxH))),
-          before = failpoint(maxH, _))
-      }
-      span("persist_resolver_state") {
-        failpoint(maxH, 4)
-        // block_height = entry_height drives the sink's bucketing
-        ParquetSink.writeBatch(lookup.filter(col("entry_height") >= minH)
-          .withColumn("block_height", col("entry_height")),
-          s"$warehouse/resolver_state", maxH, statePk)
-        ParquetSink.dropBucketsBelow(s"$warehouse/resolver_state",
-          minH - ttlBlocks)
-      }
-      span("handle_transactions") {
-        failpoint(maxH, 5)
-        span("insert_transactions_to_db") {
-          ParquetSink.writeBatch(
-            BronzeExtractors.transactionRows(blocks, accounts),
-            s"$warehouse/transactions", maxH, Seq("transaction_hash"))
+        span("persist_resolver_state") {
+          failpoint(maxH, 4)
+          // block_height = entry_height drives the sink's bucketing
+          ParquetSink.writeBatch(lookup.filter(col("entry_height") >= minH)
+            .withColumn("block_height", col("entry_height")),
+            s"$warehouse/resolver_state", maxH, statePk)
+          ParquetSink.dropBucketsBelow(s"$warehouse/resolver_state",
+            minH - ttlBlocks)
         }
+        span("handle_transactions") {
+          failpoint(maxH, 5)
+          span("insert_transactions_to_db") {
+            ParquetSink.writeBatch(
+              BronzeExtractors.transactionRows(blocks, accounts),
+              s"$warehouse/transactions", maxH, Seq("transaction_hash"))
+          }
+        }
+        carry
       }
-      carry
     }
+
+  /** Session settings of an ingest batch: no whole-stage codegen and no
+    * generated expression classes, so every plan runs interpreted.
+    * A 10-block batch compiles ~170 Janino classes otherwise, at
+    * 10–30 ms each, and Spark's codegen cache (100 entries, keyed by
+    * class loader and source) is smaller than one batch's driver plus
+    * executor working set, so most are recompiled every batch.
+    * Interpretation costs nanoseconds per row, and a batch holds
+    * O(10²–10⁴) rows per table. A batch's jobs, tasks, files and rows
+    * are unchanged. Both keys are needed: whole-stage codegen off alone
+    * still compiles every projection and predicate. */
+  val interpreted: Map[String, String] = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   /** Process every block in `blocksDir` newer than the sink's resume
     * height as one [[ingestBatch]]; returns None when there is nothing

@@ -49,9 +49,75 @@ object ParquetSink {
     throw last
   }
 
+  /** Run `f` with `settings` applied to every session in `sessions`,
+    * then restore each key exactly: a key that was set before gets its
+    * old value back, a key that was unset is unset again.
+    *
+    * The scope is reference-counted per (session, key), so overlapping
+    * scopes from concurrent threads share one application: the first
+    * entrant saves the prior value, the last one out restores it. A plain
+    * save/restore pair would race — the last restorer could re-apply a
+    * sibling's scoped value and pin it for the rest of the session.
+    * Overlapping scopes must agree on a key's value; a conflicting one
+    * fails on entry, before anything is applied.
+    *
+    * The conf is SESSION state: while a scope is held, every other query
+    * planned on the same session sees the scoped values too. Callers
+    * share sessions — the streaming twins, [[graft.sink.ModelStore]] and
+    * the parallel Verify all write through [[writeBatch]], and the
+    * ingest micro-batch ([[graft.runner.BatchRunner.ingestBatch]]) runs
+    * interpreted under its own scope — so only settings that cannot
+    * change a result belong here: AQE, codegen. A cloned
+    * `spark.newSession()` would isolate the conf, but a DataFrame cannot
+    * be moved onto another session through public API. */
+  def withConf[T](sessions: Seq[SparkSession],
+      settings: Map[String, String])(f: => T): T = {
+    val keys = for (s <- sessions.distinct; k <- settings.keys.toSeq)
+      yield (s, k)
+    scopes.synchronized {
+      keys.foreach { case (s, k) =>
+        scopes.get((s, k)).foreach(h => require(h.value == settings(k),
+          s"$k is already scoped to ${h.value}, not ${settings(k)}"))
+      }
+      keys.foreach { case (s, k) =>
+        scopes.getOrElseUpdate((s, k), {
+          val h = new Scope(settings(k), s.conf.getAll.get(k))
+          s.conf.set(k, h.value)
+          h
+        }).holders += 1
+      }
+    }
+    try f finally scopes.synchronized {
+      keys.foreach { case (s, k) =>
+        val h = scopes((s, k))
+        h.holders -= 1
+        if (h.holders == 0) {
+          scopes.remove((s, k))
+          h.was.fold(s.conf.unset(k))(s.conf.set(k, _))
+        }
+      }
+    }
+  }
+
+  private final class Scope(val value: String, val was: Option[String]) {
+    var holders = 0
+  }
+  private val scopes =
+    scala.collection.mutable.HashMap.empty[(SparkSession, String), Scope]
+
   /** Append one batch, stamped with its insert sequence (the
     * ReplacingMergeTree version column), partitioned by height bucket
     * and clustered by PK within files.
+    *
+    * The write runs with AQE off ([[withConf]]): its plan ends in
+    * repartition-by-bucket → sort → write, and the output file count is
+    * fixed by the bucket values whatever the partition coalescing — so
+    * AQE adds nothing to the write itself but DOES materialize the
+    * shuffle as an extra Spark job (~50 ms of driver constant), paid per
+    * table per micro-batch (measured 49 → 36 jobs per micro-batch when
+    * introduced). Wrapped plans that embed upstream joins
+    * (`attachParentTx` in the ingest batch) lose AQE's runtime skew
+    * split for the write; their inputs are bounded by one batch.
     *
     * `bloomFilterCols` writes a parquet BLOOM FILTER per named column —
     * the Spark twin of the reference's `bloom_filter()` skip indexes on
@@ -59,56 +125,12 @@ object ParquetSink {
     * column skip every row group whose filter excludes the value, the
     * same read-elision the minmax/`sortWithinPartitions` clustering
     * gives range predicates. Costs a few % of file size at write; pays
-    * on every selective id probe. */
-  /** `extraPartitionCols` prepend additional hive-style partition keys
+    * on every selective id probe.
+    *
+    * `extraPartitionCols` prepend additional hive-style partition keys
     * ahead of the height bucket — the model store passes `model_id` so
     * a per-model load prunes to that model's directories instead of
     * scanning the whole family table (VERDICT r13 #3). */
-  /** Run `f` with AQE disabled on this session, restoring the previous
-    * value after (r17, guide §1.2/§2.4): a [[writeBatch]] plan ends in
-    * repartition-by-bucket → sort → write, and the output file count is
-    * fixed by the bucket values regardless of partition coalescing — so
-    * AQE contributes nothing to the WRITE itself but DOES materialize
-    * the shuffle as an extra Spark job (~50 ms of driver constant). The
-    * streaming cascade pays that per table per micro-batch (13
-    * writes/batch): measured 49 → 36 jobs/micro-batch with the scope
-    * applied.
-    *
-    * Precision notes (ADVICE r17): (a) the toggle is SESSION-level conf
-    * state, so while a write is in flight any OTHER query planned on
-    * the same session also plans without AQE — benign for correctness
-    * (no declared result depends on plan shape) but a plan-quality blip
-    * for a concurrent reader; acceptable because the cascade is the
-    * only caller and runs single-writer. (b) Some wrapped plans DO
-    * embed upstream joins (attachParentTx in the silver cascade) —
-    * those lose AQE's runtime skew split for the duration of the write;
-    * at the cascade's per-micro-batch volumes the join inputs are
-    * bounded (one batch), so the static plan is fine, but a bulk
-    * BACKFILL through this path should reconsider the scope. A cloned
-    * `spark.newSession()` would isolate the conf, but a DataFrame
-    * cannot be transplanted onto another session through public API —
-    * the ref-count below is the working compromise. */
-  private val aqeScopes =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (Int, String)]
-  private def withAqeOff[T](spark: SparkSession)(f: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    // reference-counted per session: concurrent writeBatch futures
-    // share one scope — a plain save/restore pair would race (the last
-    // restorer could re-apply a sibling's "false" and pin AQE off for
-    // the rest of the session)
-    aqeScopes.synchronized {
-      val (n, was) = Option(aqeScopes.get(spark))
-        .getOrElse((0, spark.conf.get(k, "true")))
-      if (n == 0) spark.conf.set(k, "false")
-      aqeScopes.put(spark, (n + 1, was))
-    }
-    try f finally aqeScopes.synchronized {
-      val (n, was) = aqeScopes.get(spark)
-      if (n == 1) { aqeScopes.remove(spark); spark.conf.set(k, was) }
-      else aqeScopes.put(spark, (n - 1, was))
-    }
-  }
-
   def writeBatch(df: DataFrame, path: String, insertSeq: Long,
       pkCols: Seq[String], heightBucketSize: Long = 50L,
       bloomFilterCols: Seq[String] = Nil,
@@ -120,7 +142,8 @@ object ParquetSink {
         .repartition(col("height_bucket"))
         .sortWithinPartitions(pkCols.map(col): _*)
         .write.mode("append")
-      withAqeOff(df.sparkSession) {
+      withConf(Seq(df.sparkSession),
+          Map("spark.sql.adaptive.enabled" -> "false")) {
         bloomFilterCols
           .foldLeft(w)((acc, c) =>
             acc.option(s"parquet.bloom.filter.enabled#$c", "true"))
@@ -144,10 +167,6 @@ object ParquetSink {
         .write.mode("append").partitionBy("height_bucket").parquet(path)
     }
 
-  /** FINAL-semantics read: latest insert_seq per PK. Equal-seq
-    * duplicates (a retried write that leaked files, a replayed batch
-    * reusing its seq) tie-break on a full-row hash, so the survivor is
-    * deterministic even when the duplicates differ in non-PK columns. */
   /** FINAL + tombstones — the `ReplacingMergeTree(ver, is_deleted)`
     * DELETE semantics (ClickHouse 23.2+): a delete is an ordinary
     * insert carrying the flag; [[readFinal]] resolves the newest
@@ -159,6 +178,10 @@ object ParquetSink {
       deletedCol: String = "is_deleted"): DataFrame =
     readFinal(raw, pkCols).filter(col(deletedCol) === 0)
 
+  /** FINAL-semantics read: latest insert_seq per PK. Equal-seq
+    * duplicates (a retried write that leaked files, a replayed batch
+    * reusing its seq) tie-break on a full-row hash, so the survivor is
+    * deterministic even when the duplicates differ in non-PK columns. */
   def readFinal(raw: DataFrame, pkCols: Seq[String]): DataFrame = {
     val rowHash = xxhash64(raw.columns.sorted.toIndexedSeq.map(col): _*)
     val w = Window.partitionBy(pkCols.map(col): _*)

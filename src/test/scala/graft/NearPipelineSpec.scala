@@ -497,4 +497,115 @@ class NearPipelineSpec extends AnyFunSuite {
     assert(gold.agg(sum("deposits")).as[Option[Double]].collect()(0)
       .exists(_ > 0)) // only the day-2 memo'd mint survives
   }
+
+  private val confKeys = Seq("spark.sql.adaptive.enabled",
+    "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+  /** The keys' explicitly set values (None = unset, default applies). */
+  private def confNow(): Map[String, Option[String]] = {
+    val all = spark.conf.getAll
+    confKeys.map(k => k -> all.get(k)).toMap
+  }
+
+  test("session-conf scope: overlapping scopes with different keys from " +
+    "two threads restore the original conf when both exit") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.sink.ParquetSink
+    import graft.runner.BatchRunner
+    val (aqe, wholeStage, factoryMode) = (confKeys(0), confKeys(1),
+      confKeys(2))
+    val before = confNow()
+    assert(before(aqe).contains("true"))
+    assert(before(factoryMode).isEmpty, "the suite session leaves it unset")
+    val aIn, bIn, aOut = new CountDownLatch(1)
+    def await(l: CountDownLatch) = assert(l.await(60, TimeUnit.SECONDS))
+    // A holds AQE off; B overlaps it with AQE off plus the interpreted
+    // keys, and outlives A
+    val a = Future(ParquetSink.withConf(Seq(spark), Map(aqe -> "false")) {
+      aIn.countDown()
+      await(bIn)
+    }).andThen { case _ => aOut.countDown() }
+    val b = Future {
+      await(aIn)
+      ParquetSink.withConf(Seq(spark),
+          BatchRunner.interpreted + (aqe -> "false")) {
+        bIn.countDown()
+        val whileBoth = confNow()
+        await(aOut)
+        val afterA = confNow()
+        // a conflicting value for a held key fails before applying any
+        val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+        intercept[IllegalArgumentException] {
+          ParquetSink.withConf(Seq(spark), Map(
+            "spark.sql.shuffle.partitions" -> "7", aqe -> "true"))(())
+        }
+        assert(spark.conf.get("spark.sql.shuffle.partitions") === shuffle)
+        (whileBoth, afterA)
+      }
+    }
+    Await.result(a, 2.minutes)
+    val (whileBoth, afterA) = Await.result(b, 2.minutes)
+    val scoped = Map(aqe -> Some("false"), wholeStage -> Some("false"),
+      factoryMode -> Some("NO_CODEGEN"))
+    assert(whileBoth === scoped)
+    assert(afterA === scoped, "A's exit must not restore a key B holds")
+    assert(confNow() === before)
+  }
+
+  test("two BatchRunner.run calls on one session in parallel threads each " +
+    "leave the warehouse of their sequential run") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.runner.BatchRunner
+    import graft.sources.BlockFileSource
+    def freshDir(n: String) = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$n")
+      graft.sink.ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val chains = Seq(
+      "fixture" -> NearFixtures.blocks,
+      "rich" -> graft.fixtures.BlockGen.genBlocks(30, rich = true))
+    val blockDirs = chains.map { case (name, blocks) =>
+      val d = freshDir(s"par_runner_${name}_blocks")
+      BlockFileSource.writeBlockFilesChunked(spark, blocks, d, 5)
+      d
+    }
+    val tables = BatchRunner.productTables :+
+      ("resolver_state" -> Some(Seq("receipt_id")))
+    def image(wh: String): Map[String, Seq[String]] =
+      tables.map { case (name, pk) =>
+        val t = pk match {
+          case Some(k) => BatchRunner.tableFinal(spark, wh, name, k)
+          case None => BatchRunner.silverFinal(spark, wh, name)
+        }
+        name -> t.select(t.columns.sorted.map(col): _*)
+          .collect().map(_.toString).sorted.toSeq
+      }.toMap
+    val before = confNow()
+    val sequential = chains.zip(blockDirs).map { case ((name, _), bd) =>
+      val wh = freshDir(s"par_runner_${name}_seq")
+      BatchRunner.run(spark, bd, wh, acc)
+      image(wh)
+    }
+    val parallelWh = chains.map { case (name, _) =>
+      freshDir(s"par_runner_${name}_par")
+    }
+    val runs = blockDirs.zip(parallelWh).map { case (bd, wh) =>
+      Future(BatchRunner.run(spark, bd, wh, acc))
+    }
+    runs.foreach(r => assert(Await.result(r, 10.minutes).nonEmpty))
+    parallelWh.map(image).zip(sequential).zip(chains).foreach {
+      case ((par, seq), (name, _)) =>
+        tables.foreach { case (t, _) =>
+          assert(par(t) === seq(t), s"$name: table $t diverges")
+        }
+        assert(seq("events").nonEmpty, s"$name: no events")
+    }
+    assert(confNow() === before)
+  }
 }

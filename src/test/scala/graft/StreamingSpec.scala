@@ -231,6 +231,61 @@ class StreamingSpec extends AnyFunSuite {
     assert(snap("resolver_main_total") <= snap("resolver_entries_total"))
   }
 
+  test("runStream runs steady-state micro-batches with few codegen " +
+    "compiles, restores the session conf, and /metrics serves Spark's " +
+    "codegen counters") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import graft.metrics.Metrics
+    def tmp(name: String): String = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
+      graft.sink.ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val blocksDir = tmp("codegen_blocks")
+    // 30 blocks, 6 per file: five micro-batches
+    graft.sources.BlockFileSource.writeBlockFilesChunked(spark,
+      graft.fixtures.BlockGen.genBlocks(30, rich = true), blocksDir, 6)
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    def confNow(): Seq[Option[String]] = {
+      val all = spark.conf.getAll
+      keys.map(all.get)
+    }
+    val confBefore = confNow()
+    assert(confBefore === Seq(Some("true"), None, None))
+    // Spark's JVM-wide compile count at each batch's first write; one
+    // batch's compiles = the difference to the next batch's reading
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val atBatch = scala.collection.mutable.ArrayBuffer.empty[Long]
+    StreamRunner.runStream(spark, blocksDir, tmp("codegen_wh"), acc,
+      failpoint = (_, writePoint) => if (writePoint == 0) atBatch += compiles())
+    assert(atBatch.size === 5)
+    // steady state: every batch after the first (batch 1's interval
+    // still holds its first-time compiles of the write path)
+    val perBatch = atBatch.sliding(2).map(p => p(1) - p(0)).toSeq.tail
+    info(s"codegen compiles per steady-state batch: $perBatch")
+    assert(perBatch.forall(_ <= 10L), s"compiles per batch: $perBatch")
+    assert(confNow() === confBefore)
+
+    // the scrape reads the same two figures, at zero jobs
+    val (n0, ns0) = (compiles(), CodeGenerator.compileTime)
+    val page = Metrics.renderPrometheus()
+    val (n1, ns1) = (compiles(), CodeGenerator.compileTime)
+    def scraped(name: String): BigDecimal = {
+      assert(page.contains(s"# TYPE $name counter\n"), page)
+      BigDecimal(page.linesIterator.collectFirst {
+        case l if l.startsWith(s"$name ") => l.stripPrefix(s"$name ")
+      }.get)
+    }
+    val n = scraped("codegen_compiles_total")
+    val secs = scraped("codegen_compile_seconds_total")
+    assert(n > 0 && n >= n0 && n <= n1, s"$n not in [$n0, $n1]")
+    assert(secs > 0 && secs >= BigDecimal(ns0) / 1e9 &&
+      secs <= BigDecimal(ns1) / 1e9, s"$secs s vs [$ns0, $ns1] ns")
+  }
+
   test("real Structured Streaming wiring: MemoryStream + foreachBatch, " +
     "one block per micro-batch") {
     import spark.implicits._
