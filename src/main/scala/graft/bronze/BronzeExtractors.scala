@@ -9,9 +9,10 @@ import graft.model.{AccountsConfig, NearModel}
   * → the four bronze tables, declaratively (SURVEY.md §2.3 P1–P13).
   *
   * Everything here is a narrow projection/explode pipeline — no
-  * shuffles, no state. Catalyst fuses the whole thing into one
-  * WholeStageCodegen span over the block scan, so at 100 TB this layer
-  * is embarrassingly parallel per input split. The one cross-block
+  * shuffles, no state — so at 100 TB this layer is embarrassingly
+  * parallel per input split. On the query side Catalyst fuses it into
+  * one WholeStageCodegen span over the block scan; ingest batches run
+  * it interpreted ([[graft.runner.BatchRunner.interpreted]]). The one cross-block
   * concern (receipt→tx resolution) lives in
   * [[graft.state.ReceiptTxResolver]] and joins in afterwards.
   */

@@ -18,10 +18,10 @@ import org.apache.spark.sql.SparkSession
   *
   *  - CODE-LEVEL spans via [[span]] — a ThreadLocal stack gives the
   *    same parent/child nesting the reference's `#[instrument]`
-  *    attributes give its handlers, and the ingest runner
-  *    ([[graft.streaming.StreamRunner]]) wraps its per-micro-batch
-  *    phases in the reference's own span names so a reader can line
-  *    the two engines' traces up side by side;
+  *    attributes give its handlers, and the per-batch ingest body
+  *    both runners run ([[graft.runner.BatchRunner.ingestBatch]])
+  *    opens its phase spans under the reference's own names, so a
+  *    reader can line the two engines' traces up side by side;
   *  - ENGINE-LEVEL attribution via a SparkListener: every Spark job
   *    launched inside a span becomes a `spark_job` child span carrying
   *    the scheduler's own numbers (executor run time, shuffle

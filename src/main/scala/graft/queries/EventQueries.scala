@@ -1449,19 +1449,19 @@ object EventQueries {
     * is exact min-distance (a node found at hop 3 that was already at
     * hop 1 keeps 1).
     *
-    * Scale shape: maxHops unrolled sparse frontier expansions — each
+    * Scale shape: `hops` unrolled sparse frontier expansions — each
     * one hash equi-join edges ⋈ reached + a distinct + a min-combine;
     * reached never exceeds the vertex set; all integers. The DuckDB
     * oracle replays the same 3 unrolled neighbor CTEs and min-unions
     * the labeled layers. */
   def gBfsDistance(spark: SparkSession, dir: String,
-      maxHops: Int = 3): DataFrame =
-    bfsFromEdges(coEdges(spark, dir), maxHops)
+      hops: Int = 3): DataFrame =
+    bfsFromEdges(coEdges(spark, dir), hops)
 
   /** [[gBfsDistance]] over ANY (u, v) edge relation — shared with the
     * streamed edge MV ([[graft.streaming.StreamingGraph]]). */
   private[graft] def bfsFromEdges(edges: DataFrame,
-      maxHops: Int = 3): DataFrame = {
+      hops: Int = 3): DataFrame = {
     val directed = QueryCaches.persistTracked(
       edges.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
@@ -1469,7 +1469,7 @@ object EventQueries {
       directed.select(col("src").as("n")).distinct()
         .filter(pmod(col("n"), lit(10)) === 0)
         .withColumn("dist", lit(0L)))
-    (1 to maxHops).foreach { h =>
+    (1 to hops).foreach { h =>
       val next = directed
         .join(dist.select(col("n").as("src")), Seq("src"))
         .select(col("dst").as("n")).distinct()

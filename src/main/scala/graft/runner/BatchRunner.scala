@@ -10,7 +10,6 @@ import graft.silver.SilverTransforms
 import graft.sink.ParquetSink
 import graft.sources.BlockFileSource
 import graft.state.ReceiptTxResolver
-import graft.streaming.StreamingResolver
 
 /** The product path end-to-end (reference:
   * indexer-clickhouse/src/main.rs + handlers/mod.rs:66-139): resume
@@ -32,7 +31,6 @@ object BatchRunner {
   final case class RunSummary(fromHeight: Option[Long], toHeight: Long,
       nBlocks: Long)
 
-  private val eventsPk = Seq("related_receipt_id", "index_in_log")
   private val statePk = Seq("receipt_id")
 
   /** Write-side CLUSTERING keys for the silver MV tables (row-group
@@ -46,9 +44,9 @@ object BatchRunner {
   val silverClusterKeys: Seq[String] = Seq("block_height", "related_receipt_id")
 
   /** The product tables and their dedup mode — Some(pk) = keyed FINAL,
-    * None = whole-row (silver MV). The ONE registry compaction and the
-    * parity suites iterate, so adding a table or changing a key happens
-    * in exactly one place. */
+    * None = whole-row (silver MV). The ONE registry the writes take
+    * their keys from and compaction and the parity suites iterate, so
+    * adding a table or changing a key happens in exactly one place. */
   val productTables: Seq[(String, Option[Seq[String]])] = Seq(
     "transactions" -> Some(Seq("transaction_hash")),
     "receipts" -> Some(Seq("receipt_id")),
@@ -63,6 +61,19 @@ object BatchRunner {
     "silver_staging_transfer" -> None,
     "gold_block_rollup" -> Some(Seq("block_height", "token_id")))
 
+  /** Write-side clustering key of each product table: its dedup key when
+    * keyed, [[silverClusterKeys]] when whole-row. */
+  private val clusterKeys: Map[String, Seq[String]] = productTables.map {
+    case (name, pk) => name -> pk.getOrElse(silverClusterKeys)
+  }.toMap
+
+  /** The append of `df` to product table `name` as batch `seq`, named
+    * after the reference's `insert_<table>_to_db` span. */
+  private def insert(warehouse: String, seq: Long, name: String,
+      df: => DataFrame): (String, () => Unit) =
+    s"insert_${name}_to_db" -> (() => ParquetSink.writeBatch(df,
+      s"$warehouse/$name", seq, clusterKeys(name)))
+
   /** Current daily totals of the incremental gold rollup: keyed FINAL
     * over the block-grain MV rows (replays absorbed like any product
     * table), then a read-time day rollup over O(blocks x tokens)
@@ -71,7 +82,7 @@ object BatchRunner {
     * per block, not per day. */
   def goldDailyFinal(spark: SparkSession, warehouse: String): DataFrame =
     tableFinal(spark, warehouse, "gold_block_rollup",
-      Seq("block_height", "token_id"))
+      clusterKeys("gold_block_rollup"))
       .groupBy(col("epoch_day"), col("token_id"))
       .agg(sum(col("amount_sum_dec")).as("amount_sum_dec"),
         sum(col("n_transfers")).as("n_transfers"))
@@ -87,29 +98,28 @@ object BatchRunner {
   def writeSilverCascade(events: DataFrame, accounts: AccountsConfig,
       warehouse: String, seq: Long): Unit = {
     val nep245 = SilverTransforms.nep245Events(events)
-    def write(name: String, keys: Seq[String], df: => DataFrame) =
-      s"insert_${name}_to_db" ->
-        (() => ParquetSink.writeBatch(df, s"$warehouse/$name", seq, keys))
+    def write(name: String, df: => DataFrame) =
+      insert(warehouse, seq, name, df)
     // the 8 cascade writes have no inter-table ordering constraint, so
     // they run concurrently
     concurrently(Seq(
       // incremental gold rollup at the replay-atomic (block, token)
       // grain — resume-overlap replays rewrite identical rows and
       // keyed FINAL absorbs them (see GoldViews.blockTransferRollup)
-      write("gold_block_rollup", Seq("block_height", "token_id"),
+      write("gold_block_rollup",
         graft.gold.GoldViews.blockTransferRollup(nep245)),
-      write("silver_nep245", silverClusterKeys, nep245),
-      write("silver_token_diff", silverClusterKeys,
+      write("silver_nep245", nep245),
+      write("silver_token_diff",
         SilverTransforms.dip4TokenDiff(events, accounts)),
-      write("silver_public_keys", silverClusterKeys,
+      write("silver_public_keys",
         SilverTransforms.dip4PublicKeys(events, accounts)),
-      write("silver_intents_executed", silverClusterKeys,
+      write("silver_intents_executed",
         SilverTransforms.dip4IntentsExecuted(events, accounts)),
-      write("silver_fee_changed", silverClusterKeys,
+      write("silver_fee_changed",
         SilverTransforms.dip4FeeChanged(events, accounts)),
-      write("silver_transfer", silverClusterKeys,
+      write("silver_transfer",
         SilverTransforms.dip4Transfer(events, accounts)),
-      write("silver_staging_transfer", silverClusterKeys,
+      write("silver_staging_transfer",
         SilverTransforms.stagingDip4Transfer(events, accounts))))
   }
 
@@ -164,9 +174,9 @@ object BatchRunner {
     ParquetSink.recoverSwap(path) // tolerate a crashed compaction
     if (ParquetSink.hasData(path))
       ParquetSink.readFinal(spark.read.parquet(path), statePk)
-        .select(StreamingResolver.stateCols.map(col): _*)
+        .select(ReceiptTxResolver.stateCols.map(col): _*)
         .localCheckpoint()
-    else StreamingResolver.emptyState(spark)
+    else ReceiptTxResolver.emptyState(spark)
   }
 
   /** One batch of the ingest fold (reference: handlers/mod.rs:66-139):
@@ -215,8 +225,8 @@ object BatchRunner {
         // per-row TTL (early rows must not see the max-height trim)
         val (carry, lookup, events0) =
           span("cache_map_new_receipts_from_outcomes") {
-            StreamingResolver.processBatchFull(state, blocks, accounts,
-              ttlBlocks, maxHeightHint = Some(maxH))
+            ReceiptTxResolver.foldBatch(state, blocks, accounts, ttlBlocks,
+              maxH)
           }
         val events = span("parse_events") { events0.localCheckpoint() }
         // inserts write with AQE off, where a broadcast of the lookup
@@ -228,15 +238,11 @@ object BatchRunner {
           ReceiptTxResolver.attachParentTx(rows, lookupShuffled, ttlBlocks)
         span("insert_batches") {
           concurrently(Seq(
-            "insert_receipts_to_db" -> (() => ParquetSink.writeBatch(
-              withParentTx(BronzeExtractors.receiptRows(ofInt)),
-              s"$warehouse/receipts", maxH, Seq("receipt_id"))),
-            "insert_execution_outcomes_to_db" -> (() => ParquetSink.writeBatch(
-              withParentTx(BronzeExtractors.executionOutcomeRows(ofInt)),
-              s"$warehouse/execution_outcomes", maxH,
-              Seq("execution_outcome_id"))),
-            "insert_events_to_db" -> (() => ParquetSink.writeBatch(
-              events, s"$warehouse/events", maxH, eventsPk)),
+            insert(warehouse, maxH, "receipts",
+              withParentTx(BronzeExtractors.receiptRows(ofInt))),
+            insert(warehouse, maxH, "execution_outcomes",
+              withParentTx(BronzeExtractors.executionOutcomeRows(ofInt))),
+            insert(warehouse, maxH, "events", events),
             "silver_cascade" -> (() =>
               writeSilverCascade(events, accounts, warehouse, maxH))),
             before = failpoint(maxH, _))
@@ -252,11 +258,9 @@ object BatchRunner {
         }
         span("handle_transactions") {
           failpoint(maxH, 5)
-          span("insert_transactions_to_db") {
-            ParquetSink.writeBatch(
-              BronzeExtractors.transactionRows(blocks, accounts),
-              s"$warehouse/transactions", maxH, Seq("transaction_hash"))
-          }
+          val (name, write) = insert(warehouse, maxH, "transactions",
+            BronzeExtractors.transactionRows(blocks, accounts))
+          span(name)(write())
         }
         carry
       }

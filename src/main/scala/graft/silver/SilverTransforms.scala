@@ -20,9 +20,11 @@ import graft.model.AccountsConfig
   * (silver_transfers.rs:25-114 relies on the same property).
   *
   * Scale: all transforms are shuffle-free narrow pipelines (M10's join
-  * excepted) and stay inside WholeStageCodegen; JSON decode is Spark's
-  * codegen'd from_json over typed schemas — strictly faster than
-  * per-path JSON_VALUE re-parsing the string for every column.
+  * excepted); JSON decode is one from_json per row over typed schemas —
+  * strictly faster than per-path JSON_VALUE re-parsing the string for
+  * every column. On the query side they stay inside one
+  * WholeStageCodegen span; ingest batches run them interpreted
+  * ([[graft.runner.BatchRunner.interpreted]]).
   */
 object SilverTransforms {
 

@@ -15,7 +15,8 @@ import graft.Tables.FanoutOps
   *    version column; [[readFinal]] is the read-side FINAL (latest
   *    version per PK via row_number) and [[compact]] the merge.
   *  - K4 auto partitions: writes are `partitionBy` a height bucket
-  *    derived from block_height — the monthly-range-partition analog
+  *    derived from block_height ([[BucketBlocks]] blocks each) — the
+  *    monthly-range-partition analog
   *    (indexer-explorer/src/database.rs:122-168); Spark creates
   *    partition directories on demand, and height predicates prune them.
   *  - S3 resume: [[lastHeight]] = max(block_height) over the sink
@@ -27,6 +28,12 @@ import graft.Tables.FanoutOps
   * identical profile to what ClickHouse pays at merge time.
   */
 object ParquetSink {
+
+  /** Blocks per `height_bucket` partition. One constant for every
+    * writer and for the readers and the retention trim that compute
+    * bucket numbers from heights: a mismatch would prune or drop the
+    * wrong directories. */
+  private val BucketBlocks = 50L
 
   /** Retry with exponential backoff — K1's policy. */
   def withRetry[T](maxAttempts: Int = 10, initialDelayMs: Long = 250L,
@@ -132,40 +139,47 @@ object ParquetSink {
     * a per-model load prunes to that model's directories instead of
     * scanning the whole family table (VERDICT r13 #3). */
   def writeBatch(df: DataFrame, path: String, insertSeq: Long,
-      pkCols: Seq[String], heightBucketSize: Long = 50L,
-      bloomFilterCols: Seq[String] = Nil,
+      pkCols: Seq[String], bloomFilterCols: Seq[String] = Nil,
       extraPartitionCols: Seq[String] = Nil): Unit =
     withRetry() {
-      val w = df.withColumn("insert_seq", lit(insertSeq))
-        .withColumn("height_bucket",
-          expr(s"block_height DIV ${heightBucketSize}L"))
-        .repartition(col("height_bucket"))
-        .sortWithinPartitions(pkCols.map(col): _*)
-        .write.mode("append")
       withConf(Seq(df.sparkSession),
           Map("spark.sql.adaptive.enabled" -> "false")) {
-        bloomFilterCols
-          .foldLeft(w)((acc, c) =>
-            acc.option(s"parquet.bloom.filter.enabled#$c", "true"))
-          .partitionBy(extraPartitionCols :+ "height_bucket": _*)
-          .parquet(path)
+        appendBucketed(df.withColumn("insert_seq", lit(insertSeq)), path,
+          pkCols, bloomFilterCols.map(c =>
+            s"parquet.bloom.filter.enabled#$c" -> "true").toMap,
+          extraPartitionCols)
       }
     }
 
-  /** [[writeBatch]] minus the stamping — rows keep the `insert_seq`
-    * they already carry. Used by compaction so surviving rows keep
-    * their version stamps: re-stamping everything 0 would make every
-    * [[readAsOf]] pin silently return post-pin data (stamp-0 rows pass
-    * any `insert_seq <= maxSeq` filter). */
-  private def writeRetainingSeq(df: DataFrame, path: String,
-      pkCols: Seq[String], heightBucketSize: Long): Unit =
-    withRetry() {
-      df.withColumn("height_bucket",
-          expr(s"block_height DIV ${heightBucketSize}L"))
-        .repartition(col("height_bucket"))
-        .sortWithinPartitions(pkCols.map(col): _*)
-        .write.mode("append").partitionBy("height_bucket").parquet(path)
-    }
+  /** The bucket layout every write shares: `height_bucket` =
+    * block_height DIV [[BucketBlocks]], one shuffle partition per
+    * bucket, rows sorted by `clusterKeys` within it, appended
+    * `partitionBy` `extraPartitionCols` then the bucket. */
+  private def appendBucketed(df: DataFrame, path: String,
+      clusterKeys: Seq[String], options: Map[String, String] = Map.empty,
+      extraPartitionCols: Seq[String] = Nil): Unit =
+    df.withColumn("height_bucket", expr(s"block_height DIV ${BucketBlocks}L"))
+      .repartition(col("height_bucket"))
+      .sortWithinPartitions(clusterKeys.map(col): _*)
+      .write.mode("append").options(options)
+      .partitionBy(extraPartitionCols :+ "height_bucket": _*)
+      .parquet(path)
+
+  /** The rewrite every compaction shares: recover an interrupted swap,
+    * write `image` of the table into `path.compact`, then swap it live
+    * (see [[compact]]). The image keeps each row's `insert_seq` — no
+    * re-stamping, which would make every [[readAsOf]] pin silently
+    * return post-pin data (stamp-0 rows pass any `insert_seq <= maxSeq`
+    * filter). */
+  private def rewriteCompacted(spark: SparkSession, path: String,
+      clusterKeys: Seq[String])(image: DataFrame => DataFrame): Unit = {
+    recoverSwap(path)
+    val fin = image(spark.read.parquet(path)).drop("height_bucket")
+    val tmp = path + ".compact"
+    delete(new java.io.File(tmp)) // a stale tmp would be APPENDED onto
+    withRetry() { appendBucketed(fin, tmp, clusterKeys) }
+    swapTmpIntoLive(tmp, path)
+  }
 
   /** FINAL + tombstones — the `ReplacingMergeTree(ver, is_deleted)`
     * DELETE semantics (ClickHouse 23.2+): a delete is an ordinary
@@ -224,19 +238,11 @@ object ParquetSink {
     * died between the two steps). A leftover `path.old` from a previous
     * crash is cleared first; a crash that left no live `path` but a
     * `path.old` is rolled back by restoring the old copy. */
-  def compact(spark: SparkSession, path: String, pkCols: Seq[String],
-      heightBucketSize: Long = 50L): Unit = {
-    recoverSwap(path)
+  def compact(spark: SparkSession, path: String, pkCols: Seq[String]): Unit =
     // keep each survivor's insert_seq: FINAL answers are unchanged
     // (one row per PK either way) and outstanding readAsOf pins stay
     // valid across the rewrite
-    val fin = readFinal(spark.read.parquet(path), pkCols)
-      .drop("height_bucket")
-    val tmp = path + ".compact"
-    delete(new java.io.File(tmp)) // a stale tmp would be APPENDED onto
-    writeRetainingSeq(fin, tmp, pkCols, heightBucketSize)
-    swapTmpIntoLive(tmp, path)
-  }
+    rewriteCompacted(spark, path, pkCols)(readFinal(_, pkCols))
 
   /** [[compact]] WITH CLEANUP — the ClickHouse `OPTIMIZE ... FINAL
     * CLEANUP` analog for tombstoned tables: resolve FINAL, then
@@ -247,31 +253,16 @@ object ParquetSink {
     * replicas converged) — a later legitimate re-insert is simply a
     * fresh row. Same crash-safe swap as [[compact]]. */
   def compactWithCleanup(spark: SparkSession, path: String,
-      pkCols: Seq[String], deletedCol: String = "is_deleted",
-      heightBucketSize: Long = 50L): Unit = {
-    recoverSwap(path)
-    val fin = readFinal(spark.read.parquet(path), pkCols)
-      .filter(col(deletedCol) === 0)
-      .drop("height_bucket")
-    val tmp = path + ".compact"
-    delete(new java.io.File(tmp)) // a stale tmp would be APPENDED onto
-    writeRetainingSeq(fin, tmp, pkCols, heightBucketSize)
-    swapTmpIntoLive(tmp, path)
-  }
+      pkCols: Seq[String], deletedCol: String = "is_deleted"): Unit =
+    rewriteCompacted(spark, path, pkCols)(
+      readFinal(_, pkCols).filter(col(deletedCol) === 0))
 
   /** [[compact]] for tables deduped on the FULL row (silver MV tables):
     * same crash-safe swap, `clusterKeys` only orders rows within files
     * for row-group pruning. */
   def compactWholeRow(spark: SparkSession, path: String,
-      clusterKeys: Seq[String], heightBucketSize: Long = 50L): Unit = {
-    recoverSwap(path)
-    val fin = readFinalWholeRow(spark.read.parquet(path))
-      .drop("height_bucket")
-    val tmp = path + ".compact"
-    delete(new java.io.File(tmp)) // a stale tmp would be APPENDED onto
-    writeRetainingSeq(fin, tmp, clusterKeys, heightBucketSize)
-    swapTmpIntoLive(tmp, path)
-  }
+      clusterKeys: Seq[String]): Unit =
+    rewriteCompacted(spark, path, clusterKeys)(readFinalWholeRow)
 
   /** SUMMING-table write (the ClickHouse SummingMergeTree analog — the
     * storage half of an INCREMENTAL AGGREGATE MV): writers append
@@ -302,9 +293,9 @@ object ParquetSink {
     * of O(keys) pre-summed rows plus the partial tail since the last
     * merge. */
   def writeSummedBatch(df: DataFrame, path: String, insertSeq: Long,
-      keyCols: Seq[String], heightBucketSize: Long = 50L): Unit =
+      keyCols: Seq[String]): Unit =
     writeBatch(df.withColumn("summed_through", lit(0L)), path, insertSeq,
-      keyCols, heightBucketSize)
+      keyCols)
 
   /** Current totals of a summing table: best merged row per key plus
     * the not-yet-merged partial tail (replays collapsed as documented
@@ -337,29 +328,23 @@ object ParquetSink {
     * disk) so late replays of already-folded batches stay invisible.
     * Same crash-safe rename swap as [[compact]]. */
   def compactSummed(spark: SparkSession, path: String,
-      keyCols: Seq[String], sumCols: Seq[String],
-      heightBucketSize: Long = 50L): Unit = {
-    recoverSwap(path)
-    val raw = spark.read.parquet(path)
-    val wmark = raw.agg(max(col("insert_seq"))).collect()(0).getLong(0)
-    val summed = readSummed(raw, keyCols, sumCols)
-    // Spark's sum() WIDENS decimals (28,2 → 38,2); writing the widened
-    // type would mix physical parquet types in one table and break the
-    // next scan. Cast each column back to the table's declared type —
-    // callers size their decimal precision with merge headroom (an
-    // overflowing total is the caller's modeling error).
-    val fin = summed
-      .select(summed.columns.toIndexedSeq.map { c =>
-        raw.schema.find(_.name == c)
-          .map(f => col(c).cast(f.dataType).as(c)).getOrElse(col(c))
-      }: _*)
-      .withColumn("insert_seq", lit(wmark))
-      .withColumn("summed_through", lit(wmark))
-    val tmp = path + ".compact"
-    delete(new java.io.File(tmp)) // a stale tmp would be APPENDED onto
-    writeRetainingSeq(fin, tmp, keyCols, heightBucketSize)
-    swapTmpIntoLive(tmp, path)
-  }
+      keyCols: Seq[String], sumCols: Seq[String]): Unit =
+    rewriteCompacted(spark, path, keyCols) { raw =>
+      val wmark = raw.agg(max(col("insert_seq"))).collect()(0).getLong(0)
+      val summed = readSummed(raw, keyCols, sumCols)
+      // Spark's sum() WIDENS decimals (28,2 → 38,2); writing the widened
+      // type would mix physical parquet types in one table and break the
+      // next scan. Cast each column back to the table's declared type —
+      // callers size their decimal precision with merge headroom (an
+      // overflowing total is the caller's modeling error).
+      summed
+        .select(summed.columns.toIndexedSeq.map { c =>
+          raw.schema.find(_.name == c)
+            .map(f => col(c).cast(f.dataType).as(c)).getOrElse(col(c))
+        }: _*)
+        .withColumn("insert_seq", lit(wmark))
+        .withColumn("summed_through", lit(wmark))
+    }
 
   /** Full-replace snapshot write — the dimension-table refresh twin of
     * [[compact]] (S4's `REFRESH EVERY 1 DAY` materialization): the new
@@ -442,11 +427,11 @@ object ParquetSink {
     * explicitly — the scan touches only the TTL-window directories no
     * matter how long the table's history is. */
   def readFinalSince(spark: SparkSession, path: String, pkCols: Seq[String],
-      minHeight: Long, heightBucketSize: Long = 50L): DataFrame = {
+      minHeight: Long): DataFrame = {
     recoverSwap(path) // a crash mid-compaction must not lose the table
     readFinal(
       spark.read.parquet(path)
-        .filter(col("height_bucket") >= lit(minHeight / heightBucketSize) &&
+        .filter(col("height_bucket") >= lit(minHeight / BucketBlocks) &&
           col("block_height") >= lit(minHeight)),
       pkCols)
   }
@@ -458,9 +443,8 @@ object ParquetSink {
     * bucket is always kept, even when fully expired, so a table that
     * ever held data stays schema-readable (and [[lastHeight]] keeps
     * its probe target). */
-  def dropBucketsBelow(path: String, minHeight: Long,
-      heightBucketSize: Long = 50L): Unit = {
-    val keep = minHeight / heightBucketSize
+  def dropBucketsBelow(path: String, minHeight: Long): Unit = {
+    val keep = minHeight / BucketBlocks
     val dir = new java.io.File(path)
     if (dir.exists()) {
       val parts = dir.listFiles().toSeq

@@ -1,9 +1,10 @@
 package graft.state
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.bronze.BronzeExtractors
 import graft.metrics.Metrics
 import graft.model.{AccountsConfig, NearModel}
 
@@ -27,10 +28,11 @@ import graft.model.{AccountsConfig, NearModel}
   *    *results* the tiers are equivalent (lookups consult both); we
   *    carry the tier through so metrics/tests can observe promotions.
   *
-  * Everything resolves through the one core, [[fixpoint]]: the ingest
-  * fold ([[graft.streaming.StreamingResolver]], which both runners run
-  * per batch) over the carried TTL window plus one batch, and the
-  * queries' [[resolve]] over a whole chain slice.
+  * Everything resolves through the one core, [[fixpoint]], under one
+  * hop policy (every hop within the TTL, no depth bound): the ingest
+  * fold [[foldBatch]], which both runners run once per batch over the
+  * carried TTL window plus that batch, and the queries' [[resolve]]
+  * over a whole chain slice.
   */
 object ReceiptTxResolver {
 
@@ -87,7 +89,9 @@ object ReceiptTxResolver {
     * entries only (a parent resolved earlier emitted its children
     * earlier), keeps a hop iff it lies within `ttlBlocks` of its
     * parent's write (the per-hop Redis refresh), skips receipts already
-    * resolved and first-writes the rest, for at most `maxHops` rounds.
+    * resolved and first-writes the rest, until a round adds nothing.
+    * That ends: a receipt enters the resolved set once, so the rounds
+    * are bounded by the number of receipts.
     *
     * Entries and edges are unioned into one relation, coalesced to one
     * partition, and the fixpoint runs in a hash map inside that one
@@ -100,8 +104,8 @@ object ReceiptTxResolver {
     * runs (observe = zero extra jobs): entries by tier plus T4
     * promotions — the reference's cache promotion metric
     * (indexer-common/src/metrics.rs:36-88). */
-  def fixpoint(entries: DataFrame, edges: DataFrame, ttlBlocks: Long,
-      maxHops: Int): DataFrame = {
+  def fixpoint(entries: DataFrame, edges: DataFrame,
+      ttlBlocks: Long): DataFrame = {
     // a null tier reads as potential; rows without a key or target
     // cannot resolve anything
     val input = entries.select(col("receipt_id").as("k"),
@@ -113,7 +117,7 @@ object ReceiptTxResolver {
         col("hop_height").as("h"), lit(true).as("edge")))
       .filter(col("k").isNotNull && col("v").isNotNull)
     val resolved = input.coalesce(1)
-      .mapPartitions(rows => closure(rows, ttlBlocks, maxHops)
+      .mapPartitions(rows => closure(rows, ttlBlocks)
         .map { case (id, e) => Row(id, e.tx, e.main, e.height, e.promoted) }
       )(Encoders.row(coreSchema))
       .localCheckpoint()
@@ -125,8 +129,8 @@ object ReceiptTxResolver {
         .as("resolver_promoted_total"))
   }
 
-  private def closure(rows: Iterator[Row], ttlBlocks: Long,
-      maxHops: Int): Iterator[(String, Entry)] = {
+  private def closure(rows: Iterator[Row],
+      ttlBlocks: Long): Iterator[(String, Entry)] = {
     val resolved = mutable.HashMap.empty[String, Entry]
     val children =
       mutable.HashMap.empty[String, mutable.ArrayBuffer[(String, Boolean, Long)]]
@@ -140,8 +144,7 @@ object ReceiptTxResolver {
         Entry(r.getString(1), r.getBoolean(2), r.getLong(3), promoted = false))
     }
     var frontier: collection.Map[String, Entry] = resolved.clone()
-    var hops = 0
-    while (frontier.nonEmpty && hops < maxHops) {
+    while (frontier.nonEmpty) {
       val next = mutable.HashMap.empty[String, Entry]
       for ((parent, e) <- frontier;
            (child, hopMain, hopHeight) <- children.getOrElse(parent, Nil)
@@ -151,7 +154,6 @@ object ReceiptTxResolver {
           Entry(e.tx, e.main || hopMain, hopHeight, hopMain && !e.main))
       resolved ++= next
       frontier = next
-      hops += 1
     }
     resolved.iterator
   }
@@ -166,10 +168,64 @@ object ReceiptTxResolver {
       transactions: DataFrame,
       outcomes: DataFrame,
       ttlBlocks: Long = NearModel.TtlBlocks,
-      maxHops: Int = 32,
       accounts: AccountsConfig = AccountsConfig()): DataFrame =
-    fixpoint(seeds(transactions), edges(outcomes, accounts), ttlBlocks,
-      maxHops).drop("promoted")
+    fixpoint(seeds(transactions), edges(outcomes, accounts), ttlBlocks)
+      .drop("promoted")
+
+  /** Columns of the resolver state a fold carries between batches and
+    * the runners persist as `resolver_state`. */
+  val stateCols: Seq[String] =
+    Seq("receipt_id", "tx_hash", "main", "entry_height")
+
+  def emptyState(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(String, String, Boolean, Long)].toDF(stateCols: _*)
+  }
+
+  /** One batch of the ingest fold — the reference's Redis cache
+    * (indexer-common/src/cache/redis.rs:5-202) as a micro-batch fold,
+    * state ⊕ batch = state′, events(batch):
+    *
+    *  1. the batch's transactions seed their first receipts (T2),
+    *  2. [[fixpoint]] over carry ∪ seeds and the batch's edges (T3),
+    *  3. TTL: the carry keeps entries at most `ttlBlocks` below
+    *     `maxHeight`, the batch's newest block height (the `SET ... EX`
+    *     expiry),
+    *  4. the batch's events resolve against the lookup, TTL per row,
+    *     unresolved dropped (T5 warn-and-drop).
+    *
+    * The batch sees only its own blocks' rows (the CH-MV visibility
+    * contract, SURVEY §7.4 hazard 3) plus `state` (the [[stateCols]]).
+    *
+    * Returns (carry, lookup, events). The lookup is the untrimmed
+    * post-fixpoint entry set the batch's own rows resolve against,
+    * each at its own height (the `entryLive` contract of
+    * [[attachTxHash]]): the max-height trim of the carry is safe for
+    * later batches, whose rows are all higher, but an early block of a
+    * multi-block batch would miss entries it expired. The carry is not
+    * checkpointed: a narrow filter over the checkpointed lookup, so its
+    * consumers (the state write, the next batch's fixpoint) recompute
+    * only the filter. It keeps the lookup's checkpoint blocks alive
+    * into the next batch, so nothing may unpersist the lookup while
+    * the carry is live. */
+  def foldBatch(state: DataFrame, blocks: DataFrame,
+      accounts: AccountsConfig, ttlBlocks: Long,
+      maxHeight: Long): (DataFrame, DataFrame, DataFrame) = {
+    val outs = BronzeExtractors.outcomes(blocks)
+    // carried entries precede the batch's seeds in first-write order
+    // (lower heights), so existing state wins, and the first round's
+    // frontier is the full carry ∪ seeds (parents resolved in earlier
+    // batches count)
+    val lookup = fixpoint(
+      state.select(stateCols.map(col): _*)
+        .unionByName(seeds(BronzeExtractors.transactions(blocks, accounts))),
+      edges(outs, accounts), ttlBlocks)
+      .select(stateCols.map(col): _*)
+    val carry = lookup.filter(col("entry_height") >= maxHeight - ttlBlocks)
+    val events = attachTxHash(BronzeExtractors.eventRows(outs, accounts),
+      lookup, ttlBlocks = ttlBlocks)
+    (carry, lookup, events)
+  }
 
   /** An entry is readable at `atHeight` only while its TTL holds —
     * the Redis `SET ... EX` expiry seen by lookups (T1). Without this,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.model.{AccountsConfig, Block, NearModel}
 import graft.runner.BatchRunner
 import graft.sources.BlockFileSource
+import graft.state.ReceiptTxResolver
 
 /** Micro-batch driver for the streaming path: blocks arrive in height
   * order (the reference's buffer_unordered(1) strictly-sequential
@@ -16,8 +17,10 @@ import graft.sources.BlockFileSource
   * query (`readBlockStream` file source → `foreachBatch` fold →
   * [[graft.sink.ParquetSink]]) with a checkpointLocation, so a stopped
   * or crashed runner restarts where it left off. [[runMicroBatched]]
-  * drives the resolver fold directly without the streaming engine
-  * (deterministic single-JVM twin, used by unit suites).
+  * runs the resolver's one fold,
+  * [[graft.state.ReceiptTxResolver.foldBatch]], one block per batch
+  * without the streaming engine or the sinks (a deterministic
+  * single-JVM twin, used by unit suites).
   */
 object StreamRunner {
 
@@ -76,11 +79,12 @@ object StreamRunner {
       accounts: AccountsConfig = AccountsConfig(),
       ttlBlocks: Long = NearModel.TtlBlocks): DataFrame = {
     import spark.implicits._
-    var state = StreamingResolver.emptyState(spark)
+    var state = ReceiptTxResolver.emptyState(spark)
     val batches = blocks.sortBy(_.header.height).map { block =>
-      val (st2, events) = StreamingResolver.processBatch(
-        state, spark.createDataset(Seq(block)).toDF(), accounts, ttlBlocks)
-      state = st2
+      val (carry, _, events) = ReceiptTxResolver.foldBatch(state,
+        spark.createDataset(Seq(block)).toDF(), accounts, ttlBlocks,
+        block.header.height)
+      state = carry
       events.localCheckpoint()
     }
     batches.reduce(_ unionByName _)

@@ -2,15 +2,15 @@ package graft.tools
 
 import graft.model._
 
-/** Deep receipt-chain stress for the streaming resolver at
+/** Deep receipt-chain stress for the ingest resolver fold at
   * production state width: the other fixtures' chains are shallow
   * (≤5 hops) and their state tiny (tens of rows). This one drives the
-  * TTL bound (`StreamingResolver.processBatchFull`) and the one-task
-  * resolver core (`ReceiptTxResolver.fixpoint`, which holds the carried
-  * TTL window plus the batch's edges in one task) with state ~one TTL
-  * window wide. Reference semantics under test:
+  * fold's TTL bound (`ReceiptTxResolver.foldBatch`) and the one-task
+  * resolver core under it (`ReceiptTxResolver.fixpoint`, which holds
+  * the carried TTL window plus the batch's edges in one task) with
+  * state ~one TTL window wide. Reference semantics under test:
   * Redis `SET ... EX` expiry with refresh-on-hop under sustained load
-  * (`/root/reference/indexer-common/src/cache/redis.rs:5-143`).
+  * (`indexer-common/src/cache/redis.rs:5-143`).
   *
   * Corpus: `origins` tx chains START per block, each a chain of
   * 5–10 receipt hops with per-chain hop gap cycling {1,3,7,13,51}
@@ -22,7 +22,7 @@ import graft.model._
   * the state is production-order (NEAR mainnet carries hundreds of
   * receipts per block).
   *
-  * The stream folds `processBatchFull` over micro-batches of
+  * The stream folds `foldBatch` over micro-batches of
   * `batchBlocks` blocks for `nBlocks` total (≥3 TTL windows),
   * recording per-batch wall, carried-state rows, and resolved events.
   * Correctness is CLOSED-FORM: a chain's terminal nep245 event must
@@ -92,16 +92,15 @@ object ResolverStress {
 
     // ---- fold the stream
     val acc = AccountsConfig()
-    var state = graft.streaming.StreamingResolver.emptyState(spark)
+    var state = graft.state.ReceiptTxResolver.emptyState(spark)
     var gotEvents = 0L
     val memoTx = scala.collection.mutable.Map.empty[String, Set[String]]
     val perBatch = Seq.newBuilder[(Int, Double, Long, Long)]
     blocks.grouped(batchBlocks).zipWithIndex.foreach { case (bs, i) =>
       val df = spark.createDataset(bs).toDF()
       val tb0 = System.nanoTime()
-      val (carry, _, events) = graft.streaming.StreamingResolver
-        .processBatchFull(state, df, acc, ttl,
-          maxHeightHint = Some(bs.map(_.header.height).max))
+      val (carry, _, events) = graft.state.ReceiptTxResolver.foldBatch(
+        state, df, acc, ttl, bs.map(_.header.height).max)
       // events are bounded (≤ origins·batch terminal emissions): the
       // memo→tx collection is the closed-form correctness probe
       val ev = events

@@ -106,6 +106,60 @@ class NearPipelineSpec extends AnyFunSuite {
     assert(wideIds.contains("r9"))
   }
 
+  test("a 40-hop chain resolves whole: resolve and the ingest fold over " +
+    "one batch and over 10-block batches agree on every receipt and the " +
+    "terminal event") {
+    import spark.implicits._
+    // one hop per block, each 1 block after its parent's write (inside
+    // the TTL); the terminal outcome, on the last receipt, logs an event
+    val depth = 40
+    def rid(d: Int) = s"deep$d"
+    val eventLog = NearModel.EventJsonPrefix +
+      """{"standard":"nep245","version":"1.0.0","event":"mt_mint",""" +
+      """"data":[{"owner_id":"x.near","token_ids":["nep141:t.near"],""" +
+      """"amounts":["1"]}]}"""
+    def outcome(h: Long, d: Int, children: Seq[String], logs: Seq[String]) =
+      Block(BlockHeader(h, h * 1000000000L, s"D$h"), Seq(Shard(None, Seq(
+        OutcomeWithReceipt(ReceiptView(rid(d), "intents.near", "a.near",
+          "Action", Nil, None), s"od$d", OutcomeView("intents.near",
+          children, "SuccessValue", logs, "0", 1L))))))
+    val blocks = Block(BlockHeader(300L, 300000000000L, "D300"), Seq(Shard(
+      Some(Chunk(Seq(TxWithOutcome(TransactionView("deep-tx", "a.near",
+        "intents.near", Nil), "odtx", OutcomeView("a.near", Seq(rid(0)),
+        "SuccessReceiptId", Nil, "0", 1L))))), Nil))) +:
+      ((1 to depth).map(d => outcome(300L + d, d - 1, Seq(rid(d)), Nil)) :+
+        outcome(301L + depth, depth, Nil, Seq(eventLog)))
+    val want = (0 to depth).map(d => rid(d) -> "deep-tx").toSet
+    val wantEvents = Seq(rid(depth) -> "deep-tx")
+    def pairs(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c, "tx_hash").collect().map(r => r.getString(0) -> r.getString(1))
+
+    val df = spark.createDataset(blocks).toDF()
+    val outs = BronzeExtractors.outcomes(df)
+    val resolved = ReceiptTxResolver.resolve(
+      BronzeExtractors.transactions(df, acc), outs, accounts = acc)
+    assert(pairs(resolved, "receipt_id").toSet === want, "resolve")
+    assert(pairs(ReceiptTxResolver.attachTxHash(
+      BronzeExtractors.eventRows(outs, acc), resolved), "related_receipt_id")
+      .toSeq === wantEvents, "resolve events")
+
+    Seq(blocks.length, 10).foreach { size =>
+      var state = ReceiptTxResolver.emptyState(spark)
+      var seen = Seq.empty[(String, String)]
+      var events = Seq.empty[(String, String)]
+      blocks.grouped(size).foreach { bs =>
+        val (carry, lookup, ev) = ReceiptTxResolver.foldBatch(state,
+          spark.createDataset(bs).toDF(), acc, NearModel.TtlBlocks,
+          bs.map(_.header.height).max)
+        seen ++= pairs(lookup, "receipt_id")
+        events ++= pairs(ev, "related_receipt_id")
+        state = carry
+      }
+      assert(seen.toSet === want, s"$size-block fold")
+      assert(events === wantEvents, s"$size-block fold events")
+    }
+  }
+
   test("T4 promotion: children written by an of-interest outcome join " +
     "the MAIN tier even when the parent entry is potential") {
     import spark.implicits._

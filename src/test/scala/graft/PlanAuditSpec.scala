@@ -212,8 +212,7 @@ class PlanAuditSpec extends AnyFunSuite {
         .as("tx_hash"),
       (col("id") % 97).as("v"))
     graft.sink.ParquetSink.writeBatch(df, path, insertSeq = 1,
-      pkCols = Seq("tx_hash"), heightBucketSize = 500L,
-      bloomFilterCols = Seq("tx_hash"))
+      pkCols = Seq("tx_hash"), bloomFilterCols = Seq("tx_hash"))
 
     // (a) partition pruning: the TTL-window read touches only the tail
     // buckets no matter how long the history is
@@ -224,8 +223,7 @@ class PlanAuditSpec extends AnyFunSuite {
       rec(new java.io.File(path))
     }
     val pruned = graft.sink.ParquetSink.readFinalSince(
-      spark, path, Seq("tx_hash"), minHeight = 9000L,
-      heightBucketSize = 500L)
+      spark, path, Seq("tx_hash"), minHeight = 9000L)
     // collect() executes THIS dataset's own plan tree, so the scan
     // metrics below are populated on the nodes we inspect (count()
     // would build and execute a different QueryExecution)

@@ -832,18 +832,18 @@ class PropertySpec extends AnyFunSuite {
   /** Plain-Scala receipt → tx closure, the spec every resolver entry
     * point must equal: round 0 first-writes the entries; each round
     * extends the LAST round's new receipts along edges whose hop lies
-    * within `ttl` of the parent's write, skipping resolved receipts.
+    * within `ttl` of the parent's write, skipping resolved receipts,
+    * until a round adds nothing.
     * First write = least (height, tx, main first, not promoted). */
   private def closureModel(entries: Seq[ResEntry], edges: Seq[ResEdge],
-      ttl: Long, maxHops: Int): Map[String, (String, Boolean, Long, Boolean)] = {
+      ttl: Long): Map[String, (String, Boolean, Long, Boolean)] = {
     def first(cs: Seq[(String, Boolean, Long, Boolean)]) =
       cs.minBy(c => (c._3, c._1, !c._2, c._4))
     var done = entries.groupBy(_._1).map { case (id, es) =>
       id -> first(es.map(e => (e._2, e._3, e._4, false)))
     }
     var frontier = done
-    var round = 0
-    while (frontier.nonEmpty && round < maxHops) {
+    while (frontier.nonEmpty) {
       frontier = (for {
         (p, c, h, hopMain) <- edges
         (tx, main, eh, _) <- frontier.get(p).toSeq
@@ -851,7 +851,6 @@ class PropertySpec extends AnyFunSuite {
       } yield c -> (tx, main || hopMain, h, hopMain && !main))
         .groupBy(_._1).map { case (c, cs) => c -> first(cs.map(_._2)) }
       done ++= frontier
-      round += 1
     }
     done
   }
@@ -942,7 +941,6 @@ class PropertySpec extends AnyFunSuite {
     "and 10-block micro-batches all equal a plain-Scala closure") {
     import graft.bronze.BronzeExtractors
     import graft.state.ReceiptTxResolver
-    import graft.streaming.StreamingResolver
     import spark.implicits._
     val acc = graft.fixtures.NearFixtures.accounts
     val ttl = graft.model.NearModel.TtlBlocks
@@ -956,7 +954,7 @@ class PropertySpec extends AnyFunSuite {
 
     (1 to 3).foreach { seed =>
       val f = genForest(seed)
-      val want = closureModel(f.seeds, f.edges, ttl, Int.MaxValue)
+      val want = closureModel(f.seeds, f.edges, ttl)
       val wantRows = want.map { case (id, (tx, m, h, _)) => (id, tx, m, h) }.toSet
       val wantEvents = f.events.flatMap { case (rid, h) =>
         want.get(rid).collect {
@@ -966,21 +964,18 @@ class PropertySpec extends AnyFunSuite {
       assert(wantRows.map(_._1).size > f.seeds.map(_._1).distinct.size,
         s"seed $seed: forest resolves no hop")
 
-      // the core, with (height, tx)-tied seeds of both tiers added, and
-      // with a hop bound
+      // the core, with (height, tx)-tied seeds of both tiers added
       val tied = f.seeds.take(2).map { case (id, tx, m, h) => (id, tx, !m, h) }
       val entriesDf = (f.seeds ++ tied)
         .toDF("receipt_id", "tx_hash", "main", "entry_height")
       val edgesDf = f.edges
         .toDF("parent_receipt_id", "child_receipt_id", "hop_height", "hop_main")
-      Seq(Int.MaxValue, 2).foreach { hops =>
-        val core = ReceiptTxResolver.fixpoint(entriesDf, edgesDf, ttl, hops)
-          .collect().map(r => r.getString(0) ->
-            (r.getString(1), r.getBoolean(2), r.getLong(3), r.getBoolean(4)))
-        assert(core.length === core.map(_._1).distinct.length)
-        assert(core.toMap === closureModel(f.seeds ++ tied, f.edges, ttl, hops),
-          s"seed $seed: core (maxHops $hops)")
-      }
+      val core = ReceiptTxResolver.fixpoint(entriesDf, edgesDf, ttl)
+        .collect().map(r => r.getString(0) ->
+          (r.getString(1), r.getBoolean(2), r.getLong(3), r.getBoolean(4)))
+      assert(core.length === core.map(_._1).distinct.length)
+      assert(core.toMap === closureModel(f.seeds ++ tied, f.edges, ttl),
+        s"seed $seed: core")
 
       val df = spark.createDataset(f.blocks).toDF()
       val outs = BronzeExtractors.outcomes(df)
@@ -992,13 +987,13 @@ class PropertySpec extends AnyFunSuite {
         ttlBlocks = ttl)) === wantEvents, s"seed $seed: resolve events")
 
       Seq(1, 3, 10).foreach { size =>
-        var state = StreamingResolver.emptyState(spark)
+        var state = ReceiptTxResolver.emptyState(spark)
         var seen = Set.empty[ResEntry]
         var events = Seq.empty[(String, Long, String)]
         f.blocks.grouped(size).foreach { bs =>
-          val (carry, lookup, ev) = StreamingResolver.processBatchFull(
+          val (carry, lookup, ev) = ReceiptTxResolver.foldBatch(
             state, spark.createDataset(bs).toDF(), acc, ttl,
-            maxHeightHint = Some(bs.map(_.header.height).max))
+            bs.map(_.header.height).max)
           seen ++= rows(lookup)
           events ++= eventRows(ev)
           state = carry
@@ -1016,7 +1011,6 @@ class PropertySpec extends AnyFunSuite {
     import graft.bronze.BronzeExtractors
     import graft.model._
     import graft.state.ReceiptTxResolver
-    import graft.streaming.StreamingResolver
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     val acc = graft.fixtures.NearFixtures.accounts
@@ -1051,9 +1045,9 @@ class PropertySpec extends AnyFunSuite {
     }
     val counts = Seq(1, 8).map { depth =>
       val df = spark.createDataset(chain(depth)).toDF()
-      val (fold, (_, lookup, _)) = jobsDuring(StreamingResolver.processBatchFull(
-        StreamingResolver.emptyState(spark), df, acc,
-        maxHeightHint = Some(100L + depth)))
+      val (fold, (_, lookup, _)) = jobsDuring(ReceiptTxResolver.foldBatch(
+        ReceiptTxResolver.emptyState(spark), df, acc, NearModel.TtlBlocks,
+        100L + depth))
       val (batch, resolved) = jobsDuring(ReceiptTxResolver.resolve(
         BronzeExtractors.transactions(df, acc),
         BronzeExtractors.outcomes(df), accounts = acc))

@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.NearFixtures
 import graft.model.Block
+import graft.model.NearModel.TtlBlocks
 import graft.queries.NearQueries
 import graft.silver.SilverTransforms
-import graft.streaming.{StreamRunner, StreamingResolver}
+import graft.runner.BatchRunner
+import graft.state.ReceiptTxResolver
+import graft.streaming.StreamRunner
 
 /** Long-running suites (the cascade soak) — excludable with
   * `testOnly * -- -l graft.Slow` when iterating. */
@@ -30,11 +33,11 @@ class StreamingSpec extends AnyFunSuite {
   test("per-micro-batch silver transforms equal whole-table silver " +
     "(CH-MV visibility contract)") {
     import spark.implicits._
-    var state = StreamingResolver.emptyState(spark)
+    var state = ReceiptTxResolver.emptyState(spark)
     val perBatch = NearFixtures.blocks.sortBy(_.header.height).map { b =>
-      val (st2, events) = StreamingResolver.processBatch(
-        state, spark.createDataset(Seq(b)).toDF(), acc)
-      state = st2
+      val (carry, _, events) = ReceiptTxResolver.foldBatch(state,
+        spark.createDataset(Seq(b)).toDF(), acc, TtlBlocks, b.header.height)
+      state = carry
       // the MV fires per insert batch and sees only that batch's rows
       SilverTransforms.nep245Events(
         events.select(NearFixtures.eventCols.map(col): _*)).localCheckpoint()
@@ -52,19 +55,19 @@ class StreamingSpec extends AnyFunSuite {
     val path = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_test_blocks").getAbsolutePath
     BlockFileSource.writeBlockFiles(spark, NearFixtures.blocks, path)
-    var state = StreamingResolver.emptyState(spark)
+    var state = ReceiptTxResolver.emptyState(spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val query = BlockFileSource.readBlockStream(spark, path).writeStream
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val (st2, events) = StreamingResolver.processBatch(state, batch, acc)
-          state = st2
+        BatchRunner.heightRange(batch).foreach { case (_, maxH, _) =>
+          val (carry, _, events) = ReceiptTxResolver.foldBatch(state, batch,
+            acc, TtlBlocks, maxH)
+          state = carry
           collected += events
             .select(NearFixtures.eventCols.map(col): _*).localCheckpoint()
         }
-        ()
       }
       .start()
     query.awaitTermination(120000L)
@@ -291,18 +294,18 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Block]
-    var state = StreamingResolver.emptyState(spark)
+    var state = ReceiptTxResolver.emptyState(spark)
     val collected = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val query = source.toDF().writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val (st2, events) = StreamingResolver.processBatch(state, batch, acc)
-          state = st2
+        BatchRunner.heightRange(batch).foreach { case (_, maxH, _) =>
+          val (carry, _, events) = ReceiptTxResolver.foldBatch(state, batch,
+            acc, TtlBlocks, maxH)
+          state = carry
           collected += events
             .select(NearFixtures.eventCols.map(col): _*).localCheckpoint()
         }
-        ()
       }
       .start()
     try {
