@@ -67,12 +67,15 @@ object BatchRunner {
     case (name, pk) => name -> pk.getOrElse(silverClusterKeys)
   }.toMap
 
-  /** The append of `df` to product table `name` as batch `seq`, named
-    * after the reference's `insert_<table>_to_db` span. */
-  private def insert(warehouse: String, seq: Long, name: String,
+  /** The append of `df`, rows of heights `minH`..`maxH`, to product
+    * table `name` as batch `maxH`, named after the reference's
+    * `insert_<table>_to_db` span. The height range sizes the write's
+    * shuffle to the buckets it spans. */
+  private def insert(warehouse: String, minH: Long, maxH: Long, name: String,
       df: => DataFrame): (String, () => Unit) =
     s"insert_${name}_to_db" -> (() => ParquetSink.writeBatch(df,
-      s"$warehouse/$name", seq, clusterKeys(name)))
+      s"$warehouse/$name", maxH, clusterKeys(name),
+      heights = Some((minH, maxH))))
 
   /** Current daily totals of the incremental gold rollup: keyed FINAL
     * over the block-grain MV rows (replays absorbed like any product
@@ -94,12 +97,13 @@ object BatchRunner {
     * the streaming and batch warehouses write the identical table set
     * and the parity suite covers all of them via [[productTables]].
     * Each MV fires on the inserted batch only — incremental by
-    * construction, like the ClickHouse originals. */
+    * construction, like the ClickHouse originals. `events` are the
+    * batch of heights `minH`..`maxH`, written as batch `maxH`. */
   def writeSilverCascade(events: DataFrame, accounts: AccountsConfig,
-      warehouse: String, seq: Long): Unit = {
+      warehouse: String, minH: Long, maxH: Long): Unit = {
     val nep245 = SilverTransforms.nep245Events(events)
     def write(name: String, df: => DataFrame) =
-      insert(warehouse, seq, name, df)
+      insert(warehouse, minH, maxH, name, df)
     // the 8 cascade writes have no inter-table ordering constraint, so
     // they run concurrently
     concurrently(Seq(
@@ -184,7 +188,9 @@ object BatchRunner {
     * receipts, execution outcomes, events and the silver cascade
     * concurrently, then the resolver state, then the transactions.
     * Returns the carry: the TTL-trimmed state for a next batch of
-    * higher blocks.
+    * higher blocks. Every write is told the batch's height range, so
+    * its shuffle is as wide as the buckets `minH`..`maxH` spans (one on
+    * most live batches), not the session's shuffle width.
     *
     * Write order is the restart contract. The transactions table is the
     * resume marker (`lastHeight` reads it), so it commits LAST: a crash
@@ -238,13 +244,13 @@ object BatchRunner {
           ReceiptTxResolver.attachParentTx(rows, lookupShuffled, ttlBlocks)
         span("insert_batches") {
           concurrently(Seq(
-            insert(warehouse, maxH, "receipts",
+            insert(warehouse, minH, maxH, "receipts",
               withParentTx(BronzeExtractors.receiptRows(ofInt))),
-            insert(warehouse, maxH, "execution_outcomes",
+            insert(warehouse, minH, maxH, "execution_outcomes",
               withParentTx(BronzeExtractors.executionOutcomeRows(ofInt))),
-            insert(warehouse, maxH, "events", events),
+            insert(warehouse, minH, maxH, "events", events),
             "silver_cascade" -> (() =>
-              writeSilverCascade(events, accounts, warehouse, maxH))),
+              writeSilverCascade(events, accounts, warehouse, minH, maxH))),
             before = failpoint(maxH, _))
         }
         span("persist_resolver_state") {
@@ -252,13 +258,14 @@ object BatchRunner {
           // block_height = entry_height drives the sink's bucketing
           ParquetSink.writeBatch(lookup.filter(col("entry_height") >= minH)
             .withColumn("block_height", col("entry_height")),
-            s"$warehouse/resolver_state", maxH, statePk)
+            s"$warehouse/resolver_state", maxH, statePk,
+            heights = Some((minH, maxH)))
           ParquetSink.dropBucketsBelow(s"$warehouse/resolver_state",
             minH - ttlBlocks)
         }
         span("handle_transactions") {
           failpoint(maxH, 5)
-          val (name, write) = insert(warehouse, maxH, "transactions",
+          val (name, write) = insert(warehouse, minH, maxH, "transactions",
             BronzeExtractors.transactionRows(blocks, accounts))
           span(name)(write())
         }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.{AccountsConfig, Block, NearModel}
 import graft.runner.BatchRunner
+import graft.sink.{ForkFreeLocalFs, ParquetSink}
 import graft.sources.BlockFileSource
 import graft.state.ReceiptTxResolver
 
@@ -45,7 +46,12 @@ object StreamRunner {
     *    at-least-once + ReplacingMergeTree pairing exactly.
     *
     * `failpoint` is the crash-injection seam of
-    * [[graft.runner.BatchRunner.ingestBatch]]; default no-op. */
+    * [[graft.runner.BatchRunner.ingestBatch]]; default no-op.
+    *
+    * The query runs under [[graft.sink.ForkFreeLocalFs.checkpointConf]]
+    * for its whole life, so the checkpoint's offset, commit and source
+    * logs (`FileContext` on `file:`) set permissions and read link
+    * status in-process instead of forking `chmod` and `readlink`. */
   def runStream(
       spark: SparkSession,
       blocksDir: String,
@@ -54,21 +60,23 @@ object StreamRunner {
       ttlBlocks: Long = NearModel.TtlBlocks,
       failpoint: (Long, Int) => Unit = (_, _) => ()): Unit = {
     var state = BatchRunner.loadState(spark, warehouse)
-    BlockFileSource.readBlockStream(spark, blocksDir)
-      .writeStream
-      .option("checkpointLocation", s"$warehouse/_stream_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one materialized read of the micro-batch, which every branch
-        // of the batch body reuses
-        val blocks = batch.localCheckpoint(eager = false)
-        BatchRunner.heightRange(blocks).foreach { case (minH, maxH, _) =>
-          state = BatchRunner.ingestBatch(blocks, minH, maxH, state,
-            warehouse, accounts, ttlBlocks, failpoint)
+    ParquetSink.withConf(Seq(spark), ForkFreeLocalFs.checkpointConf) {
+      BlockFileSource.readBlockStream(spark, blocksDir)
+        .writeStream
+        .option("checkpointLocation", s"$warehouse/_stream_checkpoint")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // one materialized read of the micro-batch, which every branch
+          // of the batch body reuses
+          val blocks = batch.localCheckpoint(eager = false)
+          BatchRunner.heightRange(blocks).foreach { case (minH, maxH, _) =>
+            state = BatchRunner.ingestBatch(blocks, minH, maxH, state,
+              warehouse, accounts, ttlBlocks, failpoint)
+          }
         }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
   }
 
   /** Fold the blocks one-per-micro-batch; returns the accumulated

@@ -12,23 +12,26 @@ import graft.model._
   * Redis `SET ... EX` expiry with refresh-on-hop under sustained load
   * (`indexer-common/src/cache/redis.rs:5-143`).
   *
-  * Corpus: `origins` tx chains START per block, each a chain of
-  * 5–10 receipt hops with per-chain hop gap cycling {1,3,7,13,51}
-  * blocks — so chains cross many micro-batch boundaries (max span
-  * 10·13 = 130 blocks ≫ the batch size) and the 51-gap chains exceed
-  * the 50-block TTL at every hop (the expiry path, expected to DROP
-  * their terminal events). At the defaults (40 origins × avg 7.5
-  * hops ≈ 340 state entries per block × TTL 50 ≈ 17k live entries)
-  * the state is production-order (NEAR mainnet carries hundreds of
-  * receipts per block).
+  * Corpus: `origins` tx chains START per block, each with a per-chain
+  * hop gap cycling {1,3,7,13,51} blocks. Chains within the TTL are
+  * 5–10 receipt hops deep, so they cross many micro-batch boundaries
+  * (max span 10·13 = 130 blocks ≫ the batch size). The 51-gap chains
+  * exceed the 50-block TTL at every hop (the expiry path, expected to
+  * DROP their terminal events); they are 2 hops deep, so a chain that
+  * starts in the first `nBlocks` − 102 blocks ends inside the horizon
+  * and the drop is tested, not assumed. At the defaults (40 origins ×
+  * ≈7.4 receipts per chain ≈ 300 state entries per block × TTL 50 ≈
+  * 15k live entries) the state is production-order (NEAR mainnet
+  * carries hundreds of receipts per block).
   *
   * The stream folds `foldBatch` over micro-batches of
   * `batchBlocks` blocks for `nBlocks` total (≥3 TTL windows),
   * recording per-batch wall, carried-state rows, and resolved events.
   * Correctness is CLOSED-FORM: a chain's terminal nep245 event must
   * resolve to `tx{h0}` iff its gap ≤ TTL and its last hop lands
-  * inside the horizon; 51-gap chains must contribute zero events.
-  * Exit non-zero on any mismatch.
+  * inside the horizon; 51-gap chains must contribute zero events, and
+  * at least one of them must end inside the horizon. Exit non-zero on
+  * any mismatch.
   *
   * `tools/run_main.sh graft.tools.ResolverStress [nBlocks] [origins] [batchBlocks]`
   */
@@ -54,9 +57,10 @@ object ResolverStress {
       .empty[Long, Vector[OutcomeWithReceipt]].withDefaultValue(Vector.empty)
     var expectResolved = 0L // terminal events that MUST resolve
     var expectDropped = 0L  // terminal events that MUST drop (TTL)
+    val droppedMemos = scala.collection.mutable.Set.empty[String]
     for (h0 <- base until base + nBlocks; k <- 0 until origins) {
       val g = gaps((k + (h0 - base).toInt) % gaps.length)
-      val dMax = 5 + (k % 6) // 5..10 hops
+      val dMax = if (g > ttl) 2 else 5 + (k % 6) // 5..10 hops in the TTL
       def rid(d: Int) = s"r${h0}k${k}x$d"
       txsAt(h0) = txsAt(h0) :+ TxWithOutcome(
         TransactionView(s"tx${h0}k$k", "alice.near", "intents.near",
@@ -71,7 +75,10 @@ object ResolverStress {
           else Seq(NearModel.EventJsonPrefix +
             s"""{"standard":"nep245","version":"1.0.0","event":"mt_transfer","data":""" +
             s"""[{"memo":"m${h0}k$k","old_owner_id":"a$k.near","new_owner_id":"b$k.near","token_ids":["nep141:usdc.near"],"amounts":["$k"]}]}""")
-        if (terminal) { if (g <= ttl) expectResolved += 1 else expectDropped += 1 }
+        if (terminal) {
+          if (g <= ttl) expectResolved += 1
+          else { expectDropped += 1; droppedMemos += s"m${h0}k$k" }
+        }
         outsAt(hd) = outsAt(hd) :+ OutcomeWithReceipt(
           ReceiptView(rid(d - 1), "intents.near",
             if (d == 1) "alice.near" else "intents.near", "Action", Nil, None),
@@ -136,6 +143,10 @@ object ResolverStress {
     }
     check("tx_attribution", wrongTx.isEmpty,
       s""""wrong":${wrongTx.size},"sample":"${wrongTx.take(3).mkString(";").replace("\"", "'")}"""")
+    // an expired chain's terminal event must not be emitted at all
+    val leaked = memoTx.keySet.intersect(droppedMemos)
+    check("ttl_drop", expectDropped > 0 && leaked.isEmpty,
+      s""""expect_dropped":$expectDropped,"emitted":${leaked.size}""")
     val pb = perBatch.result()
     // drift: median per-batch wall + state rows, first vs last TTL
     // window (warmup batch 0 excluded from the first window)

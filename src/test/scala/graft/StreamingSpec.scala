@@ -289,6 +289,59 @@ class StreamingSpec extends AnyFunSuite {
       secs <= BigDecimal(ns1) / 1e9, s"$secs s vs [$ns0, $ns1] ns")
   }
 
+  test("runStream's steady-state sink writes start no chmod process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    def tmp(name: String): String = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
+      graft.sink.ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val blocksDir = tmp("forks_blocks")
+    // 30 blocks, 6 per file: five micro-batches
+    graft.sources.BlockFileSource.writeBlockFilesChunked(spark,
+      graft.fixtures.BlockGen.genBlocks(30, rich = true), blocksDir, 6)
+    // every process the JVM starts, with the stack that started it,
+    // from the second batch's first write on (the first batch's
+    // interval holds the stream's one-time checkpoint setup)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    var batches = 0
+    try {
+      StreamRunner.runStream(spark, blocksDir, tmp("forks_wh"), acc,
+        failpoint = (_, writePoint) => if (writePoint == 0) {
+          batches += 1
+          if (batches == 2) rec.start()
+        })
+      assert(batches === 5)
+      rec.stop()
+      val file = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+      try {
+        rec.dump(file)
+        val stacks = RecordingFile.readAllEvents(file).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(e => Option(e.getStackTrace).toSeq
+            .flatMap(_.getFrames.asScala)
+            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
+        // a sink write: a Spark file-format write task or its job
+        // commit (stream checkpoint logs write through FileContext)
+        def sinkWrite(frame: String) =
+          frame.startsWith("org.apache.spark.sql.execution.datasources.") ||
+            frame.startsWith("org.apache.spark.internal.io.") ||
+            frame.startsWith("graft.sink.ParquetSink")
+        val sinkChmods = stacks.filter(s =>
+          s.contains("org.apache.hadoop.fs.RawLocalFileSystem.setPermission") &&
+            s.exists(sinkWrite))
+        info(s"processes started over 4 steady-state batches: " +
+          s"${stacks.size}, chmod under a sink write: ${sinkChmods.size}")
+        assert(sinkChmods.isEmpty,
+          sinkChmods.headOption.map(_.take(25).mkString("\n  ")))
+      } finally java.nio.file.Files.delete(file)
+    } finally rec.close()
+  }
+
   test("real Structured Streaming wiring: MemoryStream + foreachBatch, " +
     "one block per micro-batch") {
     import spark.implicits._
