@@ -106,7 +106,7 @@ object BatchRunner {
       insert(warehouse, minH, maxH, name, df)
     // the 8 cascade writes have no inter-table ordering constraint, so
     // they run concurrently
-    concurrently(Seq(
+    concurrently(events.sparkSession, Seq(
       // incremental gold rollup at the replay-atomic (block, token)
       // grain — resume-overlap replays rewrite identical rows and
       // keyed FINAL absorbs them (see GoldViews.blockTransferRollup)
@@ -128,33 +128,60 @@ object BatchRunner {
   }
 
   /** Submit `writes` as concurrent Spark jobs, each under its named
-    * span; `before(i)` runs ahead of launching write i (the failpoint
-    * seam). Every write is an idempotent PK-FINAL insert, and a crash
-    * leaving any subset written replays the batch into the same keys —
-    * the reference's own sinks write async under tokio. A throw from
-    * `before` stops launching; the first failure is rethrown only after
-    * every launched write has terminated, so none keeps running as a
-    * zombie past the batch's failure boundary, racing the replay. */
-  private def concurrently(writes: Seq[(String, () => Unit)],
+    * span; `before(i)` runs on the calling thread ahead of launching
+    * write i, in order (the failpoint seam). Every write is an
+    * idempotent PK-FINAL insert, and a crash leaving any subset written
+    * replays the batch into the same keys — the reference's own sinks
+    * write async under tokio. A throw from `before` stops launching; the
+    * first failure is rethrown only after every launched write has
+    * terminated, so none keeps running as a zombie past the batch's
+    * failure boundary, racing the replay.
+    *
+    * Each write starts at once on [[writePool]], so a nested call (the
+    * silver cascade inside the batch's writes) never waits for a thread,
+    * and runs with `session` active and the calling thread's Spark local
+    * properties: the stream's job group, micro-batch id and root
+    * execution id, so the query's `cancelJobGroup` reaches the write and
+    * listeners file its jobs under the batch that started them. */
+  private[graft] def concurrently(session: SparkSession,
+      writes: Seq[(String, () => Unit)],
       before: Int => Unit = _ => ()): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // span parent captured HERE: the Futures run on pool threads that
-    // inherit neither the trace stack nor Spark's local properties
+    import java.util.concurrent.{CompletableFuture, ExecutionException}
+    import org.apache.spark.sql.execution.SQLExecution
+    val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // span parent captured HERE: the trace stack is not a Spark local
+    // property, so the pool thread re-roots at it
     val ctx = Tracing.context()
-    val launched = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    val launched =
+      scala.collection.mutable.ArrayBuffer.empty[CompletableFuture[Unit]]
     val stopped = try {
       writes.zipWithIndex.foreach { case ((name, write), i) =>
         before(i)
-        launched += Future(Tracing.spanIn(ctx, name)(write()))
+        launched += SQLExecution.withThreadLocalCaptured(classic, writePool)(
+          Tracing.spanIn(ctx, name)(write()))
       }
       None
     } catch { case e: Throwable => Some(e) }
-    val outcomes = launched.toSeq.map(f =>
-      scala.util.Try(Await.result(f, Duration.Inf)))
+    val failures = launched.toSeq.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
     stopped.foreach(e => throw e)
-    outcomes.foreach(_.get) // rethrows the first write failure, if any
+    failures.headOption.foreach(e => throw e)
+  }
+
+  /** The threads [[concurrently]] writes on: a cached pool, so all of a
+    * batch's writes are in flight together (the three bronze writes, the
+    * silver cascade and its eight nested writes). A pool of fixed
+    * parallelism queues the nested writes behind their waiting parents:
+    * a Spark job wait does not signal `scala.concurrent.blocking`
+    * (SPARK-13747). Daemon threads, so an idle pool never holds the JVM
+    * open; idle threads exit after a minute. */
+  private val writePool = java.util.concurrent.Executors.newCachedThreadPool {
+    (r: Runnable) =>
+      val t = new Thread(r, "graft-batch-write")
+      t.setDaemon(true)
+      t
   }
 
   /** (min height, max height, block count) of a block batch, None when
@@ -243,7 +270,7 @@ object BatchRunner {
         def withParentTx(rows: DataFrame) =
           ReceiptTxResolver.attachParentTx(rows, lookupShuffled, ttlBlocks)
         span("insert_batches") {
-          concurrently(Seq(
+          concurrently(blocks.sparkSession, Seq(
             insert(warehouse, minH, maxH, "receipts",
               withParentTx(BronzeExtractors.receiptRows(ofInt))),
             insert(warehouse, minH, maxH, "execution_outcomes",

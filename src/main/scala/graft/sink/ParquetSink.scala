@@ -118,10 +118,11 @@ object ParquetSink {
     * and clustered by PK within files.
     *
     * The write runs with AQE off ([[withConf]]): its plan ends in
-    * repartition-by-bucket → sort → write, and the output file count is
-    * fixed by the bucket values whatever the partition coalescing — so
-    * AQE adds nothing to the write itself but DOES materialize the
-    * shuffle as an extra Spark job, paid per table per micro-batch.
+    * repartition-by-bucket (or a one-task coalesce) → sort → write, and
+    * the output file count is fixed by the bucket values whatever the
+    * partition coalescing — so AQE adds nothing to the write itself but
+    * DOES materialize the shuffle as an extra Spark job, paid per table
+    * per micro-batch.
     * Wrapped plans that embed upstream joins (`attachParentTx` in the
     * ingest batch) lose AQE's runtime skew split for the write; their
     * inputs are bounded by one batch.
@@ -129,10 +130,13 @@ object ParquetSink {
     * `heights` = Some((lo, hi)) promises every row's `block_height` lies
     * in `[lo, hi]`; the write then shuffles to one partition per bucket
     * the range spans (capped at `spark.sql.shuffle.partitions`) instead
-    * of the session's full width, so a one-bucket ingest batch runs one
-    * write task, not one per shuffle partition with all but one empty.
-    * Files and rows are the same either way: each bucket lands in
-    * exactly one task.
+    * of the session's full width, and a range inside one bucket (most
+    * live ingest batches) is not shuffled at all but coalesced into one
+    * task. Files and rows are the same as at full width: each bucket
+    * lands in exactly one task.
+    *
+    * Rows within each file are in `pkCols` order (see [[appendBucketed]]),
+    * the clustering the "Scale notes" above rely on for row-group pruning.
     *
     * `bloomFilterCols` writes a parquet BLOOM FILTER per named column —
     * the Spark twin of the reference's `bloom_filter()` skip indexes on
@@ -161,32 +165,42 @@ object ParquetSink {
     }
 
   /** The bucket layout every write shares: `height_bucket` =
-    * block_height DIV [[BucketBlocks]], rows hash-partitioned by bucket
-    * (so each bucket is written by one task, as one file) and sorted by
-    * `clusterKeys` within a partition, appended `partitionBy`
-    * `extraPartitionCols` then the bucket. The shuffle is
+    * block_height DIV [[BucketBlocks]], each bucket written by one task
+    * as one file, rows sorted by `extraPartitionCols`, the bucket, then
+    * `clusterKeys`, appended `partitionBy` `extraPartitionCols` then the
+    * bucket. The sort leads with the partition columns because Spark's
+    * planned write requires that ordering: a sort on `clusterKeys` alone
+    * gets a partition-column sort planned above it, and the optimizer
+    * then drops the cluster-key sort.
+    *
+    * Rows reach their bucket's task by a hash shuffle on the bucket,
     * `spark.sql.shuffle.partitions` wide, or as wide as the buckets
-    * `heights` spans when that is fewer (see [[writeBatch]]). Every
-    * write goes through [[ForkFreeLocalFs]]. */
+    * `heights` spans when that is fewer (see [[writeBatch]]). When
+    * `heights` spans one bucket, `coalesce(1)` replaces the shuffle: the
+    * same single task and file, without the exchange and its map stage.
+    * Every write goes through [[ForkFreeLocalFs]]. */
   private def appendBucketed(df: DataFrame, path: String,
       clusterKeys: Seq[String], options: Map[String, String] = Map.empty,
       extraPartitionCols: Seq[String] = Nil,
       heights: Option[(Long, Long)] = None): Unit = {
     val bucketed =
       df.withColumn("height_bucket", expr(s"block_height DIV ${BucketBlocks}L"))
-    val shuffled = heights match {
+    val placed = heights match {
+      case Some((lo, hi)) if lo / BucketBlocks == hi / BucketBlocks =>
+        bucketed.coalesce(1)
       case Some((lo, hi)) =>
-        val spanned = math.max(1L, hi / BucketBlocks - lo / BucketBlocks + 1)
+        val spanned = hi / BucketBlocks - lo / BucketBlocks + 1
         val width =
           df.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
         bucketed.repartition(math.min(spanned, width).toInt,
           col("height_bucket"))
       case None => bucketed.repartition(col("height_bucket"))
     }
-    shuffled
-      .sortWithinPartitions(clusterKeys.map(col): _*)
+    val partitionCols = extraPartitionCols :+ "height_bucket"
+    placed
+      .sortWithinPartitions((partitionCols ++ clusterKeys).map(col): _*)
       .write.mode("append").options(ForkFreeLocalFs.writeOptions ++ options)
-      .partitionBy(extraPartitionCols :+ "height_bucket": _*)
+      .partitionBy(partitionCols: _*)
       .parquet(path)
   }
 

@@ -13,8 +13,10 @@ import graft.runner.BatchRunner
 import graft.sink.{ForkFreeRawLocalFileSystem, ParquetSink}
 
 /** The sink's write layer: the fork-free local file system keeps the
-  * stock file system's on-disk result, and a one-bucket ingest batch
-  * writes each table with one task. */
+  * stock file system's on-disk result, a one-bucket ingest batch writes
+  * each table with one task and no exchange, every file is in its
+  * cluster-key order, and [[BatchRunner.concurrently]] starts every
+  * write of a batch at once. */
 class SinkWriteSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
@@ -170,6 +172,158 @@ class SinkWriteSpec extends AnyFunSuite {
     val written = BatchRunner.productTables.map(_._1) :+ "resolver_state"
     assert(tasksPerTable === written.map(_ -> 1).toMap)
     assert(images === FullWidthImages)
+  }
+
+  /** Every parquet data file under `root`. */
+  private def dataFiles(root: String): Seq[JPath] =
+    Files.walk(java.nio.file.Paths.get(root)).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet")).sorted
+
+  test("every written file holds its rows in cluster-key order") {
+    import spark.implicits._
+    // ids shuffled against the input order, heights 0..29 in one bucket
+    // or 0..145 over three
+    val ids = new scala.util.Random(7).shuffle((0 until 30).toList)
+    def frame(step: Long) = ids.zipWithIndex
+      .map { case (id, i) => (id.toLong, i * step, s"v$id") }
+      .toDF("id", "block_height", "v").repartition(3)
+    Seq(
+      ("no_heights", frame(5L), None, 3),
+      ("one_bucket", frame(1L), Some((0L, 29L)), 1),
+      ("three_buckets", frame(5L), Some((0L, 145L)), 3)
+    ).foreach { case (name, df, heights, files) =>
+      val path = tmp(s"clustered_$name")
+      ParquetSink.writeBatch(df, path, 1L, Seq("id"), heights = heights)
+      val written = dataFiles(path)
+      assert(written.size === files, name)
+      written.foreach { f =>
+        val got = spark.read.parquet(f.toString).select("id").as[Long]
+          .collect().toSeq
+        assert(got.nonEmpty && got === got.sorted, s"$name $f")
+      }
+      assert(written.map(f => spark.read.parquet(f.toString).count()).sum ===
+        30L, name)
+    }
+  }
+
+  /** (target table, every plan node's one-line string) of each insert
+    * that `body` runs. */
+  private def insertPlans(body: => Unit): Seq[(String, Seq[String])] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val insertInto = """InsertIntoHadoopFsRelationCommand\s+([^,\s]+)""".r
+      .unanchored
+    def nodes(p: SparkPlanInfo): Seq[String] =
+      p.simpleString +: p.children.flatMap(nodes)
+    val plans =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          s.sparkPlanInfo.simpleString match {
+            case insertInto(path) => plans.add(
+              path.stripSuffix("/").split('/').last -> nodes(s.sparkPlanInfo))
+            case _ => ()
+          }
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    plans.asScala.toSeq
+  }
+
+  test("a one-bucket ingest batch writes with no repartition exchange; a " +
+    "three-bucket write keeps it, one file per bucket") {
+    val blocksDir = tmp("no_exchange_blocks")
+    val wh = tmp("no_exchange_wh")
+    // heights 1000..1009: one 50-block bucket
+    graft.sources.BlockFileSource.writeBlockFiles(spark,
+      BlockGen.genBlocks(10, rich = true), blocksDir)
+    val oneBucket = insertPlans {
+      BatchRunner.run(spark, blocksDir, wh, NearFixtures.accounts): Unit
+    }
+    val written = BatchRunner.productTables.map(_._1) :+ "resolver_state"
+    assert(oneBucket.map(_._1).toSet === written.toSet)
+    oneBucket.foreach { case (table, plan) =>
+      assert(!plan.exists(_.contains("REPARTITION_BY_NUM")),
+        s"$table:\n${plan.mkString("\n")}")
+    }
+
+    import spark.implicits._
+    val path = tmp("three_bucket_write")
+    val threeBuckets = insertPlans {
+      ParquetSink.writeBatch((0 until 30).map(i => (i.toLong, 5L * i))
+        .toDF("id", "block_height"), path, 1L, Seq("id"),
+        heights = Some((0L, 145L)))
+    }
+    assert(threeBuckets.size === 1)
+    assert(threeBuckets.head._2.exists(_.contains("REPARTITION_BY_NUM")),
+      threeBuckets.head._2.mkString("\n"))
+    assert(dataFiles(path).map(_.getParent.getFileName.toString) ===
+      Seq("height_bucket=0", "height_bucket=1", "height_bucket=2"))
+  }
+
+  test("concurrently starts every write at once, nested writes included, " +
+    "with the caller's Spark local properties") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    // the ingest batch's shape: three writes beside a cascade of eight;
+    // each write returns only once all eleven are in flight
+    def batch(tag: String): Seq[String] = {
+      val latch = new CountDownLatch(11)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      def write(name: String): (String, () => Unit) = name -> (() => {
+        seen.add(String.valueOf(sc.getLocalProperty("graft.test.batch")))
+        latch.countDown()
+        assert(latch.await(20, TimeUnit.SECONDS),
+          s"$name: ${latch.getCount} of 11 writes never started")
+      })
+      val launchedOn = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      sc.setLocalProperty("graft.test.batch", tag)
+      try BatchRunner.concurrently(spark,
+        Seq(write("receipts"), write("execution_outcomes"), write("events"),
+          "silver_cascade" -> (() => BatchRunner.concurrently(spark,
+            (1 to 8).map(i => write(s"silver_$i"))))),
+        before = i => launchedOn += i -> Thread.currentThread.getName)
+      finally sc.setLocalProperty("graft.test.batch", null)
+      assert(launchedOn.toSeq ===
+        (0 to 3).map(_ -> Thread.currentThread.getName))
+      seen.asScala.toSeq
+    }
+    assert(batch("a") === Seq.fill(11)("a"))
+    // the second batch reuses the first one's threads
+    assert(batch("b") === Seq.fill(11)("b"))
+  }
+
+  test("concurrently rethrows the first failure only after every launched " +
+    "write has terminated") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val finished = new AtomicInteger()
+    def slow(name: String): (String, () => Unit) = name -> (() => {
+      Thread.sleep(300)
+      finished.incrementAndGet(): Unit
+    })
+    val failed = intercept[IllegalStateException] {
+      BatchRunner.concurrently(spark, Seq(slow("a"),
+        "b" -> (() => throw new IllegalStateException("write b")), slow("c")))
+    }
+    assert(failed.getMessage === "write b")
+    assert(finished.get === 2)
+    // a throw from `before` stops launching; what was launched finishes
+    finished.set(0)
+    val stopped = intercept[IllegalStateException] {
+      BatchRunner.concurrently(spark, Seq(slow("a"), slow("b"), slow("c")),
+        before = i => if (i == 2) throw new IllegalStateException("before 2"))
+    }
+    assert(stopped.getMessage === "before 2")
+    assert(finished.get === 2)
   }
 
   private val FullWidthImages: Map[String, (Long, String)] = Map(

@@ -342,6 +342,81 @@ class StreamingSpec extends AnyFunSuite {
     } finally rec.close()
   }
 
+  test("every job of a runStream micro-batch carries that batch's id and " +
+    "the current run's job group, over two runs in one JVM") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    def tmp(name: String): String = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
+      graft.sink.ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val blocksDir = tmp("props_blocks")
+    val warehouse = tmp("props_wh")
+    val chain = graft.fixtures.BlockGen.genBlocks(24, rich = true)
+    val sc = spark.sparkContext
+    val batchIdKey = "streaming.sql.batchId"
+    val groupKey = "spark.jobGroup.id"
+    // (run, batch id, job group) the stream thread holds as each
+    // micro-batch's writes start, and the interval from the concurrent
+    // writes' launch (failpoint 0) to the transactions write (5)
+    val batches = new ConcurrentLinkedQueue[(Int, String, String)]
+    val windows = new ConcurrentLinkedQueue[(Long, Long)]
+    // (submission ms, batch id, job group) of every job
+    val jobs = new ConcurrentLinkedQueue[(Long, String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((e.time, p.map(_.getProperty(batchIdKey)).orNull,
+          p.map(_.getProperty(groupKey)).orNull)): Unit
+      }
+    }
+    def run(k: Int): Unit = {
+      var start = 0L
+      StreamRunner.runStream(spark, blocksDir, warehouse, acc,
+        failpoint = (_, writePoint) => writePoint match {
+          case 0 =>
+            start = System.currentTimeMillis()
+            batches.add((k, sc.getLocalProperty(batchIdKey),
+              sc.getLocalProperty(groupKey))): Unit
+          case 5 => windows.add((start, System.currentTimeMillis())): Unit
+          case _ => ()
+        })
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // two files of 6 blocks per run: micro-batches 0, 1 then 2, 3
+      graft.sources.BlockFileSource.writeBlockFilesChunked(spark,
+        chain.take(12), blocksDir, 6)
+      run(0)
+      graft.sources.BlockFileSource.writeBlockFilesChunked(spark, chain,
+        blocksDir, 6)
+      run(1)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    val bs = batches.asScala.toSeq
+    assert(bs.map(_._2) === Seq("0", "1", "2", "3"))
+    assert(windows.size === 4)
+    val groups = bs.map(_._3).distinct
+    assert(groups.size === 2 && !groups.contains(null), groups)
+    // every job started in batch k's window is batch k's: the bronze
+    // writes, the cascade and the state write
+    val inWindows = bs.zip(windows.asScala.toSeq).map {
+      case ((k, id, group), (start, end)) =>
+        val in = jobs.asScala.toSeq.filter(j => j._1 >= start && j._1 < end)
+        val wrong = in.filter(j => j._2 != id || j._3 != group)
+        assert(wrong.isEmpty, s"batch $id of run $k (group $group): " +
+          s"${wrong.size} of ${in.size} jobs carry " +
+          wrong.map(j => (j._2, j._3)).distinct.mkString(", "))
+        in.size
+    }
+    info(s"jobs per batch window: $inWindows")
+    assert(inWindows.forall(_ >= 12), inWindows)
+  }
+
   test("real Structured Streaming wiring: MemoryStream + foreachBatch, " +
     "one block per micro-batch") {
     import spark.implicits._
