@@ -133,39 +133,47 @@ object Bench {
     // against the SAME query's stamp in other rounds' artifacts.
     val midrunGate =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MIDRUN_LOAD", "13.0").toDouble
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => !SparkEntry.correctnessOnly(name) }
-      .map { case (name, fn) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          val t =
-            try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: $e")
-              failures ::= name
-              -1.0
-            }
-          QueryCaches.releaseAll() // the tracked cache contract
-          spark.catalog.clearCache() // backstop for untracked persists
-          t
-        }
-        val qLoad = sampleLoad() // stamped BEFORE this query's cold run
-        val cold = once()
-        // Stop warm reps at the first failing pass (ADVICE r15): re-running
-        // a broken query pads `failed` and burns wall time for no signal.
-        val warms =
-          if (cold < 0) Seq(-1.0)
-          else {
-            val buf = Seq.newBuilder[Double]
-            var i = 0
-            var ok = true
-            while (i < warmRuns && ok) {
-              val t = once(); buf += t; ok = t >= 0; i += 1
-            }
-            buf.result()
+    // One query's record, for the board and the suspect rerun alike:
+    // the load stamp (sampled BEFORE the cold run), a cold pass, then up
+    // to `warmRuns` warm passes that stop at the first failing pass
+    // (ADVICE r15: re-running a broken query pads `failed` and burns
+    // wall time for no signal). Only the board's failures land in
+    // `failed`.
+    val byName = SparkEntry.queries
+    def measure(name: String, rerun: Boolean): (Double, Seq[Double], Double) = {
+      val fn = byName(name)
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        val t =
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case e: Throwable =>
+            System.err.println(
+              s"[bench] ${if (rerun) "rerun " else ""}$name FAILED: $e")
+            if (!rerun) failures ::= name
+            -1.0
           }
-        name -> (cold, warms, qLoad)
+        QueryCaches.releaseAll() // the tracked cache contract
+        spark.catalog.clearCache() // backstop for untracked persists
+        t
       }
+      val qLoad = sampleLoad()
+      val cold = once()
+      val warms =
+        if (cold < 0) Seq(-1.0)
+        else {
+          val buf = Seq.newBuilder[Double]
+          var i = 0
+          var ok = true
+          while (i < warmRuns && ok) {
+            val t = once(); buf += t; ok = t >= 0; i += 1
+          }
+          buf.result()
+        }
+      (cold, warms, qLoad)
+    }
+    val results = byName.keys.toSeq.sorted
+      .filter(name => !SparkEntry.correctnessOnly(name))
+      .map(name => name -> measure(name, rerun = false))
     def median(xs: Seq[Double]): Double = {
       val ok = xs.filter(_ >= 0).sorted
       if (ok.isEmpty) -1.0
@@ -239,7 +247,7 @@ object Bench {
         .createTempDirectory("graft_cascade").toString
       val blocksDir = s"$base/blocks"
       val wh = s"$base/wh"
-      graft.sources.BlockFileSource.writeBlockFilesChunked(
+      graft.sources.BlockFileSource.writeBlockFiles(
         spark, graft.fixtures.BlockGen.genBlocks(cascadeBlocks, rich = true),
         blocksDir, perFile)
       val t0 = System.nanoTime()
@@ -303,27 +311,7 @@ object Bench {
           s"[bench] re-running ${suspects.size} load-suspect queries: " +
             suspects.mkString(", "))
         waitForQuiet("suspect-rerun", phaseWaitMs)
-        val byName = SparkEntry.queries
-        suspects.map { name =>
-          val fn = byName(name)
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            val t =
-              try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] rerun $name FAILED: $e")
-                -1.0
-              }
-            QueryCaches.releaseAll()
-            spark.catalog.clearCache()
-            t
-          }
-          val qLoad = sampleLoad()
-          val cold = once()
-          val warms =
-            if (cold < 0) Seq(-1.0) else (1 to warmRuns).map(_ => once())
-          name -> (cold, warms, qLoad)
-        }.toMap
+        suspects.map(name => name -> measure(name, rerun = true)).toMap
       }
     // distinct: a query that fails cold AND on a warm pass would
     // otherwise appear repeatedly in the artifact (ADVICE r15)

@@ -16,12 +16,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Same story, Spark-first:
   *
-  *  - CODE-LEVEL spans via [[span]] — a ThreadLocal stack gives the
-  *    same parent/child nesting the reference's `#[instrument]`
-  *    attributes give its handlers, and the per-batch ingest body
-  *    both runners run ([[graft.runner.BatchRunner.ingestBatch]])
-  *    opens its phase spans under the reference's own names, so a
-  *    reader can line the two engines' traces up side by side;
+  *  - CODE-LEVEL spans via [[span]] — the enclosing span is a Spark
+  *    local property, which gives the same parent/child nesting the
+  *    reference's `#[instrument]` attributes give its handlers and
+  *    follows work onto any thread that takes the caller's local
+  *    properties. The per-batch ingest body both runners run
+  *    ([[graft.runner.BatchRunner.ingestBatch]]) opens its phase spans
+  *    under the reference's own names, so a reader can line the two
+  *    engines' traces up side by side;
   *  - ENGINE-LEVEL attribution via a SparkListener: every Spark job
   *    launched inside a span becomes a `spark_job` child span carrying
   *    the scheduler's own numbers (executor run time, shuffle
@@ -67,13 +69,6 @@ object Tracing {
   @volatile private var enabled = false
   @volatile private var sc: SparkContext = null
 
-  // (traceId, spanId) stack per thread — foreachBatch bodies run on the
-  // stream execution thread, so the stack lives wherever span() is
-  // called and the local property carries the link to the scheduler
-  private val stack = new ThreadLocal[List[(Long, Long)]] {
-    override def initialValue: List[(Long, Long)] = Nil
-  }
-
   /** Turn tracing on for this session (idempotent): registers the job
     * listener and points [[span]]'s property plumbing at the context. */
   def enable(spark: SparkSession): Unit = synchronized {
@@ -105,17 +100,24 @@ object Tracing {
     else { bufferSize.decrementAndGet(); dropped.incrementAndGet(): Unit }
   }
 
-  /** Run `body` inside a named span. Nesting is the call stack;
-    * Spark jobs triggered inside become `spark_job` child spans. */
-  def span[T](name: String, attrs: (String, String)*)(body: => T): T =
+  /** Run `body` inside a named span, a child of the span enclosing it.
+    * The enclosing span is the local property [[PropKey]]
+    * (`"traceId:spanId"`), which [[span]] sets for its body and restores
+    * after: so nesting is the call stack, a body handed to a thread
+    * with the caller's local properties (`SQLExecution
+    * .withThreadLocalCaptured`) nests under the caller's span, and every
+    * Spark job triggered inside becomes a `spark_job` child span. */
+  def span[T](name: String, attrs: (String, String)*)(body: => T): T = {
+    val ctx = sc // set before `enabled` is
     if (!enabled) body
     else {
-      val st = stack.get()
-      val traceId = if (st.isEmpty) idGen.incrementAndGet() else st.head._1
+      val outer = ctx.getLocalProperty(PropKey)
+      val (traceId, parent) = Option(outer).map(_.split(':')) match {
+        case Some(Array(t, s)) => (t.toLong, s.toLong)
+        case _ => (idGen.incrementAndGet(), 0L)
+      }
       val spanId = idGen.incrementAndGet()
-      val parent = if (st.isEmpty) 0L else st.head._2
-      stack.set((traceId, spanId) :: st)
-      if (sc != null) sc.setLocalProperty(PropKey, s"$traceId:$spanId")
+      ctx.setLocalProperty(PropKey, s"$traceId:$spanId")
       val wall = System.currentTimeMillis()
       val t0 = System.nanoTime()
       try body
@@ -123,39 +125,10 @@ object Tracing {
         val dt = System.nanoTime() - t0
         record(Span(traceId, spanId, parent, name, wall, dt, attrs))
         observe(name, dt / 1e9)
-        stack.set(st)
-        if (sc != null) sc.setLocalProperty(PropKey,
-          if (st.isEmpty) null else s"${st.head._1}:${st.head._2}")
+        ctx.setLocalProperty(PropKey, outer)
       }
     }
-
-  /** The calling thread's current (traceId, spanId) — capture before
-    * handing work to a thread pool, whose threads don't inherit the
-    * ThreadLocal stack (or Spark's local properties: those are
-    * InheritableThreadLocals, snapshotted at thread CREATION, and pool
-    * threads predate the span). */
-  def context(): Option[(Long, Long)] = stack.get().headOption
-
-  /** [[span]] with an explicit parent — for bodies running on pool
-    * threads (e.g. the silver cascade's concurrent writes): re-roots
-    * this thread's stack at `ctx` for the duration, so the span AND
-    * the Spark jobs it launches attribute under the capturing span. */
-  def spanIn[T](ctx: Option[(Long, Long)], name: String,
-      attrs: (String, String)*)(body: => T): T =
-    if (!enabled) body
-    else {
-      val saved = stack.get()
-      stack.set(ctx.toList)
-      try span(name, attrs: _*)(body)
-      finally {
-        stack.set(saved)
-        // span's finally restored the property to ctx's ids (its `st`);
-        // this pool thread's real context is `saved` — restore it too,
-        // or a recycled thread keeps attributing later jobs to ctx
-        if (sc != null) sc.setLocalProperty(PropKey,
-          if (saved.isEmpty) null else s"${saved.head._1}:${saved.head._2}")
-      }
-    }
+  }
 
   // ------------------------------------------------ Spark job spans
 

@@ -3,7 +3,6 @@ package graft.runner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.bronze.BronzeExtractors
-import graft.metrics.Tracing
 import graft.metrics.Tracing.span
 import graft.model.{AccountsConfig, NearModel}
 import graft.silver.SilverTransforms
@@ -140,25 +139,23 @@ object BatchRunner {
     * Each write starts at once on [[writePool]], so a nested call (the
     * silver cascade inside the batch's writes) never waits for a thread,
     * and runs with `session` active and the calling thread's Spark local
-    * properties: the stream's job group, micro-batch id and root
-    * execution id, so the query's `cancelJobGroup` reaches the write and
-    * listeners file its jobs under the batch that started them. */
+    * properties: the stream's job group, micro-batch id, root execution
+    * id and trace span, so the query's `cancelJobGroup` reaches the
+    * write, listeners file its jobs under the batch that started them,
+    * and its span nests under the caller's. */
   private[graft] def concurrently(session: SparkSession,
       writes: Seq[(String, () => Unit)],
       before: Int => Unit = _ => ()): Unit = {
     import java.util.concurrent.{CompletableFuture, ExecutionException}
     import org.apache.spark.sql.execution.SQLExecution
     val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // span parent captured HERE: the trace stack is not a Spark local
-    // property, so the pool thread re-roots at it
-    val ctx = Tracing.context()
     val launched =
       scala.collection.mutable.ArrayBuffer.empty[CompletableFuture[Unit]]
     val stopped = try {
       writes.zipWithIndex.foreach { case ((name, write), i) =>
         before(i)
         launched += SQLExecution.withThreadLocalCaptured(classic, writePool)(
-          Tracing.spanIn(ctx, name)(write()))
+          span(name)(write()))
       }
       None
     } catch { case e: Throwable => Some(e) }
@@ -184,13 +181,12 @@ object BatchRunner {
       t
   }
 
-  /** (min height, max height, block count) of a block batch, None when
-    * it is empty. Called on a LAZY checkpoint, this one aggregate job
-    * also materializes the checkpoint, so every later consumer of the
-    * batch reads the materialized blocks. */
-  def heightRange(blocks: DataFrame): Option[(Long, Long, Long)] = {
-    val r = blocks.agg(min(col("header.height")), max(col("header.height")),
-      count(lit(1))).collect()(0)
+  /** (least `key`, greatest `key`, row count) of a batch, None when it
+    * is empty. Called on a LAZY checkpoint, this one aggregate job also
+    * materializes the checkpoint, so every later consumer of the batch
+    * reads the materialized rows. `key` must be a long column. */
+  def keyRange(batch: DataFrame, key: String): Option[(Long, Long, Long)] = {
+    val r = batch.agg(min(col(key)), max(col(key)), count(lit(1))).collect()(0)
     if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1), r.getLong(2)))
   }
 
@@ -328,7 +324,7 @@ object BatchRunner {
     // downstream branch reads the checkpoint, not the source
     val blocks = resume.fold(all)(h => all.filter(col("header.height") > h))
       .localCheckpoint(eager = false)
-    heightRange(blocks).map { case (minH, maxH, n) =>
+    keyRange(blocks, "header.height").map { case (minH, maxH, n) =>
       ingestBatch(blocks, minH, maxH, loadState(spark, warehouse), warehouse,
         accounts, ttlBlocks, (_, _) => ())
       RunSummary(resume, maxH, n)

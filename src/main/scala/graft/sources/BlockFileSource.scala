@@ -20,36 +20,19 @@ object BlockFileSource {
 
   val blockSchema = Encoders.product[Block].schema
 
-  /** Persist blocks as one height-named JSON file per block. Spark's
-    * file stream source orders pending files by MODIFICATION TIME (not
-    * filename), so each file's mtime is stamped from its height —
-    * otherwise two files written within one mtime-granularity tick
-    * could stream out of height order. */
+  /** Persist blocks as height-named JSON-lines files of `perFile`
+    * blocks each, named after the file's first height. One file is one
+    * micro-batch, so a long chain streams in length/perFile batches
+    * (the throughput layout) and `perFile = 1` streams block by block.
+    * Spark's file stream source orders pending files by MODIFICATION
+    * TIME (not filename), so each file's mtime is stamped from its first
+    * height — otherwise two files written within one mtime-granularity
+    * tick could stream out of height order. Within a micro-batch the
+    * fold is ordered by the batch DataFrame's own height columns,
+    * exactly like a batch run over the same range. ONE Spark job
+    * serializes the chain. */
   def writeBlockFiles(spark: SparkSession, blocks: Seq[Block],
-      dir: String): Unit = {
-    import spark.implicits._
-    val d = new java.io.File(dir)
-    graft.sink.ParquetSink.delete(d)
-    d.mkdirs()
-    val t0 = System.currentTimeMillis()
-    blocks.foreach { b =>
-      val json = Seq(b).toDS().toJSON.collect()(0)
-      val name = f"${b.header.height}%012d.json"
-      val p = java.nio.file.Paths.get(dir, name)
-      java.nio.file.Files.writeString(p, json)
-      p.toFile.setLastModified(t0 + b.header.height * 1000L): Unit
-    }
-  }
-
-  /** [[writeBlockFiles]] with `perFile` blocks per file (JSON lines) —
-    * the throughput layout: a file is one micro-batch, so a long chain
-    * streams in length/perFile batches instead of one batch per block.
-    * Height order still holds (blocks sorted, files mtime-stamped from
-    * their first height); within a micro-batch the fold is ordered by
-    * the batch DataFrame's own height columns, exactly like a batch
-    * run over the same range. ONE Spark job serializes the chain. */
-  def writeBlockFilesChunked(spark: SparkSession, blocks: Seq[Block],
-      dir: String, perFile: Int): Unit = {
+      dir: String, perFile: Int = 1): Unit = {
     import spark.implicits._
     val d = new java.io.File(dir)
     graft.sink.ParquetSink.delete(d)

@@ -15,10 +15,11 @@ import graft.state.ReceiptTxResolver
   * [[graft.runner.BatchRunner.ingestBatch]].
   *
   * [[runStream]] is the product shape — a real Structured Streaming
-  * query (`readBlockStream` file source → `foreachBatch` fold →
+  * query (`readBlockStream` file source → [[fold]] →
   * [[graft.sink.ParquetSink]]) with a checkpointLocation, so a stopped
-  * or crashed runner restarts where it left off. [[runMicroBatched]]
-  * runs the resolver's one fold,
+  * or crashed runner restarts where it left off. [[fold]] is the one
+  * micro-batch driver, which every streaming twin runs through too.
+  * [[runMicroBatched]] runs the resolver's one fold,
   * [[graft.state.ReceiptTxResolver.foldBatch]], one block per batch
   * without the streaming engine or the sinks (a deterministic
   * single-JVM twin, used by unit suites).
@@ -27,12 +28,11 @@ object StreamRunner {
 
   /** Run the streaming pipeline over every block file currently in
     * `blocksDir` that the checkpoint has not consumed yet, then stop
-    * (`Trigger.AvailableNow` — admission control still honors
-    * maxFilesPerTrigger=1, so each micro-batch is exactly one file in
-    * mtime=height order). Call again after new files land — the SAME
-    * checkpoint resumes from the first unseen file, which IS the
-    * reference's resume-from-last-height loop (S3) in Structured
-    * Streaming form.
+    * ([[fold]]; admission control honors maxFilesPerTrigger=1, so each
+    * micro-batch is exactly one file in mtime=height order). Call again
+    * after new files land — the SAME checkpoint resumes from the first
+    * unseen file, which IS the reference's resume-from-last-height loop
+    * (S3) in Structured Streaming form.
     *
     * Restart-safety, in layers:
     *  - which blocks were consumed: the file-source checkpoint
@@ -46,12 +46,7 @@ object StreamRunner {
     *    at-least-once + ReplacingMergeTree pairing exactly.
     *
     * `failpoint` is the crash-injection seam of
-    * [[graft.runner.BatchRunner.ingestBatch]]; default no-op.
-    *
-    * The query runs under [[graft.sink.ForkFreeLocalFs.checkpointConf]]
-    * for its whole life, so the checkpoint's offset, commit and source
-    * logs (`FileContext` on `file:`) set permissions and read link
-    * status in-process instead of forking `chmod` and `readlink`. */
+    * [[graft.runner.BatchRunner.ingestBatch]]; default no-op. */
   def runStream(
       spark: SparkSession,
       blocksDir: String,
@@ -60,24 +55,51 @@ object StreamRunner {
       ttlBlocks: Long = NearModel.TtlBlocks,
       failpoint: (Long, Int) => Unit = (_, _) => ()): Unit = {
     var state = BatchRunner.loadState(spark, warehouse)
-    ParquetSink.withConf(Seq(spark), ForkFreeLocalFs.checkpointConf) {
-      BlockFileSource.readBlockStream(spark, blocksDir)
-        .writeStream
-        .option("checkpointLocation", s"$warehouse/_stream_checkpoint")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // one materialized read of the micro-batch, which every branch
-          // of the batch body reuses
-          val blocks = batch.localCheckpoint(eager = false)
-          BatchRunner.heightRange(blocks).foreach { case (minH, maxH, _) =>
-            state = BatchRunner.ingestBatch(blocks, minH, maxH, state,
-              warehouse, accounts, ttlBlocks, failpoint)
+    fold(BlockFileSource.readBlockStream(spark, blocksDir),
+        s"$warehouse/_stream_checkpoint", "header.height") {
+      (blocks, minH, maxH) =>
+        state = BatchRunner.ingestBatch(blocks, minH, maxH, state,
+          warehouse, accounts, ttlBlocks, failpoint)
+    }
+  }
+
+  /** The one micro-batch driver, of the ingest stream and of every
+    * streaming twin: drain every file of `source` the checkpoint has not
+    * consumed yet, then stop (`Trigger.AvailableNow`: a later call on the
+    * same checkpoint resumes at the first unseen file), folding each
+    * non-empty micro-batch through `body(batch, lo, hi)`, where `lo` and
+    * `hi` are the batch's least and greatest `orderCol` (a twin's sinks
+    * take `hi` as the insert seq their dedup absorbs replays on).
+    *
+    * The micro-batch is checkpointed lazily, and one aggregate
+    * ([[graft.runner.BatchRunner.keyRange]]) both materializes it and
+    * finds `lo`/`hi`, or skips an empty batch; every read of the batch
+    * in `body` reads the materialized rows, not the source.
+    *
+    * The query runs under [[graft.sink.ForkFreeLocalFs.checkpointConf]]
+    * for its whole life, so the checkpoint's offset, commit and source
+    * logs (`FileContext` on `file:`) set permissions and read link
+    * status in-process instead of forking `chmod` and `readlink`.
+    *
+    * `start()` must stay in this file: Spark stamps every job of a
+    * streaming query with the call site of its `start()`, which names
+    * the module the jobs are filed under. */
+  def fold(source: DataFrame, checkpoint: String, orderCol: String)(
+      body: (DataFrame, Long, Long) => Unit): Unit =
+    ParquetSink.withConf(Seq(source.sparkSession),
+        ForkFreeLocalFs.checkpointConf) {
+      source.writeStream
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val batch = b.localCheckpoint(eager = false)
+          BatchRunner.keyRange(batch, orderCol).foreach { case (lo, hi, _) =>
+            body(batch, lo, hi)
           }
         }
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
     }
-  }
 
   /** Fold the blocks one-per-micro-batch; returns the accumulated
     * resolved bronze events exactly as the stream emitted them. */

@@ -60,13 +60,13 @@ object StreamingAnnIndex {
     .select(col("doc_id").as("vec_id"), col("embedding").as("emb"))
     .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
 
-  /** [[TwinReplay.fold]] of the vector feed into the vec_id-keyed
+  /** [[StreamRunner.fold]] of the vector feed into the vec_id-keyed
     * ReplacingMergeTree-analog table `table`, each micro-batch one
     * narrow map (`assign`) over its normalized rows. */
   private def indexStream(spark: SparkSession, feedDir: String,
       warehouse: String, table: String)(assign: DataFrame => DataFrame): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, vecSchema),
-      s"$warehouse/_${table}_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, vecSchema),
+      s"$warehouse/_${table}_checkpoint", "doc_id") { (batch, _, maxId) =>
       ParquetSink.writeBatch(
         assign(normed(batch)).withColumn("block_height", col("vec_id")),
         s"$warehouse/$table", maxId, Seq("vec_id"))
@@ -87,7 +87,7 @@ object StreamingAnnIndex {
   }
 
   /** Stream every unconsumed chunk into the sign-bucket index table
-    * (`ann_vectors`), then stop ([[TwinReplay.fold]] — the
+    * (`ann_vectors`), then stop ([[StreamRunner.fold]] — the
     * [[StreamingDedup.runStream]] resume contract: call again after new
     * chunks land and the same checkpoint continues from the first
     * unseen file). */

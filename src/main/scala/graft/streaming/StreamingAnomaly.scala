@@ -34,13 +34,13 @@ object StreamingAnomaly {
   private val keys = Seq("event_type", "epoch_day")
   private val sums = Seq("day_count")
 
-  /** Drain every unseen chunk file through [[TwinReplay.fold]],
+  /** Drain every unseen chunk file through [[StreamRunner.fold]],
     * folding each micro-batch into the daily count grid. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(
+    StreamRunner.fold(
       StreamingDedup.readDocStream(spark, feedDir, eventSchema),
-      s"$warehouse/_anomaly_checkpoint") { (batch, maxId) =>
+      s"$warehouse/_anomaly_checkpoint", "doc_id") { (batch, _, maxId) =>
       val partial = batch
         .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
         .groupBy(col("event_type"), col("epoch_day"))

@@ -70,7 +70,7 @@ object StreamingCorpusClean {
       newBands, pairs, cached)
   }
 
-  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk file ([[StreamRunner.fold]], resumable
     * checkpoint — same contract as [[StreamingDedup.runStream]]). */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit = {
@@ -78,8 +78,8 @@ object StreamingCorpusClean {
     val hashPath = s"$warehouse/clean_hashes"
     val bandsPath = s"$warehouse/clean_bands"
     import spark.implicits._
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
-      s"$warehouse/_clean_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_clean_checkpoint", "doc_id") { (batch, _, maxId) =>
       // hash/canon state resolve through FINAL like
       // StreamingDedup.runStream's allDocs: after a crash-replay the
       // raw files hold duplicate rows per PK, and raw reads would

@@ -32,12 +32,12 @@ object StreamingDatasetCard {
   private val keys = Seq("split", "lang")
   private val sums = Seq("n_docs", "total_tokens")
 
-  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk file ([[StreamRunner.fold]], resumable
     * checkpoint), folding each micro-batch into the summing table. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, cardSchema),
-      s"$warehouse/_card_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, cardSchema),
+      s"$warehouse/_card_checkpoint", "doc_id") { (batch, _, maxId) =>
       val partial = TextAnalysis.withSplit(batch)
         .withColumn("n_tokens",
           size(TextAnalysis.tokens(col("text"))).cast("long"))

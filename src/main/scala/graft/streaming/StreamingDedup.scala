@@ -165,7 +165,7 @@ object StreamingDedup {
   }
 
   /** Run the streaming dedup over every chunk file the checkpoint has
-    * not consumed yet, then stop ([[TwinReplay.fold]] — same resume
+    * not consumed yet, then stop ([[StreamRunner.fold]] — same resume
     * contract as [[StreamRunner.runStream]]: call again after new
     * chunks land and the SAME checkpoint continues from the first
     * unseen file).
@@ -180,8 +180,8 @@ object StreamingDedup {
       threshold: Double = 0.8): Unit = {
     val docsPath = s"$warehouse/dedup_docs"
     val bandsPath = s"$warehouse/dedup_bands"
-    TwinReplay.fold(readDocStream(spark, docsDir),
-      s"$warehouse/_dedup_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(readDocStream(spark, docsDir),
+      s"$warehouse/_dedup_checkpoint", "doc_id") { (batch, _, maxId) =>
       // corpus first: the verify stage below must see this batch
       ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
         docsPath, maxId, Seq("doc_id"))

@@ -32,7 +32,7 @@ object StreamingDsir {
     StructField("text", StringType)))
   private val pk = Seq("doc_id", "b")
 
-  /** Drain every unseen chunk ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk ([[StreamRunner.fold]], resumable
     * checkpoint): per micro-batch, land the batch docs' bucket counts
     * under PK FINAL. `target` is the same any-predicate target the
     * batch selector takes (VERDICT r14 #7) — evaluated per document
@@ -42,8 +42,8 @@ object StreamingDsir {
   def runStream(spark: SparkSession, feedDir: String, warehouse: String,
       target: org.apache.spark.sql.Column =
         col("lang") === "en"): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
-      s"$warehouse/_dsir_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_dsir_checkpoint", "doc_id") { (batch, _, maxId) =>
       ParquetSink.writeBatch(
         TextAnalysis.dsirDocBucketCounts(batch, target = target)
           .withColumn("block_height", col("doc_id")),

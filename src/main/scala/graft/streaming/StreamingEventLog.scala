@@ -46,8 +46,8 @@ object StreamingEventLog {
   /** Summing-MV stream for the hourly grid (gap fill). */
   def runGridStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
-      s"$warehouse/_grid_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_grid_checkpoint", "doc_id") { (batch, _, maxId) =>
       val partial = EventQueries.hourlyHighValue(batch)
         .withColumn("block_height", col("epoch_hour"))
       ParquetSink.writeSummedBatch(partial, s"$warehouse/hourly_summed",
@@ -57,8 +57,8 @@ object StreamingEventLog {
   /** Append-only event-log stream (SCD2 / interval coverage). */
   def runLogStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
-      s"$warehouse/_log_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_log_checkpoint", "doc_id") { (batch, _, maxId) =>
       ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
         s"$warehouse/events_log", maxId, Seq("doc_id"))
     }
@@ -185,9 +185,9 @@ object StreamingEventLog {
     * it. */
   def runTombstoneStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(
+    StreamRunner.fold(
       StreamingDedup.readDocStream(spark, feedDir, tombstoneFeedSchema),
-      s"$warehouse/_tomb_checkpoint") { (batch, _) =>
+      s"$warehouse/_tomb_checkpoint", "doc_id") { (batch, _, _) =>
       val seqs = batch.select(col("seq")).distinct()
         .collect().map(_.getLong(0)).sorted
       seqs.foreach { s =>

@@ -58,14 +58,14 @@ object StreamingGraph {
         .toDF("event_type", "bkt", "user_id")
     }
 
-  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk file ([[StreamRunner.fold]], resumable
     * checkpoint), folding each micro-batch's NEW occupancy facts into
     * the fact table and their pair deltas into the summing MV. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit = {
     val factsPath = s"$warehouse/graph_facts"
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
-      s"$warehouse/_graph_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_graph_checkpoint", "doc_id") { (batch, _, maxId) =>
       val existing = factsOr(spark, factsPath)
       val newFacts = batch
         .select(col("event_type"),

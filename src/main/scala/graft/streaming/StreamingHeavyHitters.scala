@@ -35,12 +35,12 @@ object StreamingHeavyHitters {
   private val keys = Seq("token")
   private val sums = Seq("tf")
 
-  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk file ([[StreamRunner.fold]], resumable
     * checkpoint), folding each micro-batch into the summing table. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, hhSchema),
-      s"$warehouse/_vocab_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, hhSchema),
+      s"$warehouse/_vocab_checkpoint", "doc_id") { (batch, _, maxId) =>
       val partial = batch
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy(col("token"))

@@ -40,14 +40,14 @@ object StreamingLmScore {
   private val triKeys = Seq("w1", "w2", "w3")
   private val docKeys = Seq("doc_id", "w1", "w2", "w3")
 
-  /** Drain every unseen chunk ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk ([[StreamRunner.fold]], resumable
     * checkpoint): per micro-batch, fold the train rows into the three
     * model summing MVs and land every doc's trigram facts under PK
     * FINAL. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
-      s"$warehouse/_lm_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_lm_checkpoint", "doc_id") { (batch, _, maxId) =>
       val toks = TextAnalysis.withSplit(batch)
         .select(col("doc_id"), col("split"),
           TextAnalysis.tokens(col("text")).as("t"))

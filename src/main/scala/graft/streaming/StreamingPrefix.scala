@@ -81,7 +81,7 @@ object StreamingPrefix {
   }
 
   /** Run the streaming prefix join over every unconsumed chunk file,
-    * then stop ([[TwinReplay.fold]] — same resume contract as
+    * then stop ([[StreamRunner.fold]] — same resume contract as
     * [[StreamingDedup.runStream]]). Warehouse tables: `prefix_docs`,
     * `prefix_index` (full shingle rows, PK (doc_id, h)),
     * `prefix_pairs` (verified output, PK (doc_a, doc_b)). */
@@ -91,8 +91,8 @@ object StreamingPrefix {
     val docsPath = s"$warehouse/prefix_docs"
     val indexPath = s"$warehouse/prefix_index"
     import spark.implicits._
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, docsDir),
-      s"$warehouse/_prefix_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, docsDir),
+      s"$warehouse/_prefix_checkpoint", "doc_id") { (batch, _, maxId) =>
       // corpus first: the verify stage below must see this batch
       ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
         docsPath, maxId, Seq("doc_id"))

@@ -46,7 +46,7 @@ object StreamingRangeJoin {
   private val pairPk = Seq("event_a", "event_b")
 
   /** Drain every unseen chunk file through the watermarked two-stream
-    * join ([[TwinReplay.fold]], resumable checkpoint — join state
+    * join ([[StreamRunner.fold]], resumable checkpoint — join state
     * included). */
   def runStream(spark: SparkSession, feedDir: String, warehouse: String,
       windowUs: Long): Unit = {
@@ -81,8 +81,8 @@ object StreamingRangeJoin {
         col("t_b") <= col("t_a") + expr(s"INTERVAL ${windowUs} MICROSECOND"))
       .select(col("u_a").as("user_id"), col("event_a"), col("event_b"),
         (col("ts_b") - col("ts_a")).as("gap_us"))
-    TwinReplay.fold(joined, s"$warehouse/_range_checkpoint",
-      orderCol = "event_b") { (batch, maxId) =>
+    StreamRunner.fold(joined, s"$warehouse/_range_checkpoint",
+      "event_b") { (batch, _, maxId) =>
       ParquetSink.writeBatch(batch.filter(col("event_a") < col("event_b"))
         .withColumn("block_height", col("event_b")),
         s"$warehouse/range_pairs", maxId, pairPk)

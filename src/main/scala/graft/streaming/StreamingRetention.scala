@@ -35,13 +35,13 @@ object StreamingRetention {
     StructField("value", DoubleType)))
   private val pk = Seq("user_id", "epoch_day")
 
-  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk file ([[StreamRunner.fold]], resumable
     * checkpoint), folding each micro-batch's distinct (user, day)
     * facts into the activity table (PK FINAL — replays invisible). */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
-      s"$warehouse/_retention_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_retention_checkpoint", "doc_id") { (batch, _, maxId) =>
       // distinct facts of THIS batch only — the per-batch increment
       val partial = batch
         .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))

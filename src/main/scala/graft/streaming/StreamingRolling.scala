@@ -36,13 +36,13 @@ object StreamingRolling {
   private val keys = Seq("event_type", "epoch_day")
   private val sums = Seq("day_dec")
 
-  /** Drain every unseen chunk file ([[TwinReplay.fold]], resumable
+  /** Drain every unseen chunk file ([[StreamRunner.fold]], resumable
     * checkpoint), folding each micro-batch into the daily summing
     * grid. */
   def runStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
-      s"$warehouse/_rolling_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, eventSchema),
+      s"$warehouse/_rolling_checkpoint", "doc_id") { (batch, _, maxId) =>
       val partial = batch
         .withColumn("epoch_day", expr(s"ts DIV ${NanosPerDay}L"))
         .groupBy(col("event_type"), col("epoch_day"))

@@ -39,8 +39,8 @@ object StreamingSample {
   def runFactsStream(spark: SparkSession, feedDir: String,
       warehouse: String,
       schema: StructType = feedSchema): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, schema),
-      s"$warehouse/_facts_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, schema),
+      s"$warehouse/_facts_checkpoint", "doc_id") { (batch, _, maxId) =>
       ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
         s"$warehouse/sample_facts", maxId, Seq("doc_id"))
     }

@@ -34,13 +34,13 @@ import graft.sink.ParquetSink
 object StreamingSpans {
 
   /** Run the streaming index build over every unconsumed chunk file,
-    * then stop ([[TwinReplay.fold]] — the [[StreamingDedup.runStream]]
+    * then stop ([[StreamRunner.fold]] — the [[StreamingDedup.runStream]]
     * resume contract). Warehouse tables: `spans_docs` (PK doc_id),
     * `spans_index` ((doc_id, pos, win), PK (doc_id, pos)). */
   def runStream(spark: SparkSession, docsDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, docsDir),
-      s"$warehouse/_spans_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, docsDir),
+      s"$warehouse/_spans_checkpoint", "doc_id") { (batch, _, maxId) =>
       ParquetSink.writeBatch(batch.withColumn("block_height", col("doc_id")),
         s"$warehouse/spans_docs", maxId, Seq("doc_id"))
       // index commits second: a crash between the writes replays the

@@ -31,8 +31,8 @@ object StreamingWeighted {
   /** Summing-MV stream for the per-(lang, value) weight histogram. */
   def runHistStream(spark: SparkSession, feedDir: String,
       warehouse: String): Unit =
-    TwinReplay.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
-      s"$warehouse/_hist_checkpoint") { (batch, maxId) =>
+    StreamRunner.fold(StreamingDedup.readDocStream(spark, feedDir, feedSchema),
+      s"$warehouse/_hist_checkpoint", "doc_id") { (batch, _, maxId) =>
       val partial = graft.llm.TextAnalysis.weightHist(batch)
         .withColumn("block_height", col("value"))
       ParquetSink.writeSummedBatch(partial, s"$warehouse/weight_hist",

@@ -1,37 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.sink.ParquetSink
 
-/** The one harness every streaming twin runs through: a restartable
+/** The two-wave restart every streaming twin replays. A restartable
   * incremental view is one query model (Structured Streaming, SIGMOD
-  * 2018), so it gets one micro-batch driver ([[fold]]) and one
-  * two-wave restart ([[replay]]). A twin supplies only its per-batch
-  * writes, its feed projection, its compaction and its read.
+  * 2018), so each twin's stream is a [[StreamRunner.fold]] and its
+  * restart is [[replay]]; a twin supplies only its per-batch writes, its
+  * feed projection, its compaction and its read.
   */
 object TwinReplay {
-
-  /** Drain every file of `source` the checkpoint has not consumed yet,
-    * then stop (`Trigger.AvailableNow`: a later call on the same
-    * checkpoint resumes at the first unseen file). Each micro-batch is
-    * materialized once; one `max(orderCol)` aggregate both skips an
-    * empty batch (null max) and yields the batch's order key, which
-    * `body` gets as the insert seq its sinks dedup replays on. */
-  def fold(source: DataFrame, checkpoint: String,
-      orderCol: String = "doc_id")(body: (DataFrame, Long) => Unit): Unit =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val batch = b.localCheckpoint()
-        val top = batch.agg(max(col(orderCol))).head()
-        if (!top.isNullAt(0)) body(batch, top.getLong(0))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
 
   /** The mid-stream restart every declared twin replays: the first
     * `firstWave` chunks of `feedRows` land and `run(feed, warehouse)`

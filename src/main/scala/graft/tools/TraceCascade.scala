@@ -21,7 +21,7 @@ object TraceCascade {
 
     val base = java.nio.file.Files
       .createTempDirectory("graft_trace").toString
-    graft.sources.BlockFileSource.writeBlockFilesChunked(
+    graft.sources.BlockFileSource.writeBlockFiles(
       spark, graft.fixtures.BlockGen.genBlocks(nBlocks, rich = true),
       s"$base/blocks", perFile)
     // untimed warm-up rep (codegen/JIT), then the traced rep — the

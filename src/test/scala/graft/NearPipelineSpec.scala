@@ -626,7 +626,7 @@ class NearPipelineSpec extends AnyFunSuite {
       "rich" -> graft.fixtures.BlockGen.genBlocks(30, rich = true))
     val blockDirs = chains.map { case (name, blocks) =>
       val d = freshDir(s"par_runner_${name}_blocks")
-      BlockFileSource.writeBlockFilesChunked(spark, blocks, d, 5)
+      BlockFileSource.writeBlockFiles(spark, blocks, d, 5)
       d
     }
     val tables = BatchRunner.productTables :+

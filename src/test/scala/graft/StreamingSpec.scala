@@ -61,7 +61,8 @@ class StreamingSpec extends AnyFunSuite {
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        BatchRunner.heightRange(batch).foreach { case (_, maxH, _) =>
+        val range = BatchRunner.keyRange(batch, "header.height")
+        range.foreach { case (_, maxH, _) =>
           val (carry, _, events) = ReceiptTxResolver.foldBatch(state, batch,
             acc, TtlBlocks, maxH)
           state = carry
@@ -164,7 +165,7 @@ class StreamingSpec extends AnyFunSuite {
     // execution detail, not a semantics knob
     val whChunk = tmp("cascade_wh_chunk")
     val blocksChunk = tmp("cascade_blocks_chunk")
-    BlockFileSource.writeBlockFilesChunked(spark, ordered, blocksChunk, 4)
+    BlockFileSource.writeBlockFiles(spark, ordered, blocksChunk, 4)
     StreamRunner.runStream(spark, blocksChunk, whChunk, acc)
     val whBatch = tmp("cascade_wh_batch")
     BatchRunner.run(spark, blocksChunk, whBatch, acc)
@@ -248,7 +249,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val blocksDir = tmp("codegen_blocks")
     // 30 blocks, 6 per file: five micro-batches
-    graft.sources.BlockFileSource.writeBlockFilesChunked(spark,
+    graft.sources.BlockFileSource.writeBlockFiles(spark,
       graft.fixtures.BlockGen.genBlocks(30, rich = true), blocksDir, 6)
     val keys = Seq("spark.sql.adaptive.enabled",
       "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
@@ -289,10 +290,37 @@ class StreamingSpec extends AnyFunSuite {
       secs <= BigDecimal(ns1) / 1e9, s"$secs s vs [$ns0, $ns1] ns")
   }
 
-  test("runStream's steady-state sink writes start no chmod process") {
+  /** The stacks (frame names) of every process the JVM starts from
+    * `run`'s call of its argument until `run` returns. */
+  private def processStarts(run: (() => Unit) => Unit): Seq[Seq[String]] = {
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
     import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    try {
+      run(() => rec.start())
+      rec.stop()
+      val file = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+      try {
+        rec.dump(file)
+        RecordingFile.readAllEvents(file).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(e => Option(e.getStackTrace).toSeq
+            .flatMap(_.getFrames.asScala)
+            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
+      } finally java.nio.file.Files.delete(file)
+    } finally rec.close()
+  }
+
+  /** A small doc feed for a streaming twin: doc_ids 0..39 in `nChunks`
+    * chunk files. */
+  private def docFeed(dir: String, nChunks: Int): Unit =
+    graft.streaming.StreamingDedup.writeDocChunks(spark,
+      spark.range(40).select(col("id").as("doc_id"),
+        concat(lit("doc "), col("id")).as("text")), dir, nChunks)
+
+  test("runStream's steady-state sink writes start no chmod process") {
     def tmp(name: String): String = {
       val d = new java.io.File(
         System.getProperty("java.io.tmpdir"), s"graft_test_$name")
@@ -301,45 +329,93 @@ class StreamingSpec extends AnyFunSuite {
     }
     val blocksDir = tmp("forks_blocks")
     // 30 blocks, 6 per file: five micro-batches
-    graft.sources.BlockFileSource.writeBlockFilesChunked(spark,
+    graft.sources.BlockFileSource.writeBlockFiles(spark,
       graft.fixtures.BlockGen.genBlocks(30, rich = true), blocksDir, 6)
     // every process the JVM starts, with the stack that started it,
     // from the second batch's first write on (the first batch's
     // interval holds the stream's one-time checkpoint setup)
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
     var batches = 0
-    try {
+    val stacks = processStarts { start =>
       StreamRunner.runStream(spark, blocksDir, tmp("forks_wh"), acc,
         failpoint = (_, writePoint) => if (writePoint == 0) {
           batches += 1
-          if (batches == 2) rec.start()
+          if (batches == 2) start()
         })
-      assert(batches === 5)
-      rec.stop()
-      val file = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
-      try {
-        rec.dump(file)
-        val stacks = RecordingFile.readAllEvents(file).asScala.toSeq
-          .filter(_.getEventType.getName == "jdk.ProcessStart")
-          .map(e => Option(e.getStackTrace).toSeq
-            .flatMap(_.getFrames.asScala)
-            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
-        // a sink write: a Spark file-format write task or its job
-        // commit (stream checkpoint logs write through FileContext)
-        def sinkWrite(frame: String) =
-          frame.startsWith("org.apache.spark.sql.execution.datasources.") ||
-            frame.startsWith("org.apache.spark.internal.io.") ||
-            frame.startsWith("graft.sink.ParquetSink")
-        val sinkChmods = stacks.filter(s =>
-          s.contains("org.apache.hadoop.fs.RawLocalFileSystem.setPermission") &&
-            s.exists(sinkWrite))
-        info(s"processes started over 4 steady-state batches: " +
-          s"${stacks.size}, chmod under a sink write: ${sinkChmods.size}")
-        assert(sinkChmods.isEmpty,
-          sinkChmods.headOption.map(_.take(25).mkString("\n  ")))
-      } finally java.nio.file.Files.delete(file)
-    } finally rec.close()
+    }
+    assert(batches === 5)
+    // a sink write: a Spark file-format write task or its job
+    // commit (stream checkpoint logs write through FileContext)
+    def sinkWrite(frame: String) =
+      frame.startsWith("org.apache.spark.sql.execution.datasources.") ||
+        frame.startsWith("org.apache.spark.internal.io.") ||
+        frame.startsWith("graft.sink.ParquetSink")
+    val sinkChmods = stacks.filter(s =>
+      s.contains("org.apache.hadoop.fs.RawLocalFileSystem.setPermission") &&
+        s.exists(sinkWrite))
+    info(s"processes started over 4 steady-state batches: " +
+      s"${stacks.size}, chmod under a sink write: ${sinkChmods.size}")
+    assert(sinkChmods.isEmpty,
+      sinkChmods.headOption.map(_.take(25).mkString("\n  ")))
+
+    // a streaming twin runs the same driver: nothing it runs, its
+    // checkpoint's logs included, starts a chmod or a readlink
+    val feed = tmp("forks_twin_feed")
+    docFeed(feed, 4)
+    val twin = processStarts { start =>
+      start()
+      graft.streaming.StreamingSpans.runStream(spark, feed,
+        tmp("forks_twin_wh"))
+    }
+    val forks = twin.filter(_.exists(f =>
+      f == "org.apache.hadoop.fs.RawLocalFileSystem.setPermission" ||
+        f == "org.apache.hadoop.fs.RawLocalFileSystem.getFileLinkStatus"))
+    info(s"processes started by a 4-batch twin: ${twin.size}, " +
+      s"chmod or readlink: ${forks.size}")
+    assert(forks.isEmpty, forks.headOption.map(_.take(25).mkString("\n  ")))
+  }
+
+  test("a twin micro-batch runs one aggregate before its body, and the " +
+    "body reads the batch that aggregate materialized") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val feed = graft.sink.ParquetSink.scratchDir("fold_jobs_feed")
+    val checkpoint = graft.sink.ParquetSink.scratchDir("fold_jobs_ckpt")
+    docFeed(feed, 4)
+    val sc = spark.sparkContext
+    val keys = Seq("spark.jobGroup.id", "streaming.sql.batchId")
+    // (job group, micro-batch id) of every job
+    val jobs = new ConcurrentLinkedQueue[Seq[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(keys.map(k =>
+          Option(e.properties).map(_.getProperty(k)).orNull)): Unit
+    }
+    // per micro-batch: (lo, hi, jobs of the batch before its body, jobs
+    // of the batch's own count in the body)
+    val seen =
+      scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int)]
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try StreamRunner.fold(
+        graft.streaming.StreamingDedup.readDocStream(spark, feed),
+        checkpoint, "doc_id") { (batch, lo, hi) =>
+      val key = keys.map(sc.getLocalProperty)
+      def batchJobs() = {
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        jobs.asScala.count(_ == key)
+      }
+      val before = batchJobs()
+      assert(batch.count() === hi - lo + 1)
+      seen += ((lo, hi, before, batchJobs() - before))
+    } finally sc.removeSparkListener(listener)
+    info(s"per micro-batch (lo, hi, jobs before body, jobs of a count): " +
+      seen.mkString(", "))
+    assert(seen.map(s => (s._1, s._2)) ===
+      Seq((0L, 9L), (10L, 19L), (20L, 29L), (30L, 39L)))
+    // the one range aggregate: as many jobs as a plain count of the
+    // materialized batch, and no eager checkpoint job ahead of it
+    assert(seen.forall(s => s._3 == s._4), seen)
   }
 
   test("every job of a runStream micro-batch carries that batch's id and " +
@@ -389,10 +465,10 @@ class StreamingSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       // two files of 6 blocks per run: micro-batches 0, 1 then 2, 3
-      graft.sources.BlockFileSource.writeBlockFilesChunked(spark,
+      graft.sources.BlockFileSource.writeBlockFiles(spark,
         chain.take(12), blocksDir, 6)
       run(0)
-      graft.sources.BlockFileSource.writeBlockFilesChunked(spark, chain,
+      graft.sources.BlockFileSource.writeBlockFiles(spark, chain,
         blocksDir, 6)
       run(1)
       org.apache.spark.ListenerBusDrain.drain(sc)
@@ -427,7 +503,8 @@ class StreamingSpec extends AnyFunSuite {
     val query = source.toDF().writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        BatchRunner.heightRange(batch).foreach { case (_, maxH, _) =>
+        val range = BatchRunner.keyRange(batch, "header.height")
+        range.foreach { case (_, maxH, _) =>
           val (carry, _, events) = ReceiptTxResolver.foldBatch(state, batch,
             acc, TtlBlocks, maxH)
           state = carry
@@ -551,7 +628,7 @@ class StreamingSpec extends AnyFunSuite {
     var kills = 0
     (1 to 10).foreach { round =>
       revealed = math.min(nChunks, revealed + 1 + rnd.nextInt(2))
-      BlockFileSource.writeBlockFilesChunked(
+      BlockFileSource.writeBlockFiles(
         spark, blocks.take(revealed * perFile), blocksDir, perFile)
       if (rnd.nextInt(4) == 0)
         graft.sink.ParquetSink.delete(

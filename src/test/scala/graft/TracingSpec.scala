@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.metrics.Tracing
 
 /** Pins the span exporter (VERDICT r14 #6): nesting, Spark-job
-  * attribution through the job-local property, pool-thread re-rooting,
+  * attribution through the job-local property, pool-thread nesting,
   * Prometheus histogram rendering, and the JSON artifact. */
 class TracingSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -74,15 +74,10 @@ class TracingSpec extends AnyFunSuite {
     Tracing.reset()
     try {
       Tracing.span("silver_cascade") {
-        val ctx = Tracing.context()
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq("a", "b").map(t => Future {
-          Tracing.spanIn(ctx, s"insert_${t}_to_db") {
-            spark.range(10).count()
-          }
-        })), Duration.Inf)
+        // the writes run on BatchRunner's pool, each with the caller's
+        // local properties
+        graft.runner.BatchRunner.concurrently(spark, Seq("a", "b").map(t =>
+          s"insert_${t}_to_db" -> (() => spark.range(10).count(): Unit)))
       }
     } finally Tracing.disable()
     val spans = Tracing.spans()

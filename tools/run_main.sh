@@ -19,26 +19,20 @@ if [ "${GRAFT_SNAPSHOT:-0}" = "1" ]; then
   CLASSES="$SNAP"
   trap 'rm -rf "$SNAP"' EXIT
 fi
-ADD_OPENS=""
+CMD=(java)
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
+         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
+         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
+  CMD+=(--add-opens "java.base/$p=ALL-UNNAMED")
 done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+CMD+=(-Dspark.ui.enabled=false
+  -Dspark.sql.session.timeZone=UTC
+  -Xmx"${SPARK_DRIVER_MEM:-24g}"
+  -cp "$CLASSES:/opt/spark/jars/*" "$@")
 # no `exec` in snapshot mode — the EXIT trap must run to remove the
 # snapshot dir
 if [ "${GRAFT_SNAPSHOT:-0}" = "1" ]; then
-  java $ADD_OPENS \
-    -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC \
-    -Xmx"${SPARK_DRIVER_MEM:-24g}" \
-    -cp "$CLASSES:/opt/spark/jars/*" "$@"
+  "${CMD[@]}"
 else
-  exec java $ADD_OPENS \
-    -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC \
-    -Xmx"${SPARK_DRIVER_MEM:-24g}" \
-    -cp "$CLASSES:/opt/spark/jars/*" "$@"
+  exec "${CMD[@]}"
 fi
