@@ -1,5 +1,35 @@
 package graft
 object Bench {
+
+  /** Linux's PIPE_BUF: a write of at most this many bytes reaches a
+    * pipe in one piece, so no other writer's output can land inside it. */
+  private[graft] val PipeBuf = 4096
+
+  /** The stdout contract line: one JSON object of `members` (name →
+    * JSON text), then `queries`, the cold per-query map (name → seconds,
+    * -1 for a failure) at ms precision, if the line still fits in
+    * [[PipeBuf]] bytes. Past that (about 140 queries at ~24 B each) the
+    * map is left out; the detail file, which the `bench_detail` member
+    * names, always holds it. */
+  private[graft] def stdoutLine(members: Seq[(String, String)],
+      queries: Seq[(String, Double)]): String = {
+    def obj(ms: Seq[(String, String)]) =
+      ms.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val full = obj(members :+
+      ("queries" -> obj(queries.map { case (k, v) => k -> ms3(v) })))
+    if (full.getBytes("UTF-8").length <= PipeBuf) full else obj(members)
+  }
+
+  /** `d` at ms precision without trailing zeros, "-1" for a negative
+    * (failed) value. Locale.ROOT, so a comma-decimal default locale
+    * cannot break the JSON. */
+  private[graft] def ms3(d: Double): String =
+    if (d < 0) "-1" else {
+      val s = "%.3f".formatLocal(java.util.Locale.ROOT, d)
+      if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse
+        .stripSuffix(".") else s
+    }
+
   def main(args: Array[String]): Unit = {
     // 1-minute system load at start/end: bench wall times carry 2-5×
     // outliers when the machine is busy with other work, and a reader
@@ -391,50 +421,36 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write to $detailPath FAILED: $e")
     }
-    // THE stdout contract line — kept SHORT and printed LAST (VERDICT
-    // r17 #2). Root cause of r6–r16 `parsed: null` on rc=0 runs: the
-    // line had grown past Linux's 4 KiB atomic-pipe-write guarantee
-    // (PIPE_BUF), so its write was split into several syscalls, and any
-    // concurrently-logging executor thread could interleave stderr into
-    // the middle of the line (r17's clean 8-core run parsed the same
-    // 13 KB line fine — the corruption is a concurrency race, not a
-    // length cap). Three defenses: (a) the line carries only the
-    // headline scalars + the cold per-query map at ms precision
-    // (queries_warm, cascade pins, phase stamps and the methodology
-    // note live in the detail file — every query NAME stays, none
-    // dropped); (b) it is printed AFTER spark.stop(), when no executor
-    // or listener thread can write stderr anymore; (c) stderr is
-    // flushed first. Result: the last thing on stdout. The line is
-    // NOT under PIPE_BUF (4266 B at 226 queries, ~24 B more per query),
-    // so it may be split into several writes; only (b) keeps other
-    // output out of it. Numbers format with Locale.ROOT, so a
-    // comma-decimal default locale cannot break the JSON.
-    def ms3(d: Double): String =
-      if (d < 0) "-1" else {
-        val s = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-        if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse
-          .stripSuffix(".") else s
-      }
-    val qsShort = results.map { case (k, v) => "\"" + k + "\":" + ms3(v._1) }
-      .mkString("{", ",", "}")
+    // THE stdout contract line, printed LAST (see [[stdoutLine]]). Root
+    // cause of r6–r16 `parsed: null` on rc=0 runs: the line had grown
+    // past PIPE_BUF, so its write was split into several syscalls, and
+    // any concurrently-logging executor thread could interleave stderr
+    // into the middle of the line. Three defenses: (a) the line fits in
+    // PIPE_BUF, so it reaches the pipe in one write (unless its headline
+    // members alone outgrow it, say with hundreds of failed names);
+    // (b) it is printed AFTER spark.stop(), when no executor or listener
+    // thread can write stderr anymore; (c) stderr is flushed first.
     // the queries flagged load_suspect or spread_suspect, by name
     val suspectJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shortNote = "cold per-query map at ms precision; suspect lists " +
-      "the load_suspect/spread_suspect queries; queries_warm, " +
-      "per-query warm passes/medians/load stamps/reruns, cascade pins " +
-      "and the methodology note are in bench_detail"
-    val line = s"""{"metric":"total","value":${ms3(total)},"unit":"sec"""" +
-      s""","total_warm":${ms3(totalWarm)},"queries":$qsShort""" +
-      s""","failed":$failed,"suspect":$suspectJson""" +
-      s""","ingest_blocks_per_sec":${ms3(blocksPerSec)}""" +
-      s""","ingest_blocks_n":$nBlocks""" +
-      s""","ingest_cascade_blocks_per_sec":${ms3(cascadeBps)}""" +
-      s""","ingest_cascade_blocks_n":$cascadeBlocks""" +
-      s""","ingest_cascade_per_file":$perFile""" +
-      s""","load_avg_start":${ms3(loadStart)},"load_avg_end":${ms3(loadEnd)}""" +
-      s""","load_max":${ms3(loadMax)},"load_gate":$maxLoad""" +
-      s""","load_contaminated":$loadContaminated,"sf":"$sfDir"""" +
-      s""","bench_detail":"$detailPath","note":"$shortNote"}"""
+    val shortNote = "queries (when present) is the cold per-query map at " +
+      "ms precision; suspect lists the load_suspect/spread_suspect " +
+      "queries; queries_warm, per-query warm passes/medians/load " +
+      "stamps/reruns, cascade pins and the methodology note are in " +
+      "bench_detail"
+    val line = stdoutLine(Seq(
+      "metric" -> "\"total\"", "value" -> ms3(total), "unit" -> "\"sec\"",
+      "total_warm" -> ms3(totalWarm), "failed" -> failed,
+      "suspect" -> suspectJson,
+      "ingest_blocks_per_sec" -> ms3(blocksPerSec),
+      "ingest_blocks_n" -> nBlocks.toString,
+      "ingest_cascade_blocks_per_sec" -> ms3(cascadeBps),
+      "ingest_cascade_blocks_n" -> cascadeBlocks.toString,
+      "ingest_cascade_per_file" -> perFile.toString,
+      "load_avg_start" -> ms3(loadStart), "load_avg_end" -> ms3(loadEnd),
+      "load_max" -> ms3(loadMax), "load_gate" -> maxLoad.toString,
+      "load_contaminated" -> loadContaminated.toString,
+      "sf" -> s""""$sfDir"""", "bench_detail" -> s""""$detailPath"""",
+      "note" -> s""""$shortNote""""), results.map { case (k, v) => k -> v._1 })
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     System.err.flush()

@@ -182,12 +182,29 @@ object BatchRunner {
   }
 
   /** (least `key`, greatest `key`, row count) of a batch, None when it
-    * is empty. Called on a LAZY checkpoint, this one aggregate job also
-    * materializes the checkpoint, so every later consumer of the batch
-    * reads the materialized rows. `key` must be a long column. */
+    * is empty. One job of one stage: each task folds its partition to
+    * (least, greatest, rows, keyed rows) and the driver merges the
+    * partials, where a plain `agg` would exchange them, which adaptive
+    * execution runs as a job of its own. Called on a LAZY checkpoint,
+    * this job also materializes the checkpoint, so every later consumer
+    * of the batch reads the materialized rows. `key` must be a long
+    * column; a null key counts as a row but bounds nothing. */
   def keyRange(batch: DataFrame, key: String): Option[(Long, Long, Long)] = {
-    val r = batch.agg(min(col(key)), max(col(key)), count(lit(1))).collect()(0)
-    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1), r.getLong(2)))
+    val parts = batch.select(col(key)).queryExecution.toRdd.mapPartitions {
+      rows =>
+        var (lo, hi, n, keyed) = (Long.MaxValue, Long.MinValue, 0L, 0L)
+        rows.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) {
+            keyed += 1
+            lo = math.min(lo, r.getLong(0))
+            hi = math.max(hi, r.getLong(0))
+          }
+        }
+        Iterator((lo, hi, n, keyed))
+    }.collect()
+    if (parts.forall(_._4 == 0)) None
+    else Some((parts.map(_._1).min, parts.map(_._2).max, parts.map(_._3).sum))
   }
 
   /** The persisted resolver state, FINAL (one row per receipt). Empty

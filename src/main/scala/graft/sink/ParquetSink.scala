@@ -35,6 +35,17 @@ object ParquetSink {
     * wrong directories. */
   private val BucketBlocks = 50L
 
+  /** Parquet page size of a [[writeBatch]] append, in bytes: 64 KB
+    * against Parquet's 1 MB default. The writer allocates its page
+    * compressor's buffer at the page size for every file it opens, and a
+    * micro-batch file is 5–10 KB, so at the default every file paid a
+    * 1 MB array, which on a heap of 1 MB G1 regions is a humongous
+    * object. Pages of 64 KB still hold a whole micro-batch column; only
+    * a column past 64 KB (a long backfill batch) is cut into more pages.
+    * Compaction rewrites ([[rewriteCompacted]]) keep the default: their
+    * files are large and scanned, and fewer, larger pages read faster. */
+  private val BatchPageBytes = 64 * 1024
+
   /** Retry with exponential backoff — K1's policy. */
   def withRetry[T](maxAttempts: Int = 10, initialDelayMs: Long = 250L,
       maxDelayMs: Long = 60000L)(f: => T): T = {
@@ -137,6 +148,7 @@ object ParquetSink {
     *
     * Rows within each file are in `pkCols` order (see [[appendBucketed]]),
     * the clustering the "Scale notes" above rely on for row-group pruning.
+    * Pages are [[BatchPageBytes]], sized to a micro-batch file.
     *
     * `bloomFilterCols` writes a parquet BLOOM FILTER per named column —
     * the Spark twin of the reference's `bloom_filter()` skip indexes on
@@ -159,7 +171,8 @@ object ParquetSink {
           Map("spark.sql.adaptive.enabled" -> "false")) {
         appendBucketed(df.withColumn("insert_seq", lit(insertSeq)), path,
           pkCols, bloomFilterCols.map(c =>
-            s"parquet.bloom.filter.enabled#$c" -> "true").toMap,
+            s"parquet.bloom.filter.enabled#$c" -> "true").toMap +
+            ("parquet.page.size" -> BatchPageBytes.toString),
           extraPartitionCols, heights)
       }
     }

@@ -2,11 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
-import graft.model.{AccountsConfig, Block, NearModel}
+import graft.model.{AccountsConfig, NearModel}
 import graft.runner.BatchRunner
 import graft.sink.{ForkFreeLocalFs, ParquetSink}
 import graft.sources.BlockFileSource
-import graft.state.ReceiptTxResolver
 
 /** Micro-batch driver for the streaming path: blocks arrive in height
   * order (the reference's buffer_unordered(1) strictly-sequential
@@ -19,10 +18,6 @@ import graft.state.ReceiptTxResolver
   * [[graft.sink.ParquetSink]]) with a checkpointLocation, so a stopped
   * or crashed runner restarts where it left off. [[fold]] is the one
   * micro-batch driver, which every streaming twin runs through too.
-  * [[runMicroBatched]] runs the resolver's one fold,
-  * [[graft.state.ReceiptTxResolver.foldBatch]], one block per batch
-  * without the streaming engine or the sinks (a deterministic
-  * single-JVM twin, used by unit suites).
   */
 object StreamRunner {
 
@@ -100,23 +95,4 @@ object StreamRunner {
         .start()
         .awaitTermination()
     }
-
-  /** Fold the blocks one-per-micro-batch; returns the accumulated
-    * resolved bronze events exactly as the stream emitted them. */
-  def runMicroBatched(
-      spark: SparkSession,
-      blocks: Seq[Block],
-      accounts: AccountsConfig = AccountsConfig(),
-      ttlBlocks: Long = NearModel.TtlBlocks): DataFrame = {
-    import spark.implicits._
-    var state = ReceiptTxResolver.emptyState(spark)
-    val batches = blocks.sortBy(_.header.height).map { block =>
-      val (carry, _, events) = ReceiptTxResolver.foldBatch(state,
-        spark.createDataset(Seq(block)).toDF(), accounts, ttlBlocks,
-        block.header.height)
-      state = carry
-      events.localCheckpoint()
-    }
-    batches.reduce(_ unionByName _)
-  }
 }

@@ -181,7 +181,6 @@ class PropertySpec extends AnyFunSuite {
     import graft.model._
     import graft.bronze.BronzeExtractors
     import graft.state.ReceiptTxResolver
-    import graft.streaming.StreamRunner
     import graft.fixtures.NearFixtures
     import spark.implicits._
     graft.Tables.tune(spark)
@@ -247,7 +246,7 @@ class PropertySpec extends AnyFunSuite {
 
     (0 until 5).foreach { seed =>
       val blocks = genChain(seed)
-      val streamed = StreamRunner
+      val streamed = ResolverFold
         .runMicroBatched(spark, blocks, acc, ttl)
         .select(NearFixtures.eventCols.map(col): _*)
         .collect().map(_.toString).sorted.toSeq

@@ -206,6 +206,45 @@ class SinkWriteSpec extends AnyFunSuite {
     }
   }
 
+  /** Pages of `column` in each row group of the parquet file `f`, from
+    * the file's offset index. */
+  private def pageCounts(f: JPath, column: String): Seq[Int] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(f.toString), new Configuration()))
+    try reader.getFooter.getBlocks.asScala.toSeq.map { rowGroup =>
+      val chunk = rowGroup.getColumns.asScala
+        .find(_.getPath.toDotString == column).get
+      reader.readOffsetIndex(chunk).getPageCount
+    } finally reader.close()
+  }
+
+  test("a batch append writes pages of 64 KB; a compaction rewrite keeps " +
+    "Parquet's default page size") {
+    // 4000 rows in one bucket; `v` holds 64 hex characters per row, about
+    // 270 KB uncompressed: several 64 KB pages, one page at the 1 MB
+    // default
+    val df = spark.range(4000).select(col("id"),
+      (col("id") % 50).as("block_height"),
+      sha2(col("id").cast("string"), 256).as("v"))
+    val path = tmp("page_size")
+    ParquetSink.writeBatch(df, path, 1L, Seq("id"), heights = Some((0L, 49L)))
+    val appended = dataFiles(path)
+    assert(appended.size === 1)
+    val appendedPages = pageCounts(appended.head, "v")
+    info(s"pages of v per row group, batch append: $appendedPages")
+    assert(appendedPages.size === 1 && appendedPages.head >= 4, appendedPages)
+
+    ParquetSink.compact(spark, path, Seq("id"))
+    val compacted = dataFiles(path)
+    assert(compacted.size === 1)
+    val compactedPages = pageCounts(compacted.head, "v")
+    info(s"pages of v per row group, compaction rewrite: $compactedPages")
+    assert(compactedPages === Seq(1))
+    assert(spark.read.parquet(path).count() === 4000L)
+  }
+
   /** (target table, every plan node's one-line string) of each insert
     * that `body` runs. */
   private def insertPlans(body: => Unit): Seq[(String, Seq[String])] = {

@@ -22,7 +22,7 @@ class StreamingSpec extends AnyFunSuite {
   private val acc = NearFixtures.accounts
 
   test("streaming fold emits exactly the batch pipeline's bronze events") {
-    val streamed = StreamRunner.runMicroBatched(spark, NearFixtures.blocks, acc)
+    val streamed = ResolverFold.runMicroBatched(spark, NearFixtures.blocks, acc)
       .select(NearFixtures.eventCols.map(col): _*)
       .collect().map(_.toString).sorted.toSeq
     val batch = NearQueries.bronzeEvents(spark, "")
@@ -290,28 +290,34 @@ class StreamingSpec extends AnyFunSuite {
       secs <= BigDecimal(ns1) / 1e9, s"$secs s vs [$ns0, $ns1] ns")
   }
 
-  /** The stacks (frame names) of every process the JVM starts from
-    * `run`'s call of its argument until `run` returns. */
-  private def processStarts(run: (() => Unit) => Unit): Seq[Seq[String]] = {
+  /** Every JFR event of a type in `events` that the JVM records from
+    * `run`'s call of its argument until `run` returns, with its stack
+    * (frame names, innermost first). */
+  private def recorded(events: String*)(run: (() => Unit) => Unit)
+      : Seq[(jdk.jfr.consumer.RecordedEvent, Seq[String])] = {
     import jdk.jfr.Recording
     import jdk.jfr.consumer.RecordingFile
     import scala.jdk.CollectionConverters._
     val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
+    events.foreach(rec.enable(_).withStackTrace())
     try {
       run(() => rec.start())
       rec.stop()
-      val file = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+      val file = java.nio.file.Files.createTempFile("graft_jfr", ".jfr")
       try {
         rec.dump(file)
         RecordingFile.readAllEvents(file).asScala.toSeq
-          .filter(_.getEventType.getName == "jdk.ProcessStart")
-          .map(e => Option(e.getStackTrace).toSeq
+          .filter(e => events.contains(e.getEventType.getName))
+          .map(e => e -> Option(e.getStackTrace).toSeq
             .flatMap(_.getFrames.asScala)
             .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}"))
       } finally java.nio.file.Files.delete(file)
     } finally rec.close()
   }
+
+  /** The stacks of every process the JVM starts while `run` records. */
+  private def processStarts(run: (() => Unit) => Unit): Seq[Seq[String]] =
+    recorded("jdk.ProcessStart")(run).map(_._2)
 
   /** A small doc feed for a streaming twin: doc_ids 0..39 in `nChunks`
     * chunk files. */
@@ -413,9 +419,40 @@ class StreamingSpec extends AnyFunSuite {
       seen.mkString(", "))
     assert(seen.map(s => (s._1, s._2)) ===
       Seq((0L, 9L), (10L, 19L), (20L, 29L), (30L, 39L)))
-    // the one range aggregate: as many jobs as a plain count of the
-    // materialized batch, and no eager checkpoint job ahead of it
-    assert(seen.forall(s => s._3 == s._4), seen)
+    // the one range aggregate is one job, and no eager checkpoint job
+    // runs ahead of it
+    assert(seen.forall(_._3 == 1), seen)
+  }
+
+  test("a runStream micro-batch allocates no broadcast chunk of 1 MB " +
+    "or more") {
+    def tmp(name: String): String = {
+      val d = new java.io.File(
+        System.getProperty("java.io.tmpdir"), s"graft_test_$name")
+      graft.sink.ParquetSink.delete(d)
+      d.getAbsolutePath
+    }
+    val blocksDir = tmp("alloc_blocks")
+    // 12 blocks, 6 per file: two micro-batches
+    graft.sources.BlockFileSource.writeBlockFiles(spark,
+      graft.fixtures.BlockGen.genBlocks(12, rich = true), blocksDir, 6)
+    // every allocation too large for the thread's TLAB, and every one
+    // that opened a new TLAB, over the whole stream
+    val allocs = recorded("jdk.ObjectAllocationOutsideTLAB",
+        "jdk.ObjectAllocationInNewTLAB") { start =>
+      start()
+      StreamRunner.runStream(spark, blocksDir, tmp("alloc_wh"), acc)
+    }
+    val blockify = "org.apache.spark.broadcast.TorrentBroadcast$.blockifyObject"
+    val broadcast = allocs.filter(_._2.contains(blockify))
+      .map(_._1.getLong("allocationSize"))
+    val large = broadcast.filter(_ >= (1L << 20))
+    info(s"allocations recorded: ${allocs.size}, under blockifyObject: " +
+      s"${broadcast.size} (largest ${broadcast.maxOption.getOrElse(0L)} B), " +
+      s"of 1 MB or more: ${large.size}")
+    assert(broadcast.nonEmpty)
+    assert(large.isEmpty,
+      s"${large.size} chunks, the largest ${large.maxOption.getOrElse(0L)} B")
   }
 
   test("every job of a runStream micro-batch carries that batch's id and " +
