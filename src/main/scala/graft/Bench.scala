@@ -6,19 +6,12 @@ object Bench {
   private[graft] val PipeBuf = 4096
 
   /** The stdout contract line: one JSON object of `members` (name →
-    * JSON text), then `queries`, the cold per-query map (name → seconds,
-    * -1 for a failure) at ms precision, if the line still fits in
-    * [[PipeBuf]] bytes. Past that (about 140 queries at ~24 B each) the
-    * map is left out; the detail file, which the `bench_detail` member
-    * names, always holds it. */
-  private[graft] def stdoutLine(members: Seq[(String, String)],
-      queries: Seq[(String, Double)]): String = {
-    def obj(ms: Seq[(String, String)]) =
-      ms.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val full = obj(members :+
-      ("queries" -> obj(queries.map { case (k, v) => k -> ms3(v) })))
-    if (full.getBytes("UTF-8").length <= PipeBuf) full else obj(members)
-  }
+    * JSON text). It carries the headline scalars only; the cold
+    * per-query map is in the detail file, which the `bench_detail`
+    * member names, so the line stays within [[PipeBuf]] bytes however
+    * many queries the board runs. */
+  private[graft] def stdoutLine(members: Seq[(String, String)]): String =
+    members.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
   /** `d` at ms precision without trailing zeros, "-1" for a negative
     * (failed) value. Locale.ROOT, so a comma-decimal default locale
@@ -365,7 +358,7 @@ object Bench {
       "since r17 load_suspect queries are automatically RE-RUN at end of bench after a bounded wait-for-quiet, and the rerun columns land beside the originals in the detail record (rerun.warm_med is the number to read for a flagged query); " +
       "since r18 a query is also rerun-flagged on warm-pass SPREAD (max/min > 3x and max-min > 0.5s, stamped spread_suspect) - the 1-min load stamp misses sub-minute contamination spikes; " +
       "since r18 the cascade DEFAULT is back to one pin (perFile=100) x 1 rep - the r17 default (100,500 x 3 reps, env-restorable via SPARK_GRAFT_CASCADE_PER_FILE/SPARK_GRAFT_CASCADE_REPS) blew the driver's wall budget; ingest_cascade_blocks_per_sec stays the first pin's rep-median, ingest_cascade_pins carries all reps; " +
-      "since r18 the sum of all wait-for-quiet pauses is capped (SPARK_GRAFT_BENCH_WAIT_TOTAL_SEC, default 600) and the stdout contract line is SHORT (headline totals + the cold per-query map at ms precision, printed after spark.stop with stderr quiesced) - r6-r16 lines grew past the 4 KiB atomic-pipe-write limit and concurrent executor stderr corrupted them mid-line (BENCH parsed:null on rc=0); queries_warm and this note moved to this detail file; " +
+      "since r18 the sum of all wait-for-quiet pauses is capped (SPARK_GRAFT_BENCH_WAIT_TOTAL_SEC, default 600) and the stdout contract line is SHORT (headline totals only, printed after spark.stop with stderr quiesced; it also carried the cold per-query map until that alone outgrew the limit, and the map is now only in this detail file) - r6-r16 lines grew past the 4 KiB atomic-pipe-write limit and concurrent executor stderr corrupted them mid-line (BENCH parsed:null on rc=0); queries_warm and this note moved to this detail file; " +
       "the default detail file name carries the core count (BENCH_DETAIL_c<cpus>.json, so runs at different widths no longer overwrite each other) and the short stdout line lists the load_suspect/spread_suspect query names under suspect"
     val loadEnd = sampleLoad()
     // SELF-SUFFICIENT per-query artifact (VERDICT r14 #3): the driver's
@@ -425,17 +418,17 @@ object Bench {
     // cause of r6–r16 `parsed: null` on rc=0 runs: the line had grown
     // past PIPE_BUF, so its write was split into several syscalls, and
     // any concurrently-logging executor thread could interleave stderr
-    // into the middle of the line. Three defenses: (a) the line fits in
-    // PIPE_BUF, so it reaches the pipe in one write (unless its headline
-    // members alone outgrow it, say with hundreds of failed names);
+    // into the middle of the line. Three defenses: (a) the line leaves
+    // the per-query map to the detail file, so it fits in PIPE_BUF and
+    // reaches the pipe in one write (unless its headline members alone
+    // outgrow it, say with hundreds of failed names);
     // (b) it is printed AFTER spark.stop(), when no executor or listener
     // thread can write stderr anymore; (c) stderr is flushed first.
     // the queries flagged load_suspect or spread_suspect, by name
     val suspectJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shortNote = "queries (when present) is the cold per-query map at " +
-      "ms precision; suspect lists the load_suspect/spread_suspect " +
-      "queries; queries_warm, per-query warm passes/medians/load " +
-      "stamps/reruns, cascade pins and the methodology note are in " +
+    val shortNote = "suspect lists the load_suspect/spread_suspect " +
+      "queries; the per-query cold and warm passes, medians, load " +
+      "stamps and reruns, cascade pins and the methodology note are in " +
       "bench_detail"
     val line = stdoutLine(Seq(
       "metric" -> "\"total\"", "value" -> ms3(total), "unit" -> "\"sec\"",
@@ -450,7 +443,7 @@ object Bench {
       "load_max" -> ms3(loadMax), "load_gate" -> maxLoad.toString,
       "load_contaminated" -> loadContaminated.toString,
       "sf" -> s""""$sfDir"""", "bench_detail" -> s""""$detailPath"""",
-      "note" -> s""""$shortNote""""), results.map { case (k, v) => k -> v._1 })
+      "note" -> s""""$shortNote""""))
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     System.err.flush()

@@ -76,29 +76,16 @@ object Tables {
     }
   }
 
-  /** Chunk size of a torrent broadcast (`spark.broadcast.blockSize`),
-    * 256 KB against Spark's 4 MB default. Every Spark job broadcasts its
-    * task binary, and the first chunk is allocated whole however small
-    * the binary: a few KB for a micro-batch stage, so at the default
-    * each job paid a 4 MB array, on a heap of 1 MB G1 regions a
-    * humongous object of 5 regions. A large broadcast (a join's build
-    * side) is cut into more, smaller chunks. The setting is static
-    * Spark conf, read once when the context starts, so it is set here,
-    * at build time. */
-  private val BroadcastBlock = "256k"
-
   /** The one local session every entry point builds (Bench, Verify,
     * the tools, the test suite): `local[cpus]` with `cpus` shuffle
-    * partitions, AQE on, the UI off, [[BroadcastBlock]] broadcast
-    * chunks and the [[GraftExtensions]] function injection, then
-    * [[tune]] for the per-session settings. */
+    * partitions, AQE on, the UI off and the [[GraftExtensions]]
+    * function injection, then [[tune]] for the per-session settings. */
   def localSession(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.broadcast.blockSize", BroadcastBlock)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft.runner
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.bronze.BronzeExtractors
 import graft.metrics.Tracing.span
 import graft.model.{AccountsConfig, NearModel}
@@ -188,9 +189,13 @@ object BatchRunner {
     * execution runs as a job of its own. Called on a LAZY checkpoint,
     * this job also materializes the checkpoint, so every later consumer
     * of the batch reads the materialized rows. `key` must be a long
-    * column; a null key counts as a row but bounds nothing. */
+    * column, since the fold reads raw rows; a null key counts as a row
+    * but bounds nothing. */
   def keyRange(batch: DataFrame, key: String): Option[(Long, Long, Long)] = {
-    val parts = batch.select(col(key)).queryExecution.toRdd.mapPartitions {
+    val keys = batch.select(col(key))
+    val keyType = keys.schema.head.dataType
+    require(keyType == LongType, s"keyRange key $key is $keyType, not a long")
+    val parts = keys.queryExecution.toRdd.mapPartitions {
       rows =>
         var (lo, hi, n, keyed) = (Long.MaxValue, Long.MinValue, 0L, 0L)
         rows.foreach { r =>
